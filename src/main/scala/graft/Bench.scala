@@ -209,7 +209,7 @@ object Bench {
       name -> Timing(wall, err, ext, streamExec, iow)
     }.toMap
 
-  /** Drop EVERYTHING the block manager holds: the shared op caches,
+  /** Drop EVERYTHING the block manager holds: the shared builds,
     * every cached Dataset, and every lingering persisted RDD —
     * including the localCheckpoint RDDs that every build-once operator
     * (dedup, IVF, graph, MR read-back) creates per invocation. Those
@@ -221,9 +221,7 @@ object Bench {
     * recorded for a probe whose honest warm cost is ~2.6 s). Blocking
     * unpersist, so no removal I/O leaks into the next timed section. */
   def freeBlocks(spark: SparkSession): Unit = {
-    graft.ops.DedupOps.evictClusterCache() // before pairs: labels build on them
-    graft.ops.GraphOps.evictPairCache()
-    graft.ops.SimilarityOps.evictIvfCache()
+    graft.ops.SharedBuild.releaseBlocks()
     try spark.sharedState.cacheManager.clearCache() catch { case _: Throwable => () }
     spark.sparkContext.getPersistentRDDs.values.foreach { r =>
       try r.unpersist(true) catch { case _: Throwable => () }
@@ -675,11 +673,11 @@ object Bench {
     // parse always sees it whole (see compactLine scaladoc).
     println(compactLine(results, errors.size, wallSec, ratio, sfDir,
       extCpuCores = extCpuCores, contention = contention))
-    // bucketed-layout staging is deliberately NOT in freeBlocks (the
-    // layout is a table property; evicting between passes would bill a
-    // full re-stage to join_bucketed's pass-2 time) — but the session
-    // is done now: drop the graft_bkt_* catalog tables + their files
-    graft.ops.ScaleOps.evictBucketedStage()
+    // staged layouts are deliberately NOT in freeBlocks (a layout is
+    // a table property; releasing it between passes would bill a full
+    // re-stage to join_bucketed's pass-2 time) — but the session is
+    // done now: drop the graft_bkt_* catalog tables + every staged file
+    graft.ops.SharedBuild.releaseAll()
     spark.stop()
     graft.ops.OpsUtil.deleteRecursively(warehouseDir)
     // a crashing query must fail the bench loudly, not vanish into a

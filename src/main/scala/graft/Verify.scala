@@ -86,10 +86,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v.replace("__SF_DIR__", sfDir))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // drop the graft_bkt_* catalog tables join_bucketed staged (the
-    // Bench-end cleanup; the warehouse dir removal below would leave
-    // dangling catalog entries on any shared-session reuse)
-    graft.ops.ScaleOps.evictBucketedStage()
+    // release every shared build, including the graft_bkt_* catalog
+    // tables join_bucketed staged (the Bench-end cleanup; the warehouse
+    // dir removal below would leave dangling catalog entries on any
+    // shared-session reuse)
+    graft.ops.SharedBuild.releaseAll()
     spark.stop()
     graft.ops.OpsUtil.deleteRecursively(warehouseDir)
   }

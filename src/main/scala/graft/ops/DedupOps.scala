@@ -417,21 +417,18 @@ object DedupOps {
     (labels, iter)
   }
 
-  /** Session cache of the CC label table (doc_id, cluster_id — every
+  /** Session entry of the CC label table (doc_id, cluster_id — every
     * document, no-edge docs labelled with themselves): the cluster
     * assignment is a build-once artifact probed by several queries
     * ([[dedupClusters]], [[clusterSizes]]), exactly like the near-dup
-    * pair graph in [[graft.ops.GraphOps.cachedPairs]] — same keying,
-    * same blocking-eviction hook. The pair build itself routes
-    * through GraphOps' shared pair cache, so a session that runs the
+    * pair graph in [[graft.ops.GraphOps.cachedPairs]] — both live in
+    * the [[SharedBuild]] registry. The pair build itself routes
+    * through GraphOps' shared pair entry, so a session that runs the
     * graph queries AND the cluster queries builds the minhash
     * pipeline once, the CC fixpoint once, and every later probe is a
     * re-aggregation of the persisted |corpus|-row label table. */
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
   private[ops] def cachedClusterLabels(spark: SparkSession, d: String): DataFrame =
-    clusterCache.getOrElseUpdate((System.identityHashCode(spark), d), {
+    SharedBuild.frame(spark, "clusters", d) {
       val (labels, _) = connectedComponents(GraphOps.cachedPairs(spark, d))
       // stitch the untouched majority back in: no-edge docs keep
       // themselves as cluster id
@@ -440,16 +437,7 @@ object DedupOps {
         .select(col("doc_id"),
           coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
         .persist()
-    })
-
-  /** Unpersist every cached label table (all sessions). BLOCKING for
-    * the same reason as [[GraphOps.evictPairCache]]: the bench evicts
-    * between timed passes, and a lazy unpersist would bill the
-    * removal I/O to whatever query runs next. */
-  def evictClusterCache(): Unit = {
-    clusterCache.values.foreach(df => try df.unpersist(true) catch { case _: Throwable => () })
-    clusterCache.clear()
-  }
+    }
 
   /** Near-duplicate clustering: connected components over the MinHash
     * pair graph ([[connectedComponents]] — pointer-jumping min-label

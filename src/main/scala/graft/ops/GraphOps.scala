@@ -49,28 +49,11 @@ object GraphOps {
   // The near-dup pair graph is a build-once artifact: a pipeline runs
   // the minhash dedup once and then probes the graph many times
   // (ranking, density audits). One persisted pair table per
-  // (session, dir) — the [[SimilarityOps]] IVF centroid-cache
-  // pattern, same keying, same eviction hook. `dedup_minhash` itself
-  // stays a fresh pipeline (it IS the build).
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
+  // (session, dir) in the [[SharedBuild]] registry. `dedup_minhash`
+  // itself stays a fresh pipeline (it IS the build).
   private[ops] def cachedPairs(spark: SparkSession, d: String): DataFrame =
-    pairCache.getOrElseUpdate((System.identityHashCode(spark), d),
+    SharedBuild.frame(spark, "pairs", d)(
       DedupOps.dedupMinhash(spark, d).select(col("d1"), col("d2")).persist())
-
-  /** Unpersist every cached pair graph (all sessions). BLOCKING: the
-    * bench evicts between timed passes, and a lazy unpersist leaves
-    * the blocks in the block manager to be dropped "eventually" —
-    * i.e. during the next timed pass, charging the removal I/O to
-    * whatever query happens to be running (the r8 warm-probe
-    * pathology's first ingredient). */
-  def evictPairCache(): Unit = {
-    pairCache.values.foreach(df => try df.unpersist(true) catch { case _: Throwable => () })
-    pairCache.clear()
-    lshPairCache.values.foreach(df => try df.unpersist(true) catch { case _: Throwable => () })
-    lshPairCache.clear()
-  }
 
   // The embedding-LSH similarity graph is the same build-once shape
   // on the other substrate: linkPred, labelProp, and kcore all probe
@@ -78,23 +61,19 @@ object GraphOps {
   // bucket-join + verify pipeline per query (the r12
   // dedup_clusters/cluster_sizes redundancy, third instance).
   // `dedup_embedding_lsh` itself stays a fresh pipeline (it IS the
-  // build). Evicted by [[evictPairCache]] — one hook for every pair
-  // graph, so the bench's between-pass sweep and the specs keep a
-  // single call site.
-  private val lshPairCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
+  // build).
   private[ops] def cachedLshPairs(spark: SparkSession, d: String): DataFrame =
-    lshPairCache.getOrElseUpdate((System.identityHashCode(spark), d),
+    SharedBuild.frame(spark, "lshPairs", d)(
       SimilarityOps.dedupEmbeddingLsh(spark, d)
         .select(col("v1").as("d1"), col("v2").as("d2")).persist())
 
-  /** Test/bench hook: live LSH-graph cache entries. */
-  private[graft] def lshPairCacheSnapshot: Seq[DataFrame] = lshPairCache.values.toSeq
+  /** Test/bench view: the live LSH-graph tables. */
+  private[graft] def lshPairCacheSnapshot: Seq[DataFrame] = SharedBuild.live[DataFrame]("lshPairs")
 
-  /** Test/bench hook: live cache entries (the [[SimilarityOps.ivfCacheSnapshot]]
-    * pattern) — warmth assertions must target these DataFrames. */
-  private[graft] def pairCacheSnapshot: Seq[DataFrame] = pairCache.values.toSeq
+  /** Test/bench view: the live pair tables (the
+    * [[SimilarityOps.ivfCacheSnapshot]] pattern) — warmth assertions
+    * must target these DataFrames. */
+  private[graft] def pairCacheSnapshot: Seq[DataFrame] = SharedBuild.live[DataFrame]("pairs")
 
   def pagerank(spark: SparkSession, d: String): DataFrame =
     pagerankOnPairs(cachedPairs(spark, d))

@@ -37,61 +37,32 @@ object ScaleOps {
       rightTable: String, key: String): DataFrame =
     spark.table(leftTable).join(spark.table(rightTable), key)
 
-  // One bucketed (orders, lineitem) table pair per (session, sf-dir) —
-  // the layout is a property of the table (the PartitionedTables /
-  // IVF-cache keying); the declared query pays the exchange-free join,
-  // which is the point. ConcurrentHashMap.computeIfAbsent (not
-  // TrieMap.getOrElseUpdate): the staging block writes catalog tables,
-  // so two racing first readers must not both run it — the loser's
-  // table pair would be orphaned in the warehouse with nothing
-  // pointing at it. computeIfAbsent runs the mapping function at most
-  // once per key.
-  // value retains the staging session: eviction must DROP the managed
-  // tables through it, and the key holds only the session's hash
-  private val bucketedStage =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), (SparkSession, String, String)]
-
   // table-name uniquifier: a fresh suffix per staged entry, so two sf
   // dirs with colliding String.hashCode (or a second session staging
-  // the same dir) can never overwrite a catalog table another cache
-  // entry still points at
+  // the same dir) can never overwrite a catalog table another entry
+  // still points at
   private val stageSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def stagedOrderTables(spark: SparkSession, d: String): (String, String) = {
-    val (_, ot, lt) =
-      bucketedStage.computeIfAbsent((System.identityHashCode(spark), d), _ => {
-        val tag = stageSeq.incrementAndGet()
-        val ot = s"graft_bkt_orders_$tag"
-        val lt = s"graft_bkt_lineitem_$tag"
-        writeBucketed(graft.Tables.orders(spark, d), ot, "o_orderkey", 8)
-        writeBucketed(graft.Tables.lineitem(spark, d), lt, "l_orderkey", 8)
-        (spark, ot, lt)
-      })
-    (ot, lt)
-  }
-
-  /** Drop every staged bucketed table pair and forget the cache — the
-    * [[GraphOps.evictPairCache]]-shaped eviction hook. Without it a
-    * long-lived session accumulates two catalog tables (plus their
-    * managed-table files) per (session, sf dir) ever staged, with
-    * nothing pointing at the old ones after a dir switch. DROP on a
-    * managed table also deletes its warehouse files, so eviction
-    * leaves neither catalog litter nor orphaned directories. */
-  def evictBucketedStage(): Unit = {
-    import scala.jdk.CollectionConverters._
-    bucketedStage.values.asScala.foreach { case (s, ot, lt) =>
-      Seq(ot, lt).foreach { t =>
-        try s.sql(s"DROP TABLE IF EXISTS $t") catch { case _: Throwable => () }
-      }
+  // One bucketed (orders, lineitem) table pair per (session, sf-dir),
+  // staged in the [[SharedBuild]] registry — the layout is a property
+  // of the table (the PartitionedTables keying); the declared query
+  // pays the exchange-free join, which is the point. The registry
+  // stages each key once, so racing first readers never orphan a
+  // table pair in the warehouse. Release DROPs both managed tables,
+  // which also deletes their warehouse files, so a long-lived session
+  // is left with neither catalog litter nor orphaned directories.
+  private def stagedOrderTables(spark: SparkSession, d: String): (String, String) =
+    SharedBuild.staged(spark, "bucketed", d) {
+      val tag = stageSeq.incrementAndGet()
+      val ot = s"graft_bkt_orders_$tag"
+      val lt = s"graft_bkt_lineitem_$tag"
+      writeBucketed(graft.Tables.orders(spark, d), ot, "o_orderkey", 8)
+      writeBucketed(graft.Tables.lineitem(spark, d), lt, "l_orderkey", 8)
+      (ot, lt)
+    } { case (ot, lt) =>
+      if (!spark.sparkContext.isStopped)
+        Seq(ot, lt).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
-    bucketedStage.clear()
-  }
-
-  /** Test/bench hook: the staged table names still live in the cache. */
-  private[graft] def bucketedStageSnapshot: Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    bucketedStage.values.asScala.toSeq.flatMap { case (_, ot, lt) => Seq(ot, lt) }
-  }
 
   /** Declared-query face of the bucketed layout: orders ⋈ lineitem on
     * the order key over tables bucketed (and sorted) by their join

@@ -416,15 +416,17 @@ object SimilarityOps {
     * ordinary distributed job and the (tiny) result is persisted once
     * and broadcast to every probe. */
   def annIvfCentroids(spark: SparkSession, d: String): DataFrame = {
-    // r17 opt (guide §5, the score_nb/cachedCov precedent): the build
-    // consumes the corpus FIVE times (seed ordering, the k count, and
-    // one assignment per Lloyd round) and each pass re-ran the
-    // scan + cast + norm2 + fan-out pipeline. One lazy checkpoint
-    // materializes the normalized corpus on first use; every later
-    // pass reads the blocks. Blocks are swept with everything else by
-    // the bench's freeBlocks (persistent-RDD unpersist).
-    val e = corpus(spark, d).localCheckpoint(false)
-    val hashed = e.withColumn("hk", xhash60(col("vec_id").cast("string"), 7))
+    // The build consumes the corpus FIVE times (seed ordering, the k
+    // count, and one assignment per Lloyd round), and each pass would
+    // re-run the scan + cast + norm2 pipeline. A persist materializes
+    // the normalized corpus on first use; every later pass reads the
+    // blocks. Not localCheckpoint(false): under AQE that runs the
+    // shuffle-map job when it is called, so construction would no
+    // longer be lazy. The persisted plan carries the seed hash, so no
+    // other query's plain corpus subplan matches it in the cache.
+    val hashed = SharedBuild.frame(spark, "ivf-corpus", d)(
+      corpus(spark, d).withColumn("hk", xhash60(col("vec_id").cast("string"), 7)).persist())
+    val e = hashed.drop("hk")
     val seedW = Window.orderBy(col("hk"), col("vec_id")) // ≤ IvfMaxCells rows
     var cents = hashed.orderBy(col("hk"), col("vec_id")).limit(IvfMaxCells)
       .select((row_number().over(seedW) - 1).as("cell"),
@@ -445,20 +447,14 @@ object SimilarityOps {
     * deterministic quantized build means the DuckDB oracle replays the
     * identical index, so this approximate operator is hash-checked
     * end-to-end. */
-  // One persisted centroid table per (session, sf-dir): repeat annIvf
-  // calls on the same data reuse the SAME k-row cache entry
-  // instead of accumulating a fresh persist per call, and a long-lived
-  // session can drop them all via [[evictIvfCache]]. Keyed by session
-  // identity so a stale DataFrame from a stopped session is never
-  // handed to a new one. The real build-once path still persists the
-  // index to a table ([[annIvfProbe]] + SketchSpec's parquet
-  // round-trip); this cache only serves the self-contained query form.
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
+  // One persisted centroid table per (session, sf-dir) in the
+  // [[SharedBuild]] registry: repeat annIvf calls on the same data reuse
+  // the SAME k-row entry instead of accumulating a fresh persist per
+  // call. The real build-once path still persists the index to a table
+  // ([[annIvfProbe]] + SketchSpec's parquet round-trip); this entry
+  // only serves the self-contained query form.
   private def cachedCentroids(spark: SparkSession, d: String): DataFrame =
-    ivfCache.getOrElseUpdate(
-      (System.identityHashCode(spark), d), annIvfCentroids(spark, d).persist())
+    SharedBuild.frame(spark, "ivf", d)(annIvfCentroids(spark, d).persist())
 
   def annIvf(spark: SparkSession, d: String): DataFrame =
     annIvfProbe(spark, d, cachedCentroids(spark, d))
@@ -468,13 +464,9 @@ object SimilarityOps {
   // fixed-point Gram pass over the corpus feeds all three, and without
   // a shared entry each rebuilt it per query (the r12
   // dedup_clusters/cluster_sizes redundancy, fourth instance). dims²
-  // ≤ 4096 rows persisted; evicted by [[evictIvfCache]] — one hook for
-  // the bench's between-pass sweep.
-  private val covCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
+  // ≤ 4096 rows.
   private def cachedCov(spark: SparkSession, d: String): DataFrame =
-    covCache.getOrElseUpdate((System.identityHashCode(spark), d), {
+    SharedBuild.frame(spark, "cov", d) {
       // localCheckpoint, NOT bare persist: consumers reference cov up
       // to ~12 times inside one deeply nested plan (v3(v2(v1(cov))),
       // cov2(cov, u(v3...), lam1(...)), …), and with full lineage each
@@ -487,26 +479,15 @@ object SimilarityOps {
       val cov = covOf(spark, d).localCheckpoint(false)
       cov.count()
       cov
-    })
+    }
 
-  /** Unpersist every cached IVF centroid table and covariance matrix
-    * (all sessions). BLOCKING, for the same reason as
-    * [[GraphOps.evictPairCache]]: lazy unpersist defers block removal
-    * into the next timed pass. */
-  def evictIvfCache(): Unit = {
-    ivfCache.values.foreach(df => try df.unpersist(true) catch { case _: Throwable => () })
-    ivfCache.clear()
-    covCache.values.foreach(df => try df.unpersist(true) catch { case _: Throwable => () })
-    covCache.clear()
-  }
-
-  /** Test hook: the cache's live entries. Assertions about caching
-    * behavior must target THESE DataFrames (count, identity,
+  /** Test/bench view: the live centroid tables. Assertions about
+    * caching behavior must target THESE DataFrames (count, identity,
     * storageLevel), never the context-global persistent-RDD registry —
     * that registry is shared by every suite on the session and mutates
     * asynchronously (other ops' caches, the ContextCleaner), which
     * made the eviction test flake in full-suite runs. */
-  private[graft] def ivfCacheSnapshot: Seq[DataFrame] = ivfCache.values.toSeq
+  private[graft] def ivfCacheSnapshot: Seq[DataFrame] = SharedBuild.live[DataFrame]("ivf")
 
   /** Probe against an EXISTING index — the build-once/probe-many path:
     * `centroids` may be the freshly built [[annIvfCentroids]] or the

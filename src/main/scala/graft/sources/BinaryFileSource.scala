@@ -35,12 +35,10 @@ object BinaryFileSource {
 
   private val MaxDocs = 60
 
-  /** (session, sfDir) → staged landing dir; stage once per pair. */
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]
-
+  /** The landing dir, staged once per (session, sfDir) in
+    * [[graft.ops.SharedBuild]]. */
   private def stage(spark: SparkSession, d: String): String =
-    staged.computeIfAbsent((System.identityHashCode(spark), d), _ => {
+    graft.ops.SharedBuild.staged(spark, "binary", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft-src-binary")
       graft.Tables.documents(spark, d)
         .select(col("doc_id"), col("text"))
@@ -52,7 +50,7 @@ object BinaryFileSource {
             r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
         }
       dir.toString
-    })
+    }(graft.ops.OpsUtil.deleteRecursively)
 
   /** Per-file ingest manifest off the binaryFile read: id parsed from
     * the path, byte length from the file status (no content read
@@ -72,14 +70,4 @@ object BinaryFileSource {
     s"""SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
        |  md5(text) AS content_md5
        |FROM documents WHERE doc_id < $MaxDocs ORDER BY doc_id""".stripMargin
-
-  /** Delete all staged landing dirs (test/bench hygiene). */
-  def evictStaged(): Unit = {
-    staged.values().forEach(graft.ops.OpsUtil.deleteRecursively)
-    staged.clear()
-  }
-
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => evictStaged()))
-  }
 }

@@ -59,13 +59,10 @@ import org.apache.spark.sql.functions._
   */
 object JdbcSource {
 
-  /** (session, sfDir) → (jdbc url, max o_orderkey). One staged DB per
-    * pair; computeIfAbsent so racing first readers stage exactly once. */
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), (String, Long)]
-
+  /** (jdbc url, max o_orderkey) of the DB staged once per
+    * (session, sfDir) in [[graft.ops.SharedBuild]]. */
   private def stage(spark: SparkSession, d: String): (String, Long) =
-    staged.computeIfAbsent((System.identityHashCode(spark), d), _ => {
+    graft.ops.SharedBuild.staged(spark, "jdbc", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft-src-jdbc").toString
       // derby.log (and any derby scratch) goes to the temp dir, not
       // the checkout; must be set before the driver first loads.
@@ -79,7 +76,14 @@ object JdbcSource {
       // parquet-footer max (metadata-only aggregate) for the read bounds
       val maxKey = orders.agg(max("o_orderkey")).head.getLong(0)
       (url, maxKey)
-    })
+    } { case (url, _) =>
+      // shut the embedded engine down cleanly before deleting its files
+      try {
+        java.sql.DriverManager.getConnection(url.replace(";create=true", ";shutdown=true"))
+      } catch { case _: java.sql.SQLException => () } // XJ015/08006 = clean shutdown
+      graft.ops.OpsUtil.deleteRecursively(
+        url.stripPrefix("jdbc:derby:").takeWhile(_ != ';').stripSuffix("/db"))
+    }
 
   /** The staged DB's (url, max key) — exposed for JdbcSourceSpec's
     * network-path dress rehearsal (a recording proxy driver re-reads
@@ -133,21 +137,4 @@ object JdbcSource {
       |  CAST(MAX(epoch_us(o_orderdate)) AS BIGINT) AS max_date_us
       |FROM orders GROUP BY o_orderstatus, o_orderpriority
       |ORDER BY o_orderstatus, o_orderpriority""".stripMargin
-
-  /** Drop every staged DB (all sessions) and delete the files. */
-  def evictStaged(): Unit = {
-    staged.values().forEach { case (url, _) =>
-      // shut the embedded engine down cleanly before deleting its files
-      try {
-        java.sql.DriverManager.getConnection(url.replace(";create=true", ";shutdown=true"))
-      } catch { case _: java.sql.SQLException => () } // XJ015/08006 = clean shutdown
-      graft.ops.OpsUtil.deleteRecursively(
-        url.stripPrefix("jdbc:derby:").takeWhile(_ != ';').stripSuffix("/db"))
-    }
-    staged.clear()
-  }
-
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => evictStaged()))
-  }
 }

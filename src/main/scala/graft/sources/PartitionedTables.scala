@@ -23,17 +23,12 @@ import graft.Tables
   */
 object PartitionedTables {
 
-  // computeIfAbsent (not TrieMap.getOrElseUpdate): staging writes a
-  // full table copy, and two racing first readers must not both run it
-  // — the loser's directory would sit orphaned until JVM exit
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]
-
   /** The events table re-laid-out as date partitions; returns a
     * DataFrame over the partitioned directory (partition column
-    * `event_date` is inferred as DATE and prunes on literal ranges). */
+    * `event_date` is inferred as DATE and prunes on literal ranges).
+    * Staged once per (session, sf-dir) in [[graft.ops.SharedBuild]]. */
   def eventsByDay(spark: SparkSession, d: String): DataFrame = {
-    val dir = staged.computeIfAbsent((System.identityHashCode(spark), d), _ => {
+    val dir = graft.ops.SharedBuild.staged(spark, "events-byday", d) {
       val out = java.nio.file.Files
         .createTempDirectory("graft-events-byday").toString
       Tables.events(spark, d)
@@ -41,19 +36,7 @@ object PartitionedTables {
         .repartition(col("event_date"))
         .write.mode("overwrite").partitionBy("event_date").parquet(out)
       out
-    })
+    }(graft.ops.OpsUtil.deleteRecursively)
     spark.read.parquet(dir)
-  }
-
-  /** Drop every staged layout (all sessions) and delete the files. */
-  def evictStaged(): Unit = {
-    staged.values().forEach(d => graft.ops.OpsUtil.deleteRecursively(d))
-    staged.clear()
-  }
-
-  // staged layouts are full table copies — reap them at JVM exit so
-  // driver rounds don't accumulate one per round in /tmp
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => evictStaged()))
   }
 }

@@ -39,15 +39,11 @@ object SourceQueries {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  // one staged copy per (session, sf-dir, format); computeIfAbsent so
-  // two racing first readers can't both stage (the loser's full table
-  // copy would sit orphaned in /tmp until JVM exit)
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), String]
-
+  // one staged copy per (session, sf-dir, format) in the
+  // [[graft.ops.SharedBuild]] registry
   private def stage(spark: SparkSession, d: String, fmt: String)(
       write: (DataFrame, String) => Unit): String =
-    staged.computeIfAbsent((System.identityHashCode(spark), d, fmt), _ => {
+    graft.ops.SharedBuild.staged(spark, s"src-$fmt", d) {
       val out = java.nio.file.Files.createTempDirectory(s"graft-src-$fmt").toString
       // wall-time per staging, logged: the r13 bench saw a one-off
       // 726 s src_tar entry that could not be attributed to staging
@@ -57,7 +53,7 @@ object SourceQueries {
       System.err.println(
         f"[graft-stage] fmt=$fmt sf=$d wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
       out
-    })
+    }(graft.ops.OpsUtil.deleteRecursively)
 
   /** Commit protocol for executor-side staging writes (r15 advice
     * item 1): tasks that stage archives by side effect write to a
@@ -935,14 +931,4 @@ object SourceQueries {
       |  CAST(SUM(n_chars) AS BIGINT) AS sum_n_chars,
       |  CAST(SUM(length(text)) AS BIGINT) AS sum_text_chars
       |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin
-
-  /** Drop every staged copy (all sessions) and delete the files. */
-  def evictStaged(): Unit = {
-    staged.values().forEach(d => graft.ops.OpsUtil.deleteRecursively(d))
-    staged.clear()
-  }
-
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => evictStaged()))
-  }
 }

@@ -46,9 +46,6 @@ import org.apache.spark.sql.functions._
   * v0/v1 reads still see them. */
 object TxLogSource {
 
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]
-
   private def jesc(s: String): String =
     s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
 
@@ -114,7 +111,7 @@ object TxLogSource {
 
   /** Stage the 3-version history once per (session, sf dir). */
   private def stageTable(spark: SparkSession, d: String): String =
-    staged.computeIfAbsent((System.identityHashCode(spark), d), _ => {
+    graft.ops.SharedBuild.staged(spark, "txlog", d) {
       val table = java.nio.file.Files.createTempDirectory("graft-txlog").toString
       val logDir = java.nio.file.Files.createDirectory(
         java.nio.file.Paths.get(table, "_txlog"))
@@ -138,7 +135,7 @@ object TxLogSource {
         table, "v2")
       writeCommit(logDir, 2L, remove(g0a ++ g0b) ++ add(g2))
       table
-    })
+    }(graft.ops.OpsUtil.deleteRecursively)
 
   /** Replay the log to version `v` and return the live file set —
     * O(commits) driver work on the tiny log, never a data listing.
@@ -383,9 +380,6 @@ object TxLogSource {
           tail.size, usedCheckpoint = true)
     }
 
-  private val stagedCk =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]
-
   /** Stage a 5-commit history with a checkpoint at v2 — long enough
     * that the O(tail) claim is observable (v4 resolves via checkpoint
     * + 2 JSON commits, never the 5-commit full replay):
@@ -393,11 +387,11 @@ object TxLogSource {
     *   v3 cow-delete %10==1 (remove v0's files, add rewrite)
     *   v4 cow-delete %10==5 (remove v1's files, add rewrite). */
   private def stageCkTable(spark: SparkSession, d: String): String =
-    stagedCk.computeIfAbsent((System.identityHashCode(spark), d), _ => {
+    graft.ops.SharedBuild.staged(spark, "txlog-ck", d) {
       val table = java.nio.file.Files.createTempDirectory("graft-txlog-ck-tbl").toString
       buildCkHistory(spark, d, table)
       table
-    })
+    }(graft.ops.OpsUtil.deleteRecursively)
 
   private def buildCkHistory(spark: SparkSession, d: String,
       table: String): Unit = {
@@ -477,20 +471,17 @@ object TxLogSource {
     deletable.size
   }
 
-  private val stagedVac =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]
-
   /** Same 5-commit checkpointed history as [[stageCkTable]], but on a
     * PRIVATE copy (vacuum mutates the table) and vacuumed to
     * horizon 4 right after staging. */
   private def stageVacTable(spark: SparkSession, d: String): String =
-    stagedVac.computeIfAbsent((System.identityHashCode(spark), d), _ => {
+    graft.ops.SharedBuild.staged(spark, "txlog-vac", d) {
       val table = java.nio.file.Files.createTempDirectory("graft-txlog-vac-tbl").toString
       buildCkHistory(spark, d, table)
       val n = vacuum(table, 4L)
       require(n > 0, "txlog: vacuum deleted nothing — staging broke")
       table
-    })
+    }(graft.ops.OpsUtil.deleteRecursively)
 
   /** Declared query `src_txlog_vacuum`: the post-vacuum contract,
     * both halves asserted — the newest snapshot (v4) is byte-identical
@@ -538,18 +529,4 @@ object TxLogSource {
       |   OR (v.version = 3 AND doc_id % 10 <> 1)
       |   OR (v.version = 4 AND doc_id % 10 NOT IN (1, 5))
       |GROUP BY v.version ORDER BY v.version""".stripMargin
-
-  /** Drop staged tables (mirrors [[SourceQueries.evictStaged]]). */
-  def evictStaged(): Unit = {
-    staged.values().forEach(t => graft.ops.OpsUtil.deleteRecursively(t))
-    staged.clear()
-    stagedCk.values().forEach(t => graft.ops.OpsUtil.deleteRecursively(t))
-    stagedCk.clear()
-    stagedVac.values().forEach(t => graft.ops.OpsUtil.deleteRecursively(t))
-    stagedVac.clear()
-  }
-
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => evictStaged()))
-  }
 }

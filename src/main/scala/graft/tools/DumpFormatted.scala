@@ -47,7 +47,7 @@ object DumpFormatted {
       Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), plan)
       println(s"wrote ${name}_$suffix.txt (${plan.length} chars)")
     }
-    graft.ops.ScaleOps.evictBucketedStage()
+    graft.ops.SharedBuild.releaseAll()
     spark.stop()
     graft.ops.OpsUtil.deleteRecursively(warehouseDir)
   }

@@ -44,7 +44,7 @@ object DumpPlans {
     }
     Files.writeString(Paths.get(outFile), sb.toString)
     println(s"wrote $outFile: ${SparkEntry.queries.size} sections, $failedCount failed")
-    graft.ops.ScaleOps.evictBucketedStage()
+    graft.ops.SharedBuild.releaseAll()
     spark.stop()
     graft.ops.OpsUtil.deleteRecursively(warehouseDir)
     // a doc with FAILED sections is stale evidence, not evidence — and

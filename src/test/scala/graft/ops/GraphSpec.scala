@@ -132,7 +132,7 @@ class GraphSpec extends AnyFunSuite {
     // cache's actual contract: one shared persisted instance per
     // (session, dir), rebuilt fresh after eviction, identical results.
     val sf = "/root/testdata/sf0.001"
-    GraphOps.evictPairCache()
+    SharedBuild.releaseBlocks()
     val first = GraphOps.pagerank(spark, sf).collect().toSeq
     val p1 = GraphOps.cachedPairs(spark, sf)
     assert(p1.storageLevel.useMemory, "pair table must be persisted")
@@ -141,19 +141,19 @@ class GraphSpec extends AnyFunSuite {
     val second = GraphOps.triangles(spark, sf).collect().toSeq
     assert(GraphOps.pagerank(spark, sf).collect().toSeq === first,
       "repeat rank must return identical results")
-    GraphOps.evictPairCache()
+    SharedBuild.releaseBlocks()
     val p2 = GraphOps.cachedPairs(spark, sf)
     assert(!(p2 eq p1), "eviction must drop the cached instance")
     assert(GraphOps.triangles(spark, sf).collect().toSeq === second,
       "post-evict probes rebuild and still agree")
-    GraphOps.evictPairCache()
+    SharedBuild.releaseBlocks()
   }
 
   test("LSH pair cache: linkpred, labelprop, and kcore share one build, evictable, stable") {
     // third instance of the build-once contract: the embedding-LSH
     // graph is probed by three declared queries and must be built once
     val sf = "/root/testdata/sf0.001"
-    GraphOps.evictPairCache()
+    SharedBuild.releaseBlocks()
     val pred = GraphOps.linkPred(spark, sf).collect().toSeq
     val l1 = GraphOps.cachedLshPairs(spark, sf)
     assert(l1.storageLevel.useMemory, "LSH pair table must be persisted")
@@ -161,13 +161,13 @@ class GraphSpec extends AnyFunSuite {
       "linkpred, labelprop, kcore must share ONE cached LSH pair table per dir")
     val cores = GraphOps.kcore(spark, sf).collect().toSeq
     val labels = GraphOps.labelProp(spark, sf).collect().toSeq
-    GraphOps.evictPairCache()
+    SharedBuild.releaseBlocks()
     assert(!(GraphOps.cachedLshPairs(spark, sf) eq l1),
       "eviction must drop the cached instance")
     assert(GraphOps.linkPred(spark, sf).collect().toSeq === pred)
     assert(GraphOps.kcore(spark, sf).collect().toSeq === cores)
     assert(GraphOps.labelProp(spark, sf).collect().toSeq === labels)
-    GraphOps.evictPairCache()
+    SharedBuild.releaseBlocks()
   }
 
   test("cluster-label cache: shared across the cluster queries, evictable, stable") {
@@ -176,8 +176,7 @@ class GraphSpec extends AnyFunSuite {
     // (session, dir) — the r12 verdict's double-rebuild fix — and
     // eviction must force a fresh, identical rebuild.
     val sf = "/root/testdata/sf0.001"
-    DedupOps.evictClusterCache()
-    GraphOps.evictPairCache()
+    SharedBuild.releaseBlocks()
     val clusters = DedupOps.dedupClusters(spark, sf).collect().toSeq
     val l1 = DedupOps.cachedClusterLabels(spark, sf)
     assert(l1.storageLevel.useMemory, "label table must be persisted")
@@ -187,14 +186,12 @@ class GraphSpec extends AnyFunSuite {
     // cross-check: histogram mass equals the corpus size
     assert(sizes.map(r => r.getLong(2)).sum === clusters.size.toLong,
       "cluster-size histogram must cover every document exactly once")
-    DedupOps.evictClusterCache()
-    GraphOps.evictPairCache()
+    SharedBuild.releaseBlocks()
     val l2 = DedupOps.cachedClusterLabels(spark, sf)
     assert(!(l2 eq l1), "eviction must drop the cached instance")
     assert(DedupOps.dedupClusters(spark, sf).collect().toSeq === clusters,
       "post-evict probes rebuild and still agree")
-    DedupOps.evictClusterCache()
-    GraphOps.evictPairCache()
+    SharedBuild.releaseBlocks()
   }
 
   test("20-round pagerank keeps a bounded plan via periodic lineage cuts") {
@@ -228,14 +225,14 @@ class GraphSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     import graft.tools.PlanFingerprint
     for (name <- Seq("graph_pagerank", "graph_triangles")) {
-      GraphOps.evictPairCache()
+      SharedBuild.releaseBlocks()
       val cold = PlanFingerprint.of(graft.SparkEntry.queries(name)(spark, sf))
       GraphOps.cachedPairs(spark, sf).count() // materialize → real stats
       val warm = PlanFingerprint.of(graft.SparkEntry.queries(name)(spark, sf))
       assert(cold === warm,
         s"$name plan is cache-state-dependent:\n  cold: [$cold]\n  warm: [$warm]")
     }
-    GraphOps.evictPairCache()
+    SharedBuild.releaseBlocks()
   }
 
   test("past the vertex gate pagerank flips to the pinned shuffle-reuse plan, bit-identically") {

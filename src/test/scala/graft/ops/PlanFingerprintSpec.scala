@@ -24,8 +24,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
     // (e.g. GraphSpec ran earlier in this JVM) exposes tiny
     // InMemoryRelation stats and flips SortMergeJoin → broadcast,
     // making the fingerprint depend on suite order
-    GraphOps.evictPairCache()
-    SimilarityOps.evictIvfCache()
+    SharedBuild.releaseBlocks()
     val actual = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> PlanFingerprint.of(fn(spark, sf))
     }

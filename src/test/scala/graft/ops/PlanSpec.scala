@@ -82,7 +82,7 @@ class PlanSpec extends AnyFunSuite {
         s"expected 7 pruned day-partitions, listed ${selected.length}")
       val total = scan.relation.location.listFiles(Nil, Nil)
       assert(total.length === 30, s"staged layout should hold 30 days, got ${total.length}")
-    } finally graft.sources.PartitionedTables.evictStaged() // even on a red run
+    } finally SharedBuild.releaseAll() // even on a red run
   }
 
   test("evt_dpp prunes partitions at RUNTIME: dynamicpruning filter, 3 of 30 dirs read") {
@@ -116,7 +116,7 @@ class PlanSpec extends AnyFunSuite {
       val partsRead = execScan.head.metrics.get("numPartitions").map(_.value)
       assert(partsRead.contains(3L),
         s"DPP should read exactly 3 day-partitions, metrics said $partsRead")
-    } finally graft.sources.PartitionedTables.evictStaged()
+    } finally SharedBuild.releaseAll()
   }
 
   test("grep's case-insensitive contains stays post-scan (lower() is not pushable)") {

@@ -29,13 +29,16 @@ class ScaleSpec extends AnyFunSuite {
       s"expected exchange-free bucketed join, found ${shuffles.size} shuffles:\n$finalPlan")
   }
 
+  private def bucketedStage: Seq[String] =
+    SharedBuild.live[(String, String)]("bucketed").flatMap { case (o, l) => Seq(o, l) }
+
   test("evicting the bucketed stage drops its catalog tables and files; re-stage works") {
     // the r10 litter item: a long-lived session accumulates two
     // graft_bkt_* tables per (session, dir) staged, with nothing
     // pointing at old ones after a dir switch — eviction must leave
     // the catalog clean AND delete the managed-table directories
     ScaleOps.bucketedOrderStats(spark, sf).count() // stage
-    val staged = ScaleOps.bucketedStageSnapshot
+    val staged = bucketedStage
     assert(staged.nonEmpty, "staging must register its tables in the cache")
     val live = spark.catalog.listTables().collect().map(_.name).toSet
     assert(staged.forall(t => live.contains(t)), s"staged tables $staged not in catalog")
@@ -44,17 +47,17 @@ class ScaleSpec extends AnyFunSuite {
         spark.sql(s"DESCRIBE EXTENDED $t").filter(col("col_name") === "Location")
           .head().getString(1))))
     assert(locations.forall(_.isDirectory))
-    ScaleOps.evictBucketedStage()
+    SharedBuild.releaseAll()
     val after = spark.catalog.listTables().collect().map(_.name).toSet
-    assert(ScaleOps.bucketedStageSnapshot.isEmpty)
+    assert(bucketedStage.isEmpty)
     assert(!after.exists(_.startsWith("graft_bkt_")),
       s"eviction left catalog litter: ${after.filter(_.startsWith("graft_bkt_"))}")
     assert(locations.forall(!_.exists()),
       "DROP on a managed table must delete its warehouse files")
     // the stage rebuilds on next use, with fresh names, same answers
     val again = ScaleOps.bucketedOrderStats(spark, sf).collect()
-    assert(again.nonEmpty && ScaleOps.bucketedStageSnapshot.nonEmpty)
-    assert((ScaleOps.bucketedStageSnapshot.toSet & staged.toSet).isEmpty,
+    assert(again.nonEmpty && bucketedStage.nonEmpty)
+    assert((bucketedStage.toSet & staged.toSet).isEmpty,
       "re-stage must mint fresh table names, never reuse dropped ones")
   }
 

@@ -42,7 +42,7 @@ class SketchSpec extends AnyFunSuite {
     // the global getPersistentRDDs count is shared suite-wide state
     // (GraphOps' pair cache, the async ContextCleaner) and flaked the
     // full-suite run in r6.
-    SimilarityOps.evictIvfCache()
+    SharedBuild.releaseBlocks()
     assert(SimilarityOps.ivfCacheSnapshot.isEmpty, "evict must leave an empty cache")
     val first = SimilarityOps.annIvf(spark, sf).collect().toSeq
     val afterOne = SimilarityOps.ivfCacheSnapshot
@@ -53,13 +53,13 @@ class SketchSpec extends AnyFunSuite {
     assert(second === first, "repeat probe must return identical results")
     assert(afterTwo.size === 1 && (afterTwo.head eq afterOne.head),
       "second call must reuse the same cached centroid table")
-    SimilarityOps.evictIvfCache()
+    SharedBuild.releaseBlocks()
     assert(SimilarityOps.ivfCacheSnapshot.isEmpty, "cache empty after evict")
     assert(afterOne.head.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
-      "evictIvfCache must unpersist the centroid table")
+      "releaseBlocks must unpersist the centroid table")
     // post-evict probes rebuild and still agree
     assert(SimilarityOps.annIvf(spark, sf).collect().toSeq === first)
-    SimilarityOps.evictIvfCache()
+    SharedBuild.releaseBlocks()
   }
 
   test("CMS grid is partition-independent and estimates are one-sided overcounts") {
@@ -225,7 +225,7 @@ class SketchSpec extends AnyFunSuite {
       assert(out(id).getAs[Long]("nn_id") === 100L, s"$id partner")
       assert(out(id).getAs[Double]("nn_cos") > 0.99)
     }
-    SimilarityOps.evictIvfCache() // don't leak the temp-dir index entry
+    SharedBuild.releaseBlocks() // don't leak the temp-dir index entry
   }
 
   test("sim_mmr stops gracefully when the pool runs dry (degenerate tiny table)") {

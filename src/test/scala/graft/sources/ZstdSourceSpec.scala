@@ -52,7 +52,7 @@ class ZstdSourceSpec extends AnyFunSuite {
       .orderBy("lang", "source")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "zstd JSONL round trip must preserve every column of every row")
-    SourceQueries.evictStaged()
+    graft.ops.SharedBuild.releaseAll()
   }
 
   test("src_jsonl_zst_seek: ONE archive fans out to one task per frame and round-trips") {
@@ -67,7 +67,7 @@ class ZstdSourceSpec extends AnyFunSuite {
       .orderBy("lang", "source")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "seekable-zstd round trip must preserve every column of every row")
-    SourceQueries.evictStaged()
+    graft.ops.SharedBuild.releaseAll()
   }
 
   test("seekable frames restore parallelism a plain zstd stream cannot have") {

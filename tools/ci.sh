@@ -25,6 +25,14 @@ print(sum(int(ET.parse(f).getroot().get("tests", 0))
 EOF
 )
 echo "== suite XML test sum: $XMLSUM (archived in target/test-reports-full)"
+# the 10 slowest suites, so a budget overrun shows without a rerun
+echo "== slowest suites (s)"
+python3 - <<'EOF'
+import glob, xml.etree.ElementTree as ET
+suites = [ET.parse(f).getroot() for f in glob.glob("target/test-reports-full/*.xml")]
+for r in sorted(suites, key=lambda r: -float(r.get("time", 0)))[:10]:
+    print(f"{float(r.get('time', 0)):9.1f}  {r.get('name')}")
+EOF
 # The README's recorded state must equal the artifacts it cites: fail
 # the gate when the numbers drift instead of recording them anyway.
 if ! grep -q "${XMLSUM}/${XMLSUM} tests" README.md; then
