@@ -1,6 +1,6 @@
 package graft.mr
 
-import java.math.BigInteger
+import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import org.apache.spark.Partitioner
 
@@ -35,11 +35,20 @@ class Md5LinePartitioner(override val numPartitions: Int) extends Partitioner {
 }
 
 object Md5LinePartitioner {
+  private val md5 = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("MD5"))
+
   /** `BigInteger(1, md5(utf8(key))) mod r` — non-negative by
-    * construction (signum=1), matching Python's int % semantics. */
+    * construction, matching Python's int % semantics. Computed by
+    * folding the big-endian digest bytes: acc < r < 2^31, so
+    * `acc << 8 | byte` stays within a Long. */
   def partitionOf(key: String, r: Int): Int = {
-    val md = MessageDigest.getInstance("MD5")
-    val digest = md.digest(key.getBytes("UTF-8"))
-    new BigInteger(1, digest).mod(BigInteger.valueOf(r.toLong)).intValueExact()
+    val digest = md5.get().digest(key.getBytes(StandardCharsets.UTF_8))
+    var acc = 0L
+    var i = 0
+    while (i < digest.length) {
+      acc = ((acc << 8) | (digest(i) & 0xff)) % r
+      i += 1
+    }
+    acc.toInt
   }
 }

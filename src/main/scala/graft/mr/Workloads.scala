@@ -8,13 +8,28 @@ package graft.mr
   */
 object Workloads {
 
-  /** wc_map.sh (tests/testdata/exec/wc_map.sh:12):
+  /** wc_map.sh (tests/testdata/exec/wc_map.sh:12), under `LC_ALL=C`:
     * `tr '[ \t]' '\n' | tr '[:upper:]' '[:lower:]' | awk '{print $1"\t1"}'`
-    * — every space/tab starts a new token, so consecutive separators
-    * emit EMPTY tokens ("\t1" lines), which the golden counts
-    * (word_count_correct.txt:1 is "\t9"). */
+    * — GNU tr takes the brackets literally, so space, TAB, `[` and `]`
+    * each start a new token, and consecutive separators emit EMPTY
+    * tokens ("\t1" lines), which the golden counts
+    * (word_count_correct.txt:1 is "\t9"). The C locale lowercases
+    * A–Z only. */
   def wcMapSh(lines: Iterator[String]): Iterator[String] =
-    lines.flatMap(_.split("[ \t]", -1).map(tok => s"${tok.toLowerCase}\t1"))
+    lines.flatMap { line =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[String]
+      val tok = new java.lang.StringBuilder
+      var i = 0
+      while (i <= line.length) {
+        val c = if (i < line.length) line.charAt(i) else '\n'
+        if (c == '\n' || c == ' ' || c == '\t' || c == '[' || c == ']') {
+          out += tok.append("\t1").toString
+          tok.setLength(0)
+        } else tok.append(if (c >= 'A' && c <= 'Z') (c + ('a' - 'A')).toChar else c)
+        i += 1
+      }
+      out
+    }
 
   /** wc_reduce.sh (tests/testdata/exec/wc_reduce.sh:14):
     * `cut -f1 | uniq -c | awk '{print $2"\t"$1}'` — adjacent-key

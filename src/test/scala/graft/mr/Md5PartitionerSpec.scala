@@ -1,7 +1,10 @@
 package graft.mr
 
+import java.math.BigInteger
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Arbitrary, Gen, Prop, Properties}
 
 /** Pinned values for the md5-mod shuffle partitioner (reference:
   * worker/__main__.py:142-144), implied by the test_worker_08
@@ -28,6 +31,19 @@ object Md5PartitionerProps extends Properties("Md5LinePartitioner") {
     forAll(Gen.asciiPrintableStr, Gen.choose(1, 64)) { (s, r) =>
       val p = Md5LinePartitioner.partitionOf(s, r)
       p >= 0 && p < r
+    }
+
+  // the reference formula, int(md5(key).hexdigest(), 16) % r, in
+  // BigInteger arithmetic; unicode strings, r over the whole Int range
+  property("partitionOf equals BigInteger(1, md5(utf8)).mod(r)") =
+    forAll(Gen.listOfN(50, Gen.oneOf(Gen.asciiPrintableStr, Arbitrary.arbitrary[String])),
+        Gen.oneOf(Gen.choose(1, 64), Gen.choose(1, Int.MaxValue), Gen.const(Int.MaxValue))) {
+      (keys, r) =>
+        keys.forall { k =>
+          val md5 = MessageDigest.getInstance("MD5").digest(k.getBytes(StandardCharsets.UTF_8))
+          Md5LinePartitioner.partitionOf(k, r) ==
+            new BigInteger(1, md5).mod(BigInteger.valueOf(r.toLong)).intValueExact()
+        }
     }
 
   property("keys on the prefix before the first TAB") =

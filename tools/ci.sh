@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Full local gate: compile, tests, oracle correctness, bench.
+# Full local gate: compile, tests, oracle correctness, MR smoke, bench.
 # Usage: tools/ci.sh [sf_dir]   (default /root/testdata/sf0.01)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -48,6 +48,19 @@ echo "== verify vs DuckDB oracle @ $SF"
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
   sbt -batch "runMain graft.Verify $SF $OUT/verify" 2>&1 | tail -1
 python3 tools/check_oracle.py "$OUT/verify" "$SF"
+
+# The MR goldens are absent, so the perfbench oracle (word counts,
+# md5-mod placement, byte order, grep) is the end-to-end MR check.
+echo "== MR correctness smoke (perfbench mr_corpus)"
+if ! MRLINE=$(python3 perfbench/run.py --workload mr_corpus --seed 1 --seconds 5 --trace 0 | tail -1); then
+  echo "FAIL: perfbench mr_corpus exited non-zero"
+  exit 1
+fi
+echo "$MRLINE"
+if ! echo "$MRLINE" | python3 -c 'import json, sys; sys.exit(0 if json.load(sys.stdin)["correct"] is True else 1)'; then
+  echo "FAIL: perfbench mr_corpus reports correct != true"
+  exit 1
+fi
 
 echo "== bench @ sf0.1 (steady-state; keep the box otherwise idle)"
 run_bench() {
