@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.Aggregator
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Executes a [[MapReduceJob]] with the reference's exact dataflow
   * (SURVEY.md §3), Spark-first:
@@ -11,17 +12,22 @@ import org.apache.spark.sql.SparkSession
   * {{{
   * text files --(textFile, minPartitions=M)--> lines          [F1/F2]
   *   --(pipe | flatMap)--> key TAB value lines                [F3]
-  *   --(line, 1L) --(ShuffledRDD: Md5LinePartitioner, summing
-  *      Aggregator with map-side combine, Ordering.String)
+  *   --(in-mapper line count, bounded table)--> (line, n)
+  *   --(ShuffledRDD: Md5LinePartitioner, summing Aggregator
+  *      on the reduce side only, Ordering.String)
   *   --> (line, n) sorted by whole line within each partition [F4+F5+F6]
   *   --(expand: n copies of line)--> sorted lines
   *   --(pipe | mapPartitions)--> output lines                 [F7]
   *   --(saveAsTextFile)--> part-00000..part-{R-1}             [F8]
   * }}}
   *
-  * Byte-identical map-output lines are combined into one counted
-  * record on the map side (sorted there too, as the reference's F5
-  * sorts each map task's partition files) and re-expanded to n
+  * Each map task counts its byte-identical output lines in a hash
+  * table (in-mapper combining) and emits one `(line, n)` record per
+  * distinct line, so the md5 partitioner and the shuffle writer run
+  * once per distinct line, not once per line. The map side neither
+  * combines again nor sorts (R ≤ 200 takes Spark's bypass-merge
+  * writer); the reduce side sums a line's counts across flushes and
+  * map tasks, sorts the distinct lines and re-expands each to n
   * copies before the reducer. This is exact for any reducer,
   * executables included: the reducer reads a whole-line sort, in
   * which identical lines are adjacent and indistinguishable, so each
@@ -35,15 +41,21 @@ import org.apache.spark.sql.SparkSession
   * heartbeats + task retry — deliberately not reimplemented
   * (SURVEY.md §4: "the entire lifecycle collapses").
   *
-  * Scale: the shuffle is a single sort-based exchange keyed by whole
-  * lines — Spark spills both the combine map and the sort, so
-  * partitions never need to fit in memory (the reference's <1 MB
-  * streaming constraint, test_worker_11.py:149, holds structurally).
-  * M and R are degrees of parallelism only.
+  * Scale: the in-mapper table is bounded by a fixed byte budget
+  * ([[LineCounts]]); a full table is emitted and cleared, so a map
+  * task's memory never depends on its input size. The shuffle is a
+  * single sort-based exchange keyed by whole lines, and Spark spills
+  * the reduce-side combine and sort, so partitions never need to fit
+  * in memory (the reference's <1 MB streaming constraint,
+  * test_worker_11.py:149, holds structurally). M and R are degrees of
+  * parallelism only.
   */
 object MapReduceRunner {
 
-  def run(spark: SparkSession, job: MapReduceJob): Unit = {
+  def run(spark: SparkSession, job: MapReduceJob): Unit =
+    run(spark, job, LineCounts.BudgetBytes)
+
+  private[mr] def run(spark: SparkSession, job: MapReduceJob, budgetBytes: Long): Unit = {
     val sc = spark.sparkContext
 
     // F9: reset output directory (manager/__main__.py:87-90).
@@ -62,19 +74,9 @@ object MapReduceRunner {
     // F3: streaming map.
     val mapped = applyStage(input, job.mapper)
 
-    // F4+F5+F6: md5-mod partition by key prefix, byte-sort whole
-    // lines within each partition, k-way merged by Spark's
-    // sort-based shuffle. Identical lines travel as one (line, count)
-    // record and are expanded back before the reducer (exact: see the
-    // class doc).
+    // F4+F5+F6, then the expansion back to one line per copy.
     val shuffled: RDD[String] =
-      new ShuffledRDD[String, Long, Long](mapped.map(line => (line, 1L)),
-          new Md5LinePartitioner(job.numReducers))
-        .setAggregator(new Aggregator[String, Long, Long](
-          n => n, (acc, n) => acc + n, (a, b) => a + b))
-        .setMapSideCombine(true)
-        .setKeyOrdering(Ordering.String)
-        .flatMap { case (line, n) => repeat(line, n) }
+      shuffle(mapped, job.numReducers, budgetBytes).flatMap { case (line, n) => repeat(line, n) }
 
     // F7: streaming reduce over the sorted, key-adjacent stream.
     val reduced = applyStage(shuffled, job.reducer)
@@ -82,6 +84,21 @@ object MapReduceRunner {
     // F8: one part-XXXXX file per reduce partition.
     reduced.saveAsTextFile(job.outputDirectory)
   }
+
+  /** F4+F5+F6: md5-mod partition by key prefix; the reduce side
+    * merges the map tasks' runs and byte-sorts whole lines within each
+    * partition. Identical lines travel as `(line, n)` records, counted
+    * in the map task and summed on the reduce side (exact: see the
+    * class doc). */
+  private[mr] def shuffle(mapped: RDD[String], numReducers: Int,
+                          budgetBytes: Long): ShuffledRDD[String, Long, Long] =
+    new ShuffledRDD[String, Long, Long](
+        mapped.mapPartitions(lines => new LineCounts(lines, budgetBytes)),
+        new Md5LinePartitioner(numReducers))
+      .setAggregator(new Aggregator[String, Long, Long](
+        n => n, (acc, n) => acc + n, (a, b) => a + b))
+      .setMapSideCombine(false)
+      .setKeyOrdering(Ordering.String)
 
   /** `n` copies of `line`, counted in a Long (a combined count is not
     * bounded by Int). */
@@ -196,4 +213,71 @@ object MapReduceRunner {
       }
     }.collect().toSeq.sorted
   }
+}
+
+/** In-mapper combining (F3 → F4): counts a map task's byte-identical
+  * output lines in a hash table and emits one `(line, n)` record per
+  * distinct line. The table is bounded by `budgetBytes` of estimated
+  * heap: when a new line would push it past the budget, the table is
+  * emitted and a fresh one started. A line can then come out as
+  * several records, which the shuffle's reduce-side sum merges back.
+  * A single line larger than the budget is a table of its own. */
+private[mr] final class LineCounts(lines: Iterator[String], budgetBytes: Long)
+    extends Iterator[(String, Long)] {
+  import LineCounts.{Count, entryBytes}
+  private var table = new java.util.HashMap[String, Count]
+  private var tableBytes = 0L
+  private var out: Iterator[(String, Long)] = Iterator.empty
+  /** Tables emitted because the budget was reached (the last table,
+    * emitted at the end of the input, is not counted). */
+  private[mr] var budgetFlushes = 0
+  /** The largest estimated size any table reached. */
+  private[mr] var peakBytes = 0L
+
+  def hasNext: Boolean = out.hasNext || { fill(); out.hasNext }
+
+  def next(): (String, Long) =
+    if (hasNext) out.next() else throw new NoSuchElementException("next on empty iterator")
+
+  /** Counts lines until the input ends or the table is full, then
+    * hands the table to `out`. */
+  private def fill(): Unit = {
+    var full = false
+    while (!full && lines.hasNext) {
+      val line = lines.next()
+      val c = table.get(line)
+      if (c != null) c.n += 1
+      else {
+        val cost = entryBytes(line)
+        if (tableBytes + cost > budgetBytes && !table.isEmpty) {
+          emit()
+          budgetFlushes += 1
+          full = true
+        }
+        table.put(line, new Count)
+        tableBytes += cost
+      }
+    }
+    if (!full && !table.isEmpty) emit()
+  }
+
+  private def emit(): Unit = {
+    out = table.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue.n))
+    peakBytes = math.max(peakBytes, tableBytes)
+    table = new java.util.HashMap[String, Count]
+    tableBytes = 0
+  }
+}
+
+private[mr] object LineCounts {
+  /** The in-mapper table's budget: a fixed bound on a map task's
+    * memory, not a tuning knob. */
+  val BudgetBytes: Long = 8L << 20
+
+  private final class Count { var n = 1L }
+
+  /** Estimated heap of one table entry: the String and its array
+    * (about 40 bytes plus up to 2 per char), the HashMap node and its
+    * bucket slot (about 40), and the Count (16). */
+  private[mr] def entryBytes(line: String): Long = 96L + 2L * line.length
 }

@@ -35,7 +35,7 @@ object Workloads {
     * `cut -f1 | uniq -c | awk '{print $2"\t"$1}'` — adjacent-key
     * count over the sorted stream. */
   def wcReduceSh(lines: Iterator[String]): Iterator[String] =
-    MapReduceJob.groupAdjacent(lines).map { case (k, vs) => s"$k\t${vs.size}" }
+    sumAdjacent(lines)(_ => 1).map { case (k, n) => s"$k\t$n" }
 
   /** wc_map.py (tests/testdata/exec/wc_map.py:6-9): Python
     * `str.split()` — runs of whitespace, NO empty tokens, no
@@ -46,9 +46,27 @@ object Workloads {
   /** wc_reduce.py (tests/testdata/exec/wc_reduce.py:11-30): group
     * adjacent keys, sum int values, emit `key SPACE total`. */
   def wcReducePy(lines: Iterator[String]): Iterator[String] =
-    MapReduceJob.groupAdjacent(lines).map { case (k, vs) =>
-      val total = vs.map(l => l.substring(l.indexOf('\t') + 1).toInt).sum
-      s"$k $total"
+    sumAdjacent(lines)(l => l.substring(l.indexOf('\t') + 1).toInt)
+      .map { case (k, total) => s"$k $total" }
+
+  /** One streaming pass over a sorted stream: sums `value(line)` over
+    * each run of lines with the same key (`MapReduceJob.keyOf`), as
+    * `uniq -c` and `itertools.groupby` do, without holding a run's
+    * lines. A line continues key k when it starts with k followed by
+    * a TAB or its end (k holds no TAB). */
+  private def sumAdjacent(lines: Iterator[String])(value: String => Int): Iterator[(String, Int)] =
+    new Iterator[(String, Int)] {
+      private val it = lines.buffered
+      def hasNext: Boolean = it.hasNext
+      def next(): (String, Int) = {
+        val k = MapReduceJob.keyOf(it.head)
+        var sum = 0
+        while (it.hasNext && {
+          val l = it.head
+          l.startsWith(k) && (l.length == k.length || l.charAt(k.length) == '\t')
+        }) sum += value(it.next())
+        (k, sum)
+      }
     }
 
   /** grep_map.py (tests/testdata/exec/grep_map.py:14-28): strip, drop

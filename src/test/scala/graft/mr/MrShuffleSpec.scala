@@ -9,16 +9,17 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import scala.util.Random
+import org.apache.spark.ShuffleDependency
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
-/** The runner's shuffle (map-side combine of identical lines, then
-  * re-expansion) against an independent plain-Scala model of the
-  * reference dataflow: map every line, place it by
-  * `BigInteger(1, md5(key)) mod R` with key = text before the first
-  * TAB, sort each partition by whole line, run the reducer. Every part
-  * file must equal the model byte for byte. */
+/** The runner's shuffle (in-mapper counting of identical lines, a
+  * reduce-side sum, then re-expansion) against an independent
+  * plain-Scala model of the reference dataflow: map every line, place
+  * it by `BigInteger(1, md5(key)) mod R` with key = text before the
+  * first TAB, sort each partition by whole line, run the reducer.
+  * Every part file must equal the model byte for byte. */
 class MrShuffleSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -32,7 +33,7 @@ class MrShuffleSpec extends AnyFunSuite {
   private def check(name: String, files: Seq[Seq[String]],
                     mapper: Iterator[String] => Iterator[String],
                     reducer: StageSpec, modelReduce: Seq[String] => Seq[String],
-                    r: Int): Int = {
+                    r: Int, budgetBytes: Long = LineCounts.BudgetBytes): Int = {
     val in = Files.createTempDirectory(s"graft-shuffle-$name-in")
     files.zipWithIndex.foreach { case (lines, i) =>
       Files.write(in.resolve(f"file$i%02d"), lines.map(_ + "\n").mkString.getBytes(UTF_8))
@@ -40,7 +41,7 @@ class MrShuffleSpec extends AnyFunSuite {
     val out = Files.createTempDirectory(s"graft-shuffle-$name-out")
     Files.delete(out)
     MapReduceRunner.run(spark, MapReduceJob(in.toString, out.toString,
-      FnSpec(mapper), reducer, numMappers = files.size, numReducers = r))
+      FnSpec(mapper), reducer, numMappers = files.size, numReducers = r), budgetBytes)
 
     val mapped = mapper(files.flatten.iterator).toSeq
     val parts: Seq[Path] = Files.list(out).iterator().asScala.toSeq
@@ -68,6 +69,10 @@ class MrShuffleSpec extends AnyFunSuite {
 
   private val wcModel: Seq[String] => Seq[String] = s => Workloads.wcReduceSh(s.iterator).toSeq
 
+  // two or three table entries (LineCounts.entryBytes): every map task
+  // flushes its table many times
+  private val smallBudget = 400L
+
   for (r <- Seq(1, 3)) {
     test(s"word count equals the model (R=$r)") {
       check("wc", wcFiles, Workloads.wcMapSh, FnSpec(Workloads.wcReduceSh),
@@ -82,6 +87,47 @@ class MrShuffleSpec extends AnyFunSuite {
     test(s"word-count map output re-expanded into an ExecSpec cat reducer (R=$r)") {
       check("wccat", wcFiles, Workloads.wcMapSh, ExecSpec(Seq("cat")), identity, r)
     }
+    test(s"word count equals the model when every map task flushes often (R=$r)") {
+      check("wcflush", wcFiles, Workloads.wcMapSh, FnSpec(Workloads.wcReduceSh),
+        wcModel, r, smallBudget)
+    }
+    test(s"identity over all-unique lines equals the model when every map task flushes often (R=$r)") {
+      check("uniqueflush", uniqueFiles, identity, FnSpec(identity), identity, r, smallBudget)
+    }
+    test(s"word-count map output into an ExecSpec cat reducer equals the model when every map task flushes often (R=$r)") {
+      check("wccatflush", wcFiles, Workloads.wcMapSh, ExecSpec(Seq("cat")), identity, r,
+        smallBudget)
+    }
+  }
+
+  test("line counts sum to the input and no table grows past its budget") {
+    val wcLines = Workloads.wcMapSh(wcFiles.flatten.iterator).toSeq
+    val long = "x" * 1000 // a line larger than the budget is a table of its own
+    for (lines <- Seq(wcLines, uniqueFiles.flatten, Seq("a", long, "a", long, "b", "a"))) {
+      val counts = new LineCounts(lines.iterator, smallBudget)
+      val emitted = counts.toVector
+      assert(emitted.map(_._2).sum === lines.size)
+      assert(emitted.groupMapReduce(_._1)(_._2)(_ + _) === lines.groupMapReduce(identity)(_ => 1L)(_ + _))
+      assert(counts.budgetFlushes >= 2)
+      val widest = lines.map(LineCounts.entryBytes).max
+      assert(counts.peakBytes <= math.max(smallBudget, widest))
+    }
+    // at the default budget the same word-count lines fit one table
+    val one = new LineCounts(wcLines.iterator, LineCounts.BudgetBytes)
+    assert(one.toVector.size === wcLines.distinct.size)
+    assert(one.budgetFlushes === 0)
+  }
+
+  test("the shuffle counts in the mapper: no map-side combine, a reduce-side sum, whole-line order") {
+    val rdd = MapReduceRunner.shuffle(spark.sparkContext.parallelize(Seq("k\tv")), 3,
+      LineCounts.BudgetBytes)
+    val dep = rdd.dependencies.head.asInstanceOf[ShuffleDependency[String, Long, Long]]
+    assert(!dep.mapSideCombine)
+    assert(dep.partitioner === new Md5LinePartitioner(3))
+    assert(dep.keyOrdering.contains(Ordering.String))
+    val agg = dep.aggregator.getOrElse(fail("the reduce side must sum counts"))
+    assert(agg.mergeValue(agg.createCombiner(2L), 3L) === 5L)
+    assert(agg.mergeCombiners(4L, 6L) === 10L)
   }
 
   test("word count shuffles fewer records than its mapper emits") {
