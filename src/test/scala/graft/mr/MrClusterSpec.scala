@@ -6,10 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Boots [[ClusterParity]] in its own JVM (one SparkContext per JVM —
   * the shared suite session owns this one's) and asserts the
   * local-cluster word_count run, native AND pipe, matched the
-  * reference golden across real executor-process boundaries. */
-class MrClusterSpec extends AnyFunSuite {
+  * reference golden across real executor-process boundaries.
+  * ClusterParity reads the reference's input, golden and `exec/`
+  * scripts, so the test is ignored where [[ReferenceData]] is absent. */
+class MrClusterSpec extends AnyFunSuite with ReferenceData {
 
-  test("word_count parity survives real executor JVMs (local-cluster[2,2,1024])") {
+  refTest("word_count parity survives real executor JVMs (local-cluster[2,2,1024])") {
     val out = java.nio.file.Files.createTempDirectory("graft-cluster").toString
     val javaBin = sys.props("java.home") + "/bin/java"
     val opens = org.apache.spark.launcher.JavaModuleOptions

@@ -14,9 +14,8 @@ import graft.SparkTestSession
   * submission order. This spec submits three jobs with mixed M/R
   * through ONE session — both sequentially and concurrently — and
   * asserts every job's output is complete and correct. */
-class MrQueueSpec extends AnyFunSuite {
+class MrQueueSpec extends AnyFunSuite with ReferenceData {
   private lazy val spark = SparkTestSession.spark
-  private val refData = "/root/reference/tests/testdata"
 
   private def partLines(outDir: Path): Seq[String] =
     Files.list(outDir).iterator().asScala.toSeq
@@ -54,14 +53,14 @@ class MrQueueSpec extends AnyFunSuite {
         () => assert(partLines(wc2Out).sorted === wcGolden)))
   }
 
-  test("three queued jobs (mixed M/R) all run to correct completion, in order") {
+  refTest("three queued jobs (mixed M/R) all run to correct completion, in order") {
     jobs("seq").foreach { case (job, check) =>
       MapReduceRunner.run(spark, job)
       check()
     }
   }
 
-  test("three concurrently submitted jobs share the scheduler and all complete") {
+  refTest("three concurrently submitted jobs share the scheduler and all complete") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     implicit val ec: ExecutionContext = ExecutionContext.global

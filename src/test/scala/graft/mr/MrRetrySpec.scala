@@ -24,9 +24,8 @@ object MrRetrySpec {
   val reduceFailures = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
-class MrRetrySpec extends AnyFunSuite {
+class MrRetrySpec extends AnyFunSuite with ReferenceData {
   private lazy val spark = SparkTestSession.spark
-  private val refData = "/root/reference/tests/testdata"
 
   private def partLines(outDir: Path): Seq[String] =
     Files.list(outDir).iterator().asScala.toSeq
@@ -34,7 +33,7 @@ class MrRetrySpec extends AnyFunSuite {
       .sortBy(_.getFileName.toString)
       .flatMap(p => Files.readAllLines(p).asScala)
 
-  test("map task killed on first attempt is retried; word count golden still exact") {
+  refTest("map task killed on first attempt is retried; word count golden still exact") {
     MrRetrySpec.mapFailures.set(0)
     // Mapper contract unchanged (wc_map.sh semantics) but the first
     // attempt of partition 0 dies mid-stream — the moral equivalent of
@@ -64,7 +63,7 @@ class MrRetrySpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("reduce-stage first-attempt failure is also retried to the exact golden") {
+  refTest("reduce-stage first-attempt failure is also retried to the exact golden") {
     MrRetrySpec.reduceFailures.set(0)
     val crashOnceReducer = FnSpec { lines =>
       val tc = TaskContext.get()

@@ -10,9 +10,8 @@ import graft.SparkTestSession
   * contract (F3/F7) — and compare to the same goldens the reference's
   * integration tests use.
   */
-class PipeFidelitySpec extends AnyFunSuite {
+class PipeFidelitySpec extends AnyFunSuite with ReferenceData {
   private lazy val spark = SparkTestSession.spark
-  private val refData = "/root/reference/tests/testdata"
 
   private def partLines(outDir: Path): Seq[String] =
     Files.list(outDir).iterator().asScala.toSeq
@@ -26,7 +25,7 @@ class PipeFidelitySpec extends AnyFunSuite {
     d
   }
 
-  test("reference wc_map.sh + wc_reduce.sh run unchanged via pipe") {
+  refTest("reference wc_map.sh + wc_reduce.sh run unchanged via pipe") {
     val out = tmpOut("pipe-wc")
     MapReduceRunner.run(spark, MapReduceJob(
       inputDirectory = s"$refData/input",
@@ -40,7 +39,7 @@ class PipeFidelitySpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("reference grep_map.py + grep_reduce.py run unchanged via pipe") {
+  refTest("reference grep_map.py + grep_reduce.py run unchanged via pipe") {
     val out = tmpOut("pipe-grep")
     MapReduceRunner.run(spark, MapReduceJob(
       inputDirectory = s"$refData/input",
@@ -52,7 +51,7 @@ class PipeFidelitySpec extends AnyFunSuite {
       Files.readAllLines(Paths.get(s"$refData/correct/grep_correct.txt")).asScala.toSeq)
   }
 
-  test("native and pipe paths agree (wc_map.py/wc_reduce.py semantics)") {
+  refTest("native and pipe paths agree (wc_map.py/wc_reduce.py semantics)") {
     val outPipe = tmpOut("pipe-wcpy")
     val outNative = tmpOut("native-wcpy")
     val jobBase = MapReduceJob(

@@ -9,11 +9,10 @@ import graft.SparkTestSession
   * driven exactly as a user would — CLI flags parsed into a job whose
   * mapper/reducer are the REFERENCE'S OWN executables run unchanged
   * via RDD.pipe — and verified against the committed golden. */
-class SubmitSpec extends AnyFunSuite {
+class SubmitSpec extends AnyFunSuite with ReferenceData {
   private lazy val spark = SparkTestSession.spark
-  private val refData = "/root/reference/tests/testdata"
 
-  test("CLI args drive a pipe job that reproduces word_count_correct.txt") {
+  refTest("CLI args drive a pipe job that reproduces word_count_correct.txt") {
     val out = Files.createTempDirectory("graft-submit")
     Files.delete(out)
     val job = Submit.buildJob(Array(
