@@ -415,42 +415,23 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val warehouseDir =
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // unique warehouse per JVM: managed-table staging (join_bucketed)
-      // would otherwise hit LOCATION_ALREADY_EXISTS on the next run --
-      // the in-memory catalog forgets tables, the directory persists
-      .config("spark.sql.warehouse.dir", warehouseDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // allow DPP to run its own subquery when AQE hasn't materialized
-      // a reusable broadcast yet (default reuse-only silently degrades
-      // the filter to `true` and scans every partition - evt_dpp)
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    // SPARK_GRAFT_ONLY (same contract as Verify): builder-side
-    // isolation runs; absent OR BLANK for the driver → every query
-    // benches (a blank/empty-segment value must not silently select
-    // zero queries), and a name that matches nothing fails fast
-    // instead of emitting a shorter-than-expected result.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not registered: ${unknown.toSeq.sorted.mkString(",")}")
+    val failed = GraftSession.run(s"local[$cpus]", cpus.toInt) { spark =>
+      spark.sparkContext.setLogLevel("ERROR")
+      benchAll(spark, sfDir)
     }
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .sortBy(_._1)
+    // a crashing query must fail the bench loudly, not vanish into a
+    // plausible-looking total
+    if (failed) sys.exit(1)
+  }
+
+  /** Warmup, the timed passes, the records; true when a query failed.
+    * The session's staged layouts are released by [[GraftSession.run]]
+    * only after this returns: a layout is a table property, so
+    * releasing it between passes ([[freeBlocks]]) would bill a full
+    * re-stage to join_bucketed's pass-2 time. */
+  private def benchAll(spark: SparkSession, sfDir: String): Boolean = {
+    // SPARK_GRAFT_ONLY narrows the run for isolation runs
+    val ordered = GraftSession.selectedQueries().toSeq.sortBy(_._1)
     // warmup: same plans, smallest data, results discarded; errors
     // surface in the timed passes, not here. stream_* queries are
     // SKIPPED: their cost is state-store + drop-staging machinery that
@@ -673,15 +654,6 @@ object Bench {
     // parse always sees it whole (see compactLine scaladoc).
     println(compactLine(results, errors.size, wallSec, ratio, sfDir,
       extCpuCores = extCpuCores, contention = contention))
-    // staged layouts are deliberately NOT in freeBlocks (a layout is
-    // a table property; releasing it between passes would bill a full
-    // re-stage to join_bucketed's pass-2 time) — but the session is
-    // done now: drop the graft_bkt_* catalog tables + every staged file
-    graft.ops.SharedBuild.releaseAll()
-    spark.stop()
-    graft.ops.OpsUtil.deleteRecursively(warehouseDir)
-    // a crashing query must fail the bench loudly, not vanish into a
-    // plausible-looking total
-    if (errors.nonEmpty) sys.exit(1)
+    errors.nonEmpty
   }
 }

@@ -1,7 +1,5 @@
 package graft.mr
 
-import org.apache.spark.sql.SparkSession
-
 /** Cross-JVM MR parity run (r4 verdict item #5): executes word_count
   * on `local-cluster[2,2,1024]` — a real standalone master + 2 workers
   * whose EXECUTORS are separate OS processes, the reference's
@@ -21,8 +19,8 @@ object ClusterParity {
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val refData = "/root/reference/tests/testdata"
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
+    // 4 partitions: the cluster's 2 workers × 2 cores
+    val spark = graft.GraftSession.builder("local-cluster[2,2,1024]", 4)
       .appName("graft-cluster-parity")
       // executor JVMs need the app classes (local-cluster ships only
       // the Spark distribution's jars) and the JDK17 module opens
@@ -30,7 +28,6 @@ object ClusterParity {
       .config("spark.executor.extraJavaOptions",
         org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
       .config("spark.task.maxFailures", "2")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

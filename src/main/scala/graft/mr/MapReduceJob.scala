@@ -53,20 +53,4 @@ object MapReduceJob {
     val i = line.indexOf('\t')
     if (i < 0) line else line.substring(0, i)
   }
-
-  /** Adjacency grouping helper for native reducers: the Hadoop-
-    * Streaming `itertools.groupby` shape
-    * (/root/reference/tests/testdata/exec/wc_reduce.py:27-29). The
-    * input iterator must be sorted; groups are (key, lines-of-key). */
-  def groupAdjacent(lines: Iterator[String]): Iterator[(String, Seq[String])] =
-    new Iterator[(String, Seq[String])] {
-      private val it = lines.buffered
-      def hasNext: Boolean = it.hasNext
-      def next(): (String, Seq[String]) = {
-        val k = keyOf(it.head)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext && keyOf(it.head) == k) buf += it.next()
-        (k, buf.toSeq)
-      }
-    }
 }

@@ -1,7 +1,5 @@
 package graft.mr
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI job submission — the `mapreduce-submit` analog (SURVEY.md §2.1
   * F16; reference /root/reference/mapreduce/submit.py:21-96).
   *
@@ -38,14 +36,10 @@ object Submit {
   def main(args: Array[String]): Unit = {
     val job = buildJob(args)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-mr-submit")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    MapReduceRunner.run(spark, job)
-    println(s"job complete: ${job.outputDirectory}")
-    spark.stop()
+    graft.GraftSession.run(s"local[$cpus]", cpus.toInt) { spark =>
+      spark.sparkContext.setLogLevel("WARN")
+      MapReduceRunner.run(spark, job)
+      println(s"job complete: ${job.outputDirectory}")
+    }
   }
 }

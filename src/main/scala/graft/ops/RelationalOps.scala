@@ -2078,9 +2078,9 @@ object RelationalOps {
     // rare-item long tail is most of the volume; without the prune the
     // pair expansion would still emit their (basket-size) pairs only
     // to drop every one at the co ≥ 2 filter.
-    // r17 opt (guide §2.5, Scratch bisect with COLD per-rep
-    // construction): AQE coalesces the regroup's cust exchange by
-    // BYTES (the per-customer sets are ~MBs → 2 partitions), handing
+    // r17 opt (guide §2.5, bisect with COLD per-rep construction):
+    // AQE coalesces the regroup's cust exchange by BYTES (the
+    // per-customer sets are ~MBs → 2 partitions), handing
     // the quadratic pair expansion to 2 tasks. A localCheckpoint here
     // (the first r17 cut) makes it WORSE — it PINS the coalesced
     // 2-partition layout into the materialized RDD and pays the

@@ -39,6 +39,15 @@ object SourceQueries {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
+  /** The binaryFile rows of the files directly in `dir` whose names
+    * match `glob`. The glob goes in `pathGlobFilter`, not in the load
+    * path: Spark probes a literal glob path for a streaming-sink
+    * metadata dir first, and that probe logs a FileNotFoundException
+    * trace on every load. */
+  private[sources] def binaryFiles(spark: SparkSession, dir: String,
+                                   glob: String): DataFrame =
+    spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir)
+
   // one staged copy per (session, sf-dir, format) in the
   // [[graft.ops.SharedBuild]] registry
   private def stage(spark: SparkSession, d: String, fmt: String)(
@@ -180,7 +189,7 @@ object SourceQueries {
       }.collect()
       ()
     }
-    docStats(streamZstLines(spark, s"$dir/*.jsonl.zst")
+    docStats(streamZstLines(spark, dir, "*.jsonl.zst")
       .select(from_json(col("value"), docSchema).as("r"))
       .select(col("r.doc_id").as("doc_id"), col("r.text").as("text"),
         col("r.lang").as("lang"), col("r.source").as("source"),
@@ -291,18 +300,18 @@ object SourceQueries {
       }.toDF("value")
   }
 
-  /** Streamed line read of zstd-compressed text files matching
-    * `pattern`: binaryFile lists PATHS only (the content column prunes
+  /** Streamed line read of the zstd-compressed text files in `dir`
+    * matching `glob`: binaryFile lists PATHS only (the content column prunes
     * away), each executor pulls a `ZstdInputStream` line by line —
     * one record in memory at a time. Same early-exit hygiene as
     * [[streamTarEntries]]: one stream open at a time, a completion
     * listener reaps it if the task dies mid-file (limit, corrupt
     * frame). */
-  private[sources] def streamZstLines(spark: SparkSession, pattern: String)
-      : DataFrame = {
+  private[sources] def streamZstLines(spark: SparkSession, dir: String,
+                                      glob: String): DataFrame = {
     import spark.implicits._
     val confSer = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    spark.read.format("binaryFile").load(pattern)
+    binaryFiles(spark, dir, glob)
       .select(col("path")).as[String]
       .mapPartitions { paths =>
         var open: java.io.InputStream = null
@@ -371,7 +380,7 @@ object SourceQueries {
         }.collect()
       ()
     }
-    val rows = spark.read.format("binaryFile").load(s"$dir/*.pdf")
+    val rows = binaryFiles(spark, dir, "*.pdf")
       .select(col("content")).as[Array[Byte]]
       .flatMap(b => PdfCodec.decode(b).map(p =>
         (p.docId, p.text, p.lang, p.source, p.nChars)))
@@ -510,7 +519,7 @@ object SourceQueries {
     def str(f: Feature): String = new String(
       f.asInstanceOf[BytesList].values.head, "UTF-8")
     def i64(f: Feature): Long = f.asInstanceOf[Int64List].values.head
-    val rows = spark.read.format("binaryFile").load(s"$dir/*.tfrecord")
+    val rows = binaryFiles(spark, dir, "*.tfrecord")
       .select(col("content")).as[Array[Byte]]
       .flatMap(bytes => decodeRecords(bytes).map { payload =>
         val ex = decodeExample(payload)
@@ -694,7 +703,7 @@ object SourceQueries {
       ()
     }
     import spark.implicits._
-    val entries = spark.read.format("binaryFile").load(s"$dir/*.zip")
+    val entries = binaryFiles(spark, dir, "*.zip")
       .select(col("content")).as[Array[Byte]]
       .flatMap(bytes => ZipCodec.decode(bytes).map(e =>
         (e.name, e.data.length.toLong, new String(e.data, "UTF-8"))))
@@ -732,10 +741,11 @@ object SourceQueries {
         }.collect()
       ()
     }
-    archiveFingerprint(streamTarEntries(spark, s"$dir/*.tar", in => in))
+    archiveFingerprint(streamTarEntries(spark, dir, "*.tar", in => in))
   }
 
-  /** Head-first streaming read of tar archives matching `pattern`:
+  /** Head-first streaming read of the tar archives in `dir` matching
+    * `glob`:
     * only `path` is read from binaryFile (the content column prunes
     * away), each executor opens the file and pulls
     * [[TarCodec.decodeStream]] holding ONE entry's payload at a time —
@@ -743,13 +753,13 @@ object SourceQueries {
     * decompression stream (identity for plain tar, GZIP for .tgz) —
     * streaming decode composes with non-seekable sources, which is
     * exactly what ZIP's tail-first directory can never do. */
-  private def streamTarEntries(spark: SparkSession, pattern: String,
+  private def streamTarEntries(spark: SparkSession, dir: String, glob: String,
       wrap: java.io.InputStream => java.io.InputStream): DataFrame = {
     import spark.implicits._
     // ship the SESSION hadoop conf (as binaryFile itself does), not a
     // fresh Configuration() that would drop any spark.hadoop.* settings
     val confSer = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    spark.read.format("binaryFile").load(pattern)
+    binaryFiles(spark, dir, glob)
       .select(col("path")).as[String]
       .mapPartitions { paths =>
         // one stream is open at a time (flatMap pulls sequentially);
@@ -823,7 +833,7 @@ object SourceQueries {
         }.collect()
       ()
     }
-    archiveFingerprint(streamTarEntries(spark, s"$dir/*.tar.gz",
+    archiveFingerprint(streamTarEntries(spark, dir, "*.tar.gz",
       in => new java.util.zip.GZIPInputStream(in, 1 << 16)))
   }
 

@@ -153,7 +153,7 @@ object WarcFormat {
   }
 
   def readWarcGz(spark: SparkSession, path: String): DataFrame = {
-    val rows = spark.read.format("binaryFile").load(s"$path/*.warc.gz")
+    val rows = SourceQueries.binaryFiles(spark, path, "*.warc.gz")
       .select(col("content")).rdd
       .flatMap(r => parseRecords(gunzipAll(r.getAs[Array[Byte]](0))))
       .filter(_.get(0) != null)
@@ -217,7 +217,7 @@ object WarcFormat {
     * records (warcinfo etc.) are walked and skipped like any real
     * WARC consumer must. */
   def readWarc(spark: SparkSession, path: String): DataFrame = {
-    val rows = spark.read.format("binaryFile").load(s"$path/*.warc")
+    val rows = SourceQueries.binaryFiles(spark, path, "*.warc")
       .select(col("content")).rdd
       .flatMap(r => parseRecords(r.getAs[Array[Byte]](0)))
       .filter(_.get(0) != null)

@@ -287,8 +287,8 @@ object EventStreams {
     * cost (snapshot, maintenance, the no-data cleanup batch — a
     * stream-stream join keeps FOUR stores per partition), so the
     * harness's 100k-row replays run with 4 state partitions instead of
-    * inheriting the batch session's 32: r12 profiling (StreamProfile,
-    * per-batch durationMs) put the fixed per-partition cost at the top
+    * inheriting the batch session's 32: r12 profiling (per-batch
+    * durationMs) put the fixed per-partition cost at the top
     * of both creeped headlines — 8→4 cut stream_attribution's no-data
     * batch and addBatch commit time ~20% with identical results (state
     * is hash-keyed; results are partition-count-independent, and the
@@ -728,7 +728,7 @@ object EventStreams {
     // exists only to evict expired join state — housekeeping a
     // run-to-completion AvailableNow replay never benefits from, yet
     // it costs a full state-store load/commit cycle across all
-    // partitions (r12 StreamProfile: ~0.7 s of a 2.7 s query). Skip
+    // partitions (r12 profiling: ~0.7 s of a 2.7 s query). Skip
     // it HERE ONLY: outer joins and timeout-bearing stateful ops emit
     // RESULTS from no-data batches and must keep them (streamUserTotals'
     // timeout finals), and a continuous production stream keeps them

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Writes PLANS.md: the formatted physical plan of every declared
   * query — the at-a-glance evidence for pushdown/pruning/broadcast/
@@ -14,17 +14,19 @@ object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val warehouseDir =
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.warehouse.dir", warehouseDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // local[8] with 8 partitions whatever the machine, so the document
+    // does not depend on where it is generated
+    val failedCount = GraftSession.run("local[8]", 8) { spark =>
+      spark.sparkContext.setLogLevel("ERROR")
+      write(spark, sfDir, outFile)
+    }
+    // a doc with FAILED sections is stale evidence, not evidence — and
+    // PlansDocSpec will fail on it too; make the generator itself loud
+    if (failedCount > 0) sys.exit(1)
+  }
+
+  /** Writes the document; returns the number of FAILED sections. */
+  private def write(spark: SparkSession, sfDir: String, outFile: String): Int = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of every declared query\n\n")
     sb.append(s"Generated by `graft.tools.DumpPlans` against `$sfDir`.\n")
@@ -44,11 +46,6 @@ object DumpPlans {
     }
     Files.writeString(Paths.get(outFile), sb.toString)
     println(s"wrote $outFile: ${SparkEntry.queries.size} sections, $failedCount failed")
-    graft.ops.SharedBuild.releaseAll()
-    spark.stop()
-    graft.ops.OpsUtil.deleteRecursively(warehouseDir)
-    // a doc with FAILED sections is stale evidence, not evidence — and
-    // PlansDocSpec will fail on it too; make the generator itself loud
-    if (failedCount > 0) sys.exit(1)
+    failedCount
   }
 }

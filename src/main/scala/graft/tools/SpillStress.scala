@@ -2,7 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Memory-pressure stress run (r10 verdict item #5): the 100 TB story
@@ -39,18 +39,16 @@ object SpillStress {
     val dir = args(0)
     val memSpilled = new AtomicLong(0)
     val diskSpilled = new AtomicLong(0)
-    val spark = SparkSession.builder()
-      // [2, 3]: allow task retries — under a starved pool two tasks
-      // can race for the same last pages, and local mode's default
-      // maxFailures=1 turns that transient loss into a job abort
-      .master("local[2, 3]")
+    // [2, 3]: allow task retries — under a starved pool two tasks
+    // can race for the same last pages, and local mode's default
+    // maxFailures=1 turns that transient loss into a job abort.
+    // TWO fat partitions, not 8 thin ones: pressure is per-task
+    // (working set vs task memory), and a thin partition that fits
+    // in the squeezed pool just streams through without ever going
+    // external — observed: local[8]/partitions=8 completed the ×8
+    // corpus with 0 bytes spilled
+    val spark = graft.GraftSession.builder("local[2, 3]", 2)
       .appName("graft-spill-stress")
-      // TWO fat partitions, not 8 thin ones: pressure is per-task
-      // (working set vs task memory), and a thin partition that fits
-      // in the squeezed pool just streams through without ever going
-      // external — observed: local[8]/partitions=8 completed the ×8
-      // corpus with 0 bytes spilled
-      .config("spark.sql.shuffle.partitions", "2")
       // the squeeze: cap what the UnifiedMemoryManager THINKS the heap
       // is (spark.testing.memory feeds UnifiedMemoryManager.getMaxMemory
       // directly — Spark source; 480m is just over the enforced 1.5×
@@ -64,10 +62,6 @@ object SpillStress {
       // with -Xmx640m) keeps task bookkeeping itself from OOMing.
       .config("spark.testing.memory", (480L * 1024 * 1024).toString)
       .config("spark.memory.fraction", "0.1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -10,22 +10,9 @@ object SparkTestSession {
   // (a failed task attempt is rescheduled and the job still completes,
   // tests/test_manager_05.py). Plain local[8] would fail the whole job
   // on the first task failure.
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8, 2]")
+  // The shared confs come from GraftSession, as for Verify and Bench,
+  // so plan tests see the production plan.
+  lazy val spark: SparkSession = GraftSession.builder("local[8, 2]", 8)
     .appName("graft-test")
-    // unique warehouse per JVM: managed-table tests (bucketing) would
-    // otherwise trip over LOCATION_ALREADY_EXISTS across runs, since
-    // the in-memory catalog forgets tables but the directory persists
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // allow DPP to run its own subquery when AQE hasn't materialized
-    // a reusable broadcast yet (default reuse-only silently degrades
-    // the filter to `true` and scans every partition — evt_dpp);
-    // mirrors Verify/Bench so plan tests see the production plan
-    .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

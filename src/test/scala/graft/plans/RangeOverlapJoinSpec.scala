@@ -107,11 +107,8 @@ class RangeOverlapJoinSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val s2 =
-      try SparkSession.builder()
-        .master("local[8, 2]")
+      try graft.GraftSession.builder("local[8, 2]", 8)
         .withExtensions(new graft.functions.GraftExtensions)
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
       finally {
         prevDefault.foreach(SparkSession.setDefaultSession)

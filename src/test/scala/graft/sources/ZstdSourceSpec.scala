@@ -107,7 +107,7 @@ class ZstdSourceSpec extends AnyFunSuite {
     os.close()
     // limit(2) stops the task mid-file: the iterator never reaches the
     // happy-path close, only the completion listener reaps the stream
-    val got = SourceQueries.streamZstLines(spark, s"$dir/*.jsonl.zst")
+    val got = SourceQueries.streamZstLines(spark, dir, "*.jsonl.zst")
       .limit(2).collect().map(_.getString(0))
     assert(got.toSeq === Seq("""{"i":1}""", """{"i":2}"""))
   }

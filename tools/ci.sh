@@ -6,6 +6,14 @@ cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=$(mktemp -d /tmp/graft-ci.XXXX)
 
+echo "== one session factory"
+# Every session under src/ starts from graft.GraftSession; a second
+# hand-built SparkSession.builder chain is how the confs drifted apart.
+if grep -rl --include='*.scala' 'SparkSession.builder' src/ | grep -v '/GraftSession\.scala$'; then
+  echo "FAIL: SparkSession.builder outside GraftSession.scala (files above)"
+  exit 1
+fi
+
 echo "== compile + test"
 # stale reports from scratch/mid-round runs otherwise linger and make
 # the report directory disagree with the recorded run (r10 verdict #3)
