@@ -42,13 +42,19 @@ import scala.jdk.CollectionConverters._
   * (SURVEY.md §4: "the entire lifecycle collapses").
   *
   * Scale: the in-mapper table is bounded by a fixed byte budget
-  * ([[LineCounts]]); a full table is emitted and cleared, so a map
-  * task's memory never depends on its input size. The shuffle is a
-  * single sort-based exchange keyed by whole lines, and Spark spills
+  * ([[LineCounts]], 8 MiB); a full table is emitted and cleared, so a
+  * map task's memory never depends on its input size. The shuffle is
+  * a single sort-based exchange keyed by whole lines, and Spark spills
   * the reduce-side combine and sort, so partitions never need to fit
-  * in memory (the reference's <1 MB streaming constraint,
-  * test_worker_11.py:149, holds structurally). M and R are degrees of
-  * parallelism only.
+  * in memory. M and R are degrees of parallelism only.
+  *
+  * Deviation: the reference asserts a map-step heap under 1 MB over
+  * 3.7 MB of input (test_worker_11.py:149, SURVEY.md §1.3). Here a map
+  * task may hold up to 8 MiB of line counts, so that bound does not
+  * hold; only the input-independence of the bound does. The budget
+  * buys shuffle volume: counting identical lines inside the map task
+  * cut mr_corpus's shuffle from 1.86M records to 230k. The pipe
+  * stages and the reducer still stream line at a time.
   */
 object MapReduceRunner {
 

@@ -1,8 +1,10 @@
 package graft.mr
 
 import java.nio.file.Files
+import scala.util.Using
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.OpsUtil
 
 /** The MR parity layer's face on the declared-query gate: the same
   * word count the relational `word_count` query computes, but driven
@@ -24,43 +26,43 @@ object MrQueries {
   /** Declared query `mr_word_count`: oracle-identical to
     * `word_count` ([[graft.ops.TextOps.wordCountSql]]) — lowercase
     * whitespace tokens, (word, cnt), ordered by word. */
-  def mrWordCount(spark: SparkSession, d: String): DataFrame = {
-    val inDir = Files.createTempDirectory("graft-mrwc-in").toString
-    val outDir = Files.createTempDirectory("graft-mrwc-out")
-    // scratch dirs must not leak even when the run or read-back
-    // throws — cleanup lives in finally, and it tolerates the runner
-    // having already replaced/removed the dirs
-    try {
-      graft.Tables.documents(spark, d).select(col("text"))
-        .write.mode("overwrite").text(inDir)
-      Files.delete(outDir) // the runner owns creation (F9 reset)
-
-      // mapper = the library's canonical tokenizer (OpsUtil.tokens:
-      // locale-independent lowercase, \s+ split, drop empties — the
-      // oracle contract is SQL lower(), so the mapper must not pick up
-      // the JVM default locale's casing rules); reducer = the
-      // reference's wc_reduce.sh adjacent-key count. Newlines inside a
-      // document only split its text-file lines, which is
-      // token-neutral for a whitespace tokenizer.
-      MapReduceRunner.run(spark, MapReduceJob(
-        inputDirectory = inDir,
-        outputDirectory = outDir.toString,
-        mapper = FnSpec(_.flatMap(_.toLowerCase(java.util.Locale.ROOT).split("\\s+"))
-          .filter(_.nonEmpty).map(w => s"$w\t1")),
-        reducer = FnSpec(Workloads.wcReduceSh),
-        numMappers = 8, numReducers = 8))
-
-      spark.read.text(outDir.toString)
-        .select(split(col("value"), "\t").as("kv"))
+  def mrWordCount(spark: SparkSession, d: String): DataFrame =
+    // mapper = the library's canonical tokenizer (OpsUtil.tokens:
+    // locale-independent lowercase, \s+ split, drop empties — the
+    // oracle contract is SQL lower(), so the mapper must not pick up
+    // the JVM default locale's casing rules); reducer = the
+    // reference's wc_reduce.sh adjacent-key count. Newlines inside a
+    // document only split its text-file lines, which is
+    // token-neutral for a whitespace tokenizer.
+    viaRunner(spark, d, "graft-mrwc",
+      FnSpec(_.flatMap(_.toLowerCase(java.util.Locale.ROOT).split("\\s+"))
+        .filter(_.nonEmpty).map(w => s"$w\t1")),
+      FnSpec(Workloads.wcReduceSh))(
+      _.select(split(col("value"), "\t").as("kv"))
         .select(col("kv").getItem(0).as("word"),
           col("kv").getItem(1).cast("long").as("cnt"))
-        .orderBy("word")
-        .localCheckpoint(true) // |vocab| rows — pin, then drop scratch
-    } finally {
-      deleteRecursively(inDir)
-      deleteRecursively(outDir.toString)
-    }
-  }
+        .orderBy("word"))
+
+  /** Runs one job over the `documents` corpus staged as text lines,
+    * M = R = 8, and returns `readBack` of its output, pinned by an
+    * eager checkpoint (|vocabulary| or |matches| rows) so the scratch
+    * dirs can go at once instead of leaking one pair per run. The
+    * cleanup runs however the job ends; if the job threw, a failed
+    * cleanup is added to that exception as suppressed instead of
+    * replacing it. */
+  private def viaRunner(spark: SparkSession, d: String, prefix: String,
+      mapper: StageSpec, reducer: StageSpec)(
+      readBack: DataFrame => DataFrame): DataFrame =
+    Using.resource(Files.createTempDirectory(prefix)) { root =>
+      val inDir = root.resolve("in").toString
+      val outDir = root.resolve("out").toString // the runner creates it (F9)
+      graft.Tables.documents(spark, d).select(col("text"))
+        .write.mode("overwrite").text(inDir)
+      MapReduceRunner.run(spark, MapReduceJob(
+        inputDirectory = inDir, outputDirectory = outDir,
+        mapper = mapper, reducer = reducer, numMappers = 8, numReducers = 8))
+      readBack(spark.read.text(outDir)).localCheckpoint(true)
+    }(root => OpsUtil.deleteRecursively(root.toString))
 
   /** Space-only edge trim — the EXACT semantics of DuckDB's
     * `trim(line)`: Java `.strip()` (all Unicode whitespace) silently
@@ -104,28 +106,10 @@ object MrQueries {
     * pipe-parity Workloads.grepMap keeps the reference's
     * default-locale .lower() instead, which PipeFidelitySpec pins)
     * and trims spaces only ([[spaceTrim]] = the oracle's trim()). */
-  def mrGrep(spark: SparkSession, d: String): DataFrame = {
-    val inDir = Files.createTempDirectory("graft-mrgrep-in").toString
-    val outDir = Files.createTempDirectory("graft-mrgrep-out")
-    try {
-      graft.Tables.documents(spark, d).select(col("text"))
-        .write.mode("overwrite").text(inDir)
-      Files.delete(outDir)
-      MapReduceRunner.run(spark, MapReduceJob(
-        inputDirectory = inDir,
-        outputDirectory = outDir.toString,
-        mapper = FnSpec(grepStageMapper),
-        reducer = FnSpec(Workloads.grepReduce),
-        numMappers = 8, numReducers = 8))
-      spark.read.text(outDir.toString)
-        .select(col("value").as("line"))
-        .orderBy("line")
-        .localCheckpoint(true) // |matches| rows — pin, then drop scratch
-    } finally {
-      deleteRecursively(inDir)
-      deleteRecursively(outDir.toString)
-    }
-  }
+  def mrGrep(spark: SparkSession, d: String): DataFrame =
+    viaRunner(spark, d, "graft-mrgrep", FnSpec(grepStageMapper),
+      FnSpec(Workloads.grepReduce))(
+      _.select(col("value").as("line")).orderBy("line"))
 
   // Lines are the staged text-file lines (documents split at embedded
   // newlines), space-trimmed (= the mapper's spaceTrim), blanks
@@ -138,14 +122,4 @@ object MrQueries {
       |WHERE line <> '' AND contains(lower(line), 'spark')
       |ORDER BY line""".stripMargin
 
-  private def deleteRecursively(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(Files.walk(root)) { stream =>
-        stream.iterator().asScala.toSeq.reverseIterator
-          .foreach(p => try Files.delete(p) catch { case _: Throwable => () })
-      }
-    }
-  }
 }

@@ -330,11 +330,6 @@ object SimilarityOps {
   // coarse-quantizer path ([[annIvf2]], `sim_ann_ivf2`) takes over —
   // its broadcasts are ⌈√k⌉-bounded, so k can keep growing ∝ corpus
   // (ScaleStressSpec drives it at 1.2M vectors × 67,600 cells).
-  // Centroid coordinates
-  // are means of 1e-6-quantized components summed as BIGINT — exact and
-  // order-independent, so Spark (distributed partial aggregation) and
-  // DuckDB (single-node) build bit-identical centroids and the index is
-  // reproducible anywhere.
   private val IvfCellPop = 32
   private val IvfMinCells = 4
   private val IvfMaxCells = 65536
@@ -352,50 +347,147 @@ object SimilarityOps {
   /** Squared distance via the precomputed norms:
     * (|v|² - 2·v·c) + |c|² — one codegen'd dot per pair. The exact
     * association order is mirrored in the SQL oracle. */
-  private def sqdist2(n2v: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column,
-                      c: org.apache.spark.sql.Column, n2c: org.apache.spark.sql.Column) =
+  private def sqdist2(n2v: Column, v: Column, c: Column, n2c: Column) =
     (n2v - lit(2.0) * dotd(v, c)) + n2c
 
-  /** Nearest-centroid assignment: broadcast the (≤ IvfMaxCells-row)
-    * centroid table against the streaming corpus; ties break to the
-    * lower cell id. */
-  private def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
-    // struct-min argmin, NOT a window (r16 opt, guide §2.3): the old
-    // row_number-over-(vec_id) form shuffled the ENTIRE k-way
-    // cross-join fan-out — k×N rows, each carrying the full vector —
-    // to sort out one winner per vector. The aggregate form collapses
-    // the fan-out map-side (partial min per vec_id before the
-    // exchange), so only N rows cross the wire per assignment pass —
-    // and the IVF build runs this [[IvfRounds]]+1 times. Identical
-    // semantics: min(struct(dist, cell)) = lowest dist, ties to the
-    // lower cell — the [[assignCellsCoarseOn]] pattern (its
-    // SortAggregate note applies here too: the sorts are
-    // partition-local over fan-out-contiguous runs). first(v) is
-    // deterministic: every row in a vec_id group carries the
-    // identical v (cross-join fan-out), it grabs the one value.
-    e.crossJoin(broadcast(cents))
-      .withColumn("dist", sqdist2(col("n2"), col("v"), col("c"), col("cn2")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cell"))).as("p"),
-        first(col("v")).as("nv"))
-      .select(col("vec_id"), col("nv").as("v"), col("p.cell").as("cell"))
+  // ---------------------------------------------------------------
+  // The Lloyd kernel: every k-means-style build below (IVF, two-level
+  // IVF, PQ, k-means) is one MapReduce job per round — the map step
+  // assigns each row to its nearest centroid ([[nearest]]), the reduce
+  // step averages each cell ([[centroidMeans]]) — started from
+  // [[seeds]]. Each has one SQL mirror generator for the oracle.
+  // ---------------------------------------------------------------
 
-  /** New centroids from an assignment: per (cell, dim) an exact BIGINT
-    * sum of 1e-6-quantized components (order-independent across any
-    * partitioning), divided back out as double. */
-  private def recomputeCentroids(assigned: DataFrame): DataFrame = {
-    val dims = assigned
-      .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
-      .groupBy(col("cell"), col("i"))
-      .agg(sum(round(col("x") * QScale).cast("long")).as("sq"),
-        count(lit(1)).as("n"))
-      .select(col("cell"), col("i"),
-        (col("sq").cast("double") / col("n") / QScale).as("cx"))
-    dims.groupBy(col("cell"))
+  /** Nearest centroid, struct-min form: join the centroids (pass
+    * `broadcast(cents)`; `on` empty is a cross join, else an equi-join
+    * on those keys), then per `keys` group keep
+    * min(struct(dist, id)) — lowest distance, ties to the lower id.
+    * The caller owns the distance expression (and so its rounding).
+    *
+    * An aggregate, not a window: a row_number window shuffles and
+    * sorts the whole ×k candidate fan-out, vectors included, while the
+    * aggregate's map-side partial leaves one row per key before the
+    * exchange. min(struct) plans as a SortAggregate (struct buffers
+    * aren't hash-aggregable), but its sorts are partition-local over
+    * the join's key-contiguous runs. `first` over each `carry` column
+    * is deterministic: every row of a key group carries the identical
+    * value (the group fans out only over candidate centroids).
+    * Output: keys, carry, `id`, `dist`. */
+  private[ops] def nearest(rows: DataFrame, cents: DataFrame, on: Seq[String],
+      keys: Seq[String], carry: Seq[String], dist: Column, id: String): DataFrame =
+    (if (on.isEmpty) rows.crossJoin(cents) else rows.join(cents, on))
+      .withColumn("dist", dist)
+      .groupBy(keys.map(col): _*)
+      .agg(min(struct(col("dist"), col(id))).as("p"),
+        carry.map(c => first(col(c)).as(c)): _*)
+      .select(keys.map(col) ++ carry.map(col) ++
+        Seq(col(s"p.$id").as(id), col("p.dist").as("dist")): _*)
+
+  /** Nearest centroid, literal form: the centroids are driver-side
+    * (id, array) pairs, so each row's candidate (dist, id) structs
+    * ([[candidates]]) are plain codegen'd projections and the argmin
+    * is their `least` — map-only, no join and no shuffle at any corpus
+    * size. The same rule as the struct-min form: `least` on structs is
+    * lexicographic, so lowest distance, ties to the lower id.
+    * Output: carry, `id`, `dist`. */
+  private[ops] def nearest(rows: DataFrame, cents: Seq[(Long, Seq[Double])],
+      carry: Seq[String], dist: Column => Column, id: String): DataFrame = {
+    val ds = candidates(cents, dist, id)
+    val p = if (ds.size == 1) ds.head else least(ds: _*)
+    rows.select(carry.map(col) :+ p.as("p"): _*)
+      .select(carry.map(col) ++ Seq(col(s"p.$id").as(id), col("p.dist").as("dist")): _*)
+  }
+
+  /** One struct(dist, id) column per literal centroid; ids are
+    * distinct, so two whole structs never tie. */
+  private def candidates(cents: Seq[(Long, Seq[Double])], dist: Column => Column,
+      id: String): Seq[Column] =
+    cents.map { case (i, c) =>
+      struct(dist(array(c.map(lit): _*)).as("dist"), lit(i).as(id))
+    }
+
+  /** Centroid mean — the reduce step: explode each assigned row's
+    * `v` array, average per (keys, dim) under `mean` (both rules below
+    * are order-independent, so the distributed partial aggregation is
+    * deterministic), re-gather each centroid's array `c` in dim order
+    * and add its squared norm `n2`. Never a per-cluster array fold on
+    * one node. */
+  private[ops] def centroidMeans(assigned: DataFrame, keys: Seq[String], v: String,
+      mean: Column => Column, n2: String): DataFrame = {
+    val ks = keys.map(col)
+    assigned.select(ks :+ posexplode(col(v)).as(Seq("i", "x")): _*)
+      .groupBy(ks :+ col("i"): _*)
+      .agg(mean(col("x")).as("cx"))
+      .groupBy(ks: _*)
       .agg(transform(array_sort(collect_list(struct(col("i"), col("cx")))),
         s => s.getField("cx")).as("c"))
-      .withColumn("cn2", norm2(col("c")))
+      .withColumn(n2, norm2(col("c")))
   }
+
+  /** Mean rule of the IVF and PQ builds: an exact BIGINT sum of
+    * 1e-6-quantized components, divided back out as double — exact and
+    * order-independent, so Spark (distributed partial aggregation) and
+    * DuckDB (single-node) build bit-identical centroids and the index
+    * is reproducible anywhere. */
+  private[ops] def quantizedMean(x: Column): Column =
+    sum(round(x * QScale).cast("long")).cast("double") / count(lit(1)) / QScale
+
+  /** Seeds: the first k rows of `rows` in `order`, numbered `id` = 0,
+    * 1, … in that order. An ordered limit — a distributed top-k, never
+    * a corpus-wide window: the unpartitioned row_number runs over the
+    * limit's rows only. `k` is a literal (the limit itself) or a
+    * one-row count frame; a counted k is capped at [[IvfMaxCells]] and
+    * the numbering is filtered against the broadcast count. */
+  private def seeds(rows: DataFrame, order: Seq[Column], k: Either[Int, DataFrame],
+      id: String): DataFrame = {
+    val numbered = rows.orderBy(order: _*).limit(k.fold(identity, _ => IvfMaxCells))
+      .withColumn(id, row_number().over(Window.orderBy(order: _*)) - 1)
+    k.fold(_ => numbered, kf => numbered.crossJoin(broadcast(kf))
+      .where(col(id) < col(kf.columns.head)).drop(kf.columns.head))
+  }
+
+  /** The SQL mirror of a counted [[seeds]]: the first rows of `from`
+    * in `order` (capped at [[IvfMaxCells]]), numbered `id` from 0 and
+    * kept below the count the scalar query `k` returns. */
+  private def seedsCte(name: String, id: String, cols: String, from: String,
+      order: String, k: String): String =
+    s"""$name AS (
+       |  SELECT * FROM (
+       |    SELECT row_number() OVER (ORDER BY $order) - 1 AS $id, $cols
+       |    FROM (SELECT * FROM $from ORDER BY $order LIMIT $IvfMaxCells))
+       |  WHERE $id < ($k))""".stripMargin
+
+  /** The SQL mirror of [[nearest]], and of the top-n routes: per
+    * `part` group, the rows of `from` ranked ≤ n by (dist, id) —
+    * row_number ordered by distance, ties to the lower id. Output:
+    * `sel`'s columns, `dist` and the rank `rn`. */
+  private def nearestCte(name: String, sel: String, dist: String, part: String,
+      id: String, from: String, n: Int, materialized: Boolean = false): String =
+    s"""$name AS${if (materialized) " MATERIALIZED" else ""} (
+       |  SELECT * FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY $part ORDER BY dist, $id) AS rn
+       |    FROM (SELECT $sel, $dist AS dist FROM $from)) WHERE rn <= $n)""".stripMargin
+
+  /** The SQL mirror of [[centroidMeans]]: per (keys, dim) the `mean`
+    * of the exploded `v` arrays of `from`, re-gathered in dim order
+    * into `c`, plus its squared norm `n2`. */
+  private def meansCte(name: String, keys: String, v: String, mean: String => String,
+      n2: String, from: String, materialized: Boolean = false): String =
+    s"""$name AS${if (materialized) " MATERIALIZED" else ""} (
+       |  SELECT *, ${norm2Sql("c")} AS $n2 FROM (
+       |    SELECT $keys, list(cx ORDER BY i) AS c FROM (
+       |      SELECT $keys, i, ${mean("x")} AS cx FROM (
+       |        SELECT $keys, unnest(range(1, len($v) + 1)) AS i, unnest($v) AS x
+       |        FROM $from)
+       |      GROUP BY $keys, i)
+       |    GROUP BY $keys))""".stripMargin
+
+  private def quantizedMeanSql(x: String): String =
+    s"CAST(SUM(CAST(round($x * 1000000.0) AS BIGINT)) AS DOUBLE) / COUNT(*) / 1000000.0"
+
+  private def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
+    nearest(e, broadcast(cents), Nil, Seq("vec_id"), Seq("v"),
+      sqdist2(col("n2"), col("v"), col("c"), col("cn2")), "cell")
 
   /** 1-row (k) table: the corpus-proportional cell count, computed as
     * a plan-side count aggregate so the build stays a lazy DataFrame.
@@ -407,11 +499,9 @@ object SimilarityOps {
 
   /** IVF index build — the one-off indexing step, as a plain lazy
     * DataFrame: seeds are the k lowest xhash60(vec_id) vectors
-    * (deterministic on any cluster; k ∝ corpus via [[ivfK]], taken by
-    * capping at [[IvfMaxCells]] with an ordered limit — a distributed
-    * top-k, never a corpus-wide window — then filtering to the first k
-    * against the broadcast 1-row count), refined by [[IvfRounds]]
-    * Lloyd's iterations expressed entirely as joins + aggregations.
+    * (deterministic on any cluster; k ∝ corpus via [[ivfK]]), refined
+    * by [[IvfRounds]] Lloyd's iterations expressed entirely as joins +
+    * aggregations.
     * No MLlib fit, no driver-side action — at 100 TB this runs as an
     * ordinary distributed job and the (tiny) result is persisted once
     * and broadcast to every probe. */
@@ -427,26 +517,13 @@ object SimilarityOps {
     val hashed = SharedBuild.frame(spark, "ivf-corpus", d)(
       corpus(spark, d).withColumn("hk", xhash60(col("vec_id").cast("string"), 7)).persist())
     val e = hashed.drop("hk")
-    val seedW = Window.orderBy(col("hk"), col("vec_id")) // ≤ IvfMaxCells rows
-    var cents = hashed.orderBy(col("hk"), col("vec_id")).limit(IvfMaxCells)
-      .select((row_number().over(seedW) - 1).as("cell"),
-        col("v").as("c"), col("n2").as("cn2"))
-      .crossJoin(broadcast(ivfK(e)))
-      .where(col("cell") < col("k"))
-      .select(col("cell"), col("c"), col("cn2"))
+    var cents = seeds(hashed, Seq(col("hk"), col("vec_id")), Right(ivfK(e)), "cell")
+      .select(col("cell"), col("v").as("c"), col("n2").as("cn2"))
     for (_ <- 1 to IvfRounds)
-      cents = recomputeCentroids(assignCells(e, cents))
+      cents = centroidMeans(assignCells(e, cents), Seq("cell"), "v", quantizedMean, "cn2")
     cents
   }
 
-  /** IVF (inverted-file) ANN probe: route each query (vec_id < 10) to
-    * its [[IvfProbe]] nearest cells via a broadcast centroid join +
-    * row_number ≤ nprobe — no collect, no driver loop — then rank
-    * candidates within the probed cells only (nprobe/k of the corpus).
-    * Build and probe are split ([[annIvfCentroids]] is the index); the
-    * deterministic quantized build means the DuckDB oracle replays the
-    * identical index, so this approximate operator is hash-checked
-    * end-to-end. */
   // One persisted centroid table per (session, sf-dir) in the
   // [[SharedBuild]] registry: repeat annIvf calls on the same data reuse
   // the SAME k-row entry instead of accumulating a fresh persist per
@@ -456,6 +533,14 @@ object SimilarityOps {
   private def cachedCentroids(spark: SparkSession, d: String): DataFrame =
     SharedBuild.frame(spark, "ivf", d)(annIvfCentroids(spark, d).persist())
 
+  /** IVF (inverted-file) ANN probe: route each query (vec_id < 10) to
+    * its [[IvfProbe]] nearest cells via a broadcast centroid join +
+    * row_number ≤ nprobe — no collect, no driver loop — then rank
+    * candidates within the probed cells only (nprobe/k of the corpus).
+    * Build and probe are split ([[annIvfCentroids]] is the index); the
+    * deterministic quantized build means the DuckDB oracle replays the
+    * identical index, so this approximate operator is hash-checked
+    * end-to-end. */
   def annIvf(spark: SparkSession, d: String): DataFrame =
     annIvfProbe(spark, d, cachedCentroids(spark, d))
 
@@ -496,19 +581,21 @@ object SimilarityOps {
     * once by an indexing job and every probe job just broadcasts it. */
   def annIvfProbe(spark: SparkSession, d: String, centroids: DataFrame): DataFrame = {
     val e = corpus(spark, d)
-    val cents = centroids
-    val members = assignCells(e, cents)
-      .select(col("cell"), col("vec_id").as("nid"), col("v").as("nv"))
+    ivfTop3(e, assignCells(e, centroids), q => nearestN(q.crossJoin(broadcast(centroids)),
+      sqdist2(col("qn2"), col("qv"), col("c"), col("cn2")), "cell", IvfProbe))
+  }
+
+  /** The probe side of both IVF variants: the queries (vec_id < 10)
+    * of `e`, routed by `probe` to (qid, cell) pairs, then the top-3
+    * cosine neighbours per query among those cells' members of the
+    * `assigned` corpus. */
+  private def ivfTop3(e: DataFrame, assigned: DataFrame,
+      probe: DataFrame => DataFrame): DataFrame = {
+    val members = assigned.select(col("cell"), col("vec_id").as("nid"), col("v").as("nv"))
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("n2").as("qn2"))
-    val wp = Window.partitionBy(col("qid")).orderBy(col("dist"), col("cell"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("dist", sqdist2(col("qn2"), col("qv"), col("c"), col("cn2")))
-      .withColumn("rn", row_number().over(wp))
-      .where(col("rn") <= IvfProbe)
-      .select(col("qid"), col("cell"))
     val wr = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid"))
-    probes.join(members, Seq("cell"))
+    probe(q).join(members, Seq("cell"))
       .join(broadcast(q.select(col("qid"), col("qv"))), Seq("qid"))
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), cosine9(col("qv"), col("nv")).as("cos_sim"))
@@ -516,6 +603,16 @@ object SimilarityOps {
       .where(col("rank") <= 3)
       .orderBy("qid", "rank")
   }
+
+  /** The n nearest centroids `id` per query: a row_number window, not
+    * the [[nearest]] aggregate, since the query side is a handful of
+    * rows and n > 1. */
+  private def nearestN(joined: DataFrame, dist: Column, id: String, n: Int): DataFrame =
+    joined.withColumn("dist", dist)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("dist"), col(id))))
+      .where(col("rn") <= n)
+      .select(col("qid"), col(id))
 
   // ---------------------------------------------------------------
   // sim_ann_ivf2: two-level (coarse-quantized) IVF — the >65,536-cell
@@ -541,76 +638,39 @@ object SimilarityOps {
     * cluster representative; re-running Lloyd's over representatives
     * buys little and doubles the SQL replay). Deterministic on any
     * cluster, so the DuckDB oracle rebuilds the identical level. */
-  private[ops] def coarseCentroids(cents: DataFrame): DataFrame = {
-    val hashed = cents.withColumn("hk",
-      xhash60(col("cell").cast("string"), Ivf2HashSeed))
-    val w = Window.orderBy(col("hk"), col("cell")) // ≤ IvfMaxCells rows
-    hashed.orderBy(col("hk"), col("cell")).limit(IvfMaxCells)
-      .select((row_number().over(w) - 1).as("ccell"),
-        col("c").as("cc"), col("cn2").as("ccn2"))
-      .crossJoin(broadcast(coarseK(cents)))
-      .where(col("ccell") < col("kc"))
-      .select(col("ccell"), col("cc"), col("ccn2"))
-  }
+  private[ops] def coarseCentroids(cents: DataFrame): DataFrame =
+    seeds(cents.withColumn("hk", xhash60(col("cell").cast("string"), Ivf2HashSeed)),
+      Seq(col("hk"), col("cell")), Right(coarseK(cents)), "ccell")
+      .select(col("ccell"), col("c").as("cc"), col("cn2").as("ccn2"))
 
-  /** Fine→coarse map (k rows): each fine centroid assigned to its
-    * nearest coarse cell (ties to the lower ccell) via an exact
-    * struct-min aggregation. min(struct) plans as a SortAggregate
-    * (struct buffers aren't hash-aggregable) — but the sorts are
-    * PARTITION-LOCAL over the join's already-key-contiguous runs, and
-    * the partial/final split means the shuffle carries one partial
-    * row per key, never the ×kc candidate fan-out a window would
-    * shuffle whole. */
+  /** Fine→coarse map (k rows): each fine centroid with its nearest
+    * coarse cell. */
   private def fineToCoarse(cents: DataFrame, coarse: DataFrame): DataFrame =
-    cents.crossJoin(broadcast(coarse))
-      .withColumn("cdist", sqdist2(col("cn2"), col("c"), col("cc"), col("ccn2")))
-      .groupBy(col("cell"))
-      .agg(min(struct(col("cdist"), col("ccell"))).as("p"),
-        first(col("c")).as("c"), first(col("cn2")).as("cn2"))
-      .select(col("p.ccell").as("ccell"), col("cell"), col("c"), col("cn2"))
+    nearest(cents, broadcast(coarse), Nil, Seq("cell"), Seq("c", "cn2"),
+      sqdist2(col("cn2"), col("c"), col("cc"), col("ccn2")), "ccell").drop("dist")
 
   /** Two-level fine-cell assignment: route each row to its nearest
     * coarse cell (broadcast is kc ≈ √k rows — NEVER the k-row fine
     * table, which reaches the row via an equi-join on the coarse id),
-    * then pick the nearest fine centroid within that coarse group.
-    * Both argmins are struct-min aggregations (lexicographic
-    * (dist, cell): nearest, ties to the lower id) with map-side
-    * partials — the ×kc/×group candidate fan-out dies in the partial
-    * stage and only one partial row per vector shuffles; a window
-    * would shuffle and globally sort the full fan-out. `first(v)` is
-    * deterministic here: every row in a vec_id group carries the same
-    * vector. */
+    * then pick the nearest fine centroid within that coarse group. */
   private[ops] def assignCellsCoarse(e: DataFrame, cents: DataFrame): DataFrame = {
     val coarse = coarseCentroids(cents)
     assignCellsCoarseOn(e, coarse, fineToCoarse(cents, coarse))
   }
 
   /** [[assignCellsCoarse]] against PREBUILT coarse/f2c tables, so a
-    * caller that also routes queries ([[annIvf2OnCorpus]]) shares one
+    * caller that also routes queries ([[annIvf2]]) shares one
     * coarse-level sub-plan instead of re-deriving it per consumer. */
   private def assignCellsCoarseOn(e: DataFrame, coarse: DataFrame,
       f2c: DataFrame): DataFrame = {
-    val routed = e.crossJoin(broadcast(coarse))
-      .withColumn("cdist", sqdist2(col("n2"), col("v"), col("cc"), col("ccn2")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("cdist"), col("ccell"))).as("p"),
-        first(col("v")).as("v"), first(col("n2")).as("n2"))
-      .select(col("vec_id"), col("v"), col("n2"), col("p.ccell").as("ccell"))
-    routed.join(f2c, Seq("ccell"))
-      .withColumn("dist", sqdist2(col("n2"), col("v"), col("c"), col("cn2")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cell"))).as("p"),
-        first(col("v")).as("nv"))
-      .select(col("vec_id"), col("nv").as("v"), col("p.cell").as("cell"))
+    val routed = nearest(e, broadcast(coarse), Nil, Seq("vec_id"), Seq("v", "n2"),
+      sqdist2(col("n2"), col("v"), col("cc"), col("ccn2")), "ccell").drop("dist")
+    nearest(routed, f2c, Seq("ccell"), Seq("vec_id"), Seq("v"),
+      sqdist2(col("n2"), col("v"), col("c"), col("cn2")), "cell")
   }
 
-  def annIvf2(spark: SparkSession, d: String): DataFrame =
-    annIvf2OnCorpus(corpus(spark, d), cachedCentroids(spark, d))
-
-  /** Two-level IVF probe over an arbitrary (vec_id, v, n2) corpus and
-    * fine-centroid table — the testable core ([[annIvf2]] feeds it the
-    * session-cached [[annIvfCentroids]] index, the same cache
-    * `dedup_semantic`/`sim_ann_ivf` share).
+  /** Two-level IVF probe over the session-cached [[annIvfCentroids]]
+    * index, the same cache `dedup_semantic`/`sim_ann_ivf` share.
     *
     * Scale shape vs [[annIvfProbe]]: the flat probe broadcasts ALL k
     * fine centroids — fine under the [[IvfMaxCells]] ceiling, a
@@ -620,51 +680,34 @@ object SimilarityOps {
     * group via equi-join. k can grow ∝ corpus indefinitely (4B cells
     * ⇒ kc = 65,536 ⇒ a ≈34 MB coarse broadcast — the old ceiling,
     * now the square of the reachable scale). */
-  private[ops] def annIvf2OnCorpus(e: DataFrame, cents: DataFrame): DataFrame = {
+  def annIvf2(spark: SparkSession, d: String): DataFrame = {
+    val e = corpus(spark, d)
+    val cents = cachedCentroids(spark, d)
     // ONE coarse level + fine→coarse map (tiny: kc and k rows), lazily
     // checkpointed so member assignment and query routing read blocks
     // instead of each re-running the seed-select + argmin sub-plans
     val coarse = coarseCentroids(cents).localCheckpoint(false)
     val f2c = fineToCoarse(cents, coarse).localCheckpoint(false)
-    val members = assignCellsCoarseOn(e, coarse, f2c)
-      .select(col("cell"), col("vec_id").as("nid"), col("v").as("nv"))
-    val q = e.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("n2").as("qn2"))
     // query routing: beam Ivf2CoarseProbe coarse cells, then the
-    // IvfProbe nearest fine cells among those groups (windows — the
-    // query side is a handful of rows)
-    val wq = Window.partitionBy(col("qid")).orderBy(col("cdist"), col("ccell"))
-    val qroute = q.crossJoin(broadcast(coarse))
-      .withColumn("cdist", sqdist2(col("qn2"), col("qv"), col("cc"), col("ccn2")))
-      .withColumn("rn", row_number().over(wq))
-      .where(col("rn") <= Ivf2CoarseProbe)
-      .select(col("qid"), col("ccell"))
-    val wf = Window.partitionBy(col("qid")).orderBy(col("dist"), col("cell"))
-    val qprobe = q.join(qroute, Seq("qid")).join(f2c, Seq("ccell"))
-      .withColumn("dist", sqdist2(col("qn2"), col("qv"), col("c"), col("cn2")))
-      .withColumn("rn", row_number().over(wf))
-      .where(col("rn") <= IvfProbe)
-      .select(col("qid"), col("cell"))
-    val wr = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid"))
-    qprobe.join(members, Seq("cell"))
-      .join(broadcast(q.select(col("qid"), col("qv"))), Seq("qid"))
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), cosine9(col("qv"), col("nv")).as("cos_sim"))
-      .withColumn("rank", row_number().over(wr))
-      .where(col("rank") <= 3)
-      .orderBy("qid", "rank")
+    // IvfProbe nearest fine cells among those groups
+    ivfTop3(e, assignCellsCoarseOn(e, coarse, f2c), q => {
+      val qroute = nearestN(q.crossJoin(broadcast(coarse)),
+        sqdist2(col("qn2"), col("qv"), col("cc"), col("ccn2")), "ccell", Ivf2CoarseProbe)
+      nearestN(q.join(qroute, Seq("qid")).join(f2c, Seq("ccell")),
+        sqdist2(col("qn2"), col("qv"), col("c"), col("cn2")), "cell", IvfProbe)
+    })
   }
 
+  /** Squared distance, the SQL mirror of [[sqdist2]]: the same
+    * association order over the same sequential dot. */
   private def distSql(n2v: String, v: String, c: String, n2c: String) =
-    s"($n2v - 2.0 * list_sum(list_transform(range(1, $Dim + 1), i -> $v[i] * $c[i]))) + $n2c"
+    s"($n2v - 2.0 * list_sum(list_transform(range(1, len($v) + 1), i -> $v[i] * $c[i]))) + $n2c"
+
+  private def norm2Sql(v: String) = s"list_sum(list_transform($v, x -> x*x))"
 
   private def assignCteSql(name: String, cents: String) =
-    s"""$name AS (
-       |  SELECT vec_id, v, cell FROM (
-       |    SELECT e.vec_id, e.v, c.cell,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${distSql("e.n2", "e.v", "c.c", "c.cn2")}, c.cell) AS rn
-       |    FROM e CROSS JOIN $cents c) WHERE rn = 1)""".stripMargin
+    nearestCte(name, "e.vec_id, e.v, c.cell", distSql("e.n2", "e.v", "c.c", "c.cn2"),
+      "vec_id", "cell", s"e CROSS JOIN $cents c", 1)
 
   /** Shared oracle CTE chain: embeddings scan → deterministic seeds →
     * [[IvfRounds]] Lloyd's rounds → final cell assignment `af`
@@ -680,51 +723,37 @@ object SimilarityOps {
     * above and the two-level [[annIvf2Sql]], which assigns through
     * its own coarse level instead of `af`. */
   private def ivfCentroidCtesSql: String = {
-    def recomputeCte(mName: String, cName: String, assigned: String) =
-      s"""$mName AS (
-         |  SELECT cell, i.i AS i,
-         |    CAST(SUM(CAST(round(v[i.i] * 1000000.0) AS BIGINT)) AS DOUBLE)
-         |      / COUNT(*) / 1000000.0 AS cx
-         |  FROM $assigned CROSS JOIN (SELECT unnest(range(1, $Dim + 1)) AS i) i
-         |  GROUP BY cell, i.i),
-         |$cName AS (
-         |  SELECT cell, c, list_sum(list_transform(c, x -> x*x)) AS cn2
-         |  FROM (SELECT cell, list(cx ORDER BY i) AS c FROM $mName GROUP BY cell))""".stripMargin
     val rounds = (1 to IvfRounds).map { r =>
-      assignCteSql(s"a$r", s"c${r - 1}") + ",\n" + recomputeCte(s"m$r", s"c$r", s"a$r")
+      assignCteSql(s"a$r", s"c${r - 1}") + ",\n" +
+        meansCte(s"c$r", "cell", "v", quantizedMeanSql, "cn2", s"a$r")
     }.mkString(",\n")
     s"""e AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x)) AS n2
+       |    ${norm2Sql("CAST(embedding AS DOUBLE[])")} AS n2
        |  FROM embeddings),
-       |hashed AS (SELECT vec_id, v, n2,
-       |    ${xhash60Sql("CAST(vec_id AS VARCHAR)", 7)} AS hk FROM e),
-       |kk AS (
-       |  SELECT GREATEST($IvfMinCells, LEAST($IvfMaxCells,
-       |    CAST(ceil(COUNT(*) / ${IvfCellPop}.0) AS BIGINT))) AS k FROM e),
-       |c0 AS (
-       |  SELECT cell, c, cn2 FROM (
-       |    SELECT row_number() OVER (ORDER BY hk, vec_id) - 1 AS cell, v AS c, n2 AS cn2
-       |    FROM (SELECT * FROM hashed ORDER BY hk, vec_id LIMIT $IvfMaxCells)) s, kk
-       |  WHERE s.cell < kk.k),
+       |${seedsCte("c0", "cell", "v AS c, n2 AS cn2",
+         s"(SELECT *, ${xhash60Sql("CAST(vec_id AS VARCHAR)", 7)} AS hk FROM e)", "hk, vec_id",
+         s"SELECT GREATEST($IvfMinCells, LEAST($IvfMaxCells, " +
+           s"CAST(ceil(COUNT(*) / ${IvfCellPop}.0) AS BIGINT))) FROM e")},
        |$rounds""".stripMargin
   }
 
   /** DuckDB mirror of [[annIvf]]: replays the identical seed order,
     * Lloyd's rounds (same quantized sums, same division order) and
     * probe routing as chained CTEs. */
-  def annIvfSql: String = {
-    def dist(n2v: String, v: String, c: String, n2c: String) =
-      distSql(n2v, v, c, n2c)
+  def annIvfSql: String =
     s"""WITH $ivfIndexCtesSql,
-       |members AS (SELECT cell, vec_id AS nid, v AS nv FROM af),
+       |${ivfTop3Sql("af", nearestCte("probes", "q.qid, c.cell",
+         distSql("q.qn2", "q.qv", "c.c", "c.cn2"), "qid", "cell",
+         s"qs q CROSS JOIN c$IvfRounds c", IvfProbe))}""".stripMargin
+
+  /** The SQL mirror of [[ivfTop3]]: the queries `qs`, the caller's
+    * route CTEs ending in `probes` (qid, cell), then the top-3 cosine
+    * ranking over the probed cells' members of `assigned`. */
+  private def ivfTop3Sql(assigned: String, routes: String): String =
+    s"""members AS (SELECT cell, vec_id AS nid, v AS nv FROM $assigned),
        |qs AS (SELECT vec_id AS qid, v AS qv, n2 AS qn2 FROM e WHERE vec_id < 10),
-       |probes AS (
-       |  SELECT qid, cell FROM (
-       |    SELECT q.qid, c.cell,
-       |      row_number() OVER (PARTITION BY q.qid
-       |        ORDER BY ${dist("q.qn2", "q.qv", "c.c", "c.cn2")}, c.cell) AS rn
-       |    FROM qs q CROSS JOIN c$IvfRounds c) WHERE rn <= $IvfProbe),
+       |$routes,
        |scored AS (
        |  SELECT p.qid, m.nid, ${cosine9Sql("q.qv", "m.nv")} AS cos_sim
        |  FROM probes p
@@ -735,6 +764,24 @@ object SimilarityOps {
        |    row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, nid) AS rank
        |  FROM scored)
        |SELECT qid, nid, cos_sim, rank FROM ranked WHERE rank <= 3 ORDER BY qid, rank""".stripMargin
+
+  /** The coarse-level CTE chain shared by [[annIvf2Sql]] and
+    * [[dedupSemantic2Sql]]: coarse seeds over the fine centroids,
+    * fine→coarse map, beam-1 corpus routing, and `af2` — the
+    * two-level (vec_id, v, cell) assignment. */
+  private def ivf2CoarseCtesSql: String = {
+    val cF = s"c$IvfRounds"
+    s"""${seedsCte("coarse", "ccell", "c AS cc, cn2 AS ccn2",
+         s"(SELECT *, ${xhash60Sql("CAST(cell AS VARCHAR)", Ivf2HashSeed)} AS hk FROM $cF)",
+         "hk, cell", s"SELECT GREATEST(1, CAST(ceil(sqrt(COUNT(*))) AS BIGINT)) FROM $cF")},
+       |${nearestCte("f2c", "x.ccell, f.cell, f.c, f.cn2",
+         distSql("f.cn2", "f.c", "x.cc", "x.ccn2"), "cell", "ccell",
+         s"$cF f CROSS JOIN coarse x", 1)},
+       |${nearestCte("vroute", "e.vec_id, e.v, e.n2, x.ccell",
+         distSql("e.n2", "e.v", "x.cc", "x.ccn2"), "vec_id", "ccell",
+         "e CROSS JOIN coarse x", 1)},
+       |${nearestCte("af2", "r.vec_id, r.v, f.cell", distSql("r.n2", "r.v", "f.c", "f.cn2"),
+         "vec_id", "cell", "vroute r JOIN f2c f USING (ccell)", 1)}""".stripMargin
   }
 
   /** DuckDB mirror of [[annIvf2]]: the shared centroid-build CTEs,
@@ -743,74 +790,14 @@ object SimilarityOps {
     * query routing and ranking — step-for-step the Spark plan, with
     * every argmin expressed as a row_number window (≡ the Spark
     * side's struct-min aggregation: nearest, ties to the lower id). */
-  /** The coarse-level CTE chain shared by [[annIvf2Sql]] and
-    * [[dedupSemantic2Sql]]: coarse seeds over the fine centroids,
-    * fine→coarse map, beam-1 corpus routing, and `af2` — the
-    * two-level (vec_id, v, cell) assignment. */
-  private def ivf2CoarseCtesSql: String = {
-    def dist(n2v: String, v: String, c: String, n2c: String) =
-      distSql(n2v, v, c, n2c)
-    val cF = s"c$IvfRounds"
-    s"""kcq AS (SELECT GREATEST(1, CAST(ceil(sqrt(COUNT(*))) AS BIGINT)) AS kc FROM $cF),
-       |chash AS (SELECT cell, c, cn2,
-       |    ${xhash60Sql("CAST(cell AS VARCHAR)", Ivf2HashSeed)} AS hk FROM $cF),
-       |coarse AS (
-       |  SELECT ccell, cc, ccn2 FROM (
-       |    SELECT row_number() OVER (ORDER BY hk, cell) - 1 AS ccell,
-       |      c AS cc, cn2 AS ccn2
-       |    FROM (SELECT * FROM chash ORDER BY hk, cell LIMIT $IvfMaxCells)) s, kcq
-       |  WHERE s.ccell < kcq.kc),
-       |f2c AS (
-       |  SELECT ccell, cell, c, cn2 FROM (
-       |    SELECT x.ccell, f.cell, f.c, f.cn2,
-       |      row_number() OVER (PARTITION BY f.cell
-       |        ORDER BY ${dist("f.cn2", "f.c", "x.cc", "x.ccn2")}, x.ccell) AS rn
-       |    FROM $cF f CROSS JOIN coarse x) WHERE rn = 1),
-       |vroute AS (
-       |  SELECT vec_id, v, n2, ccell FROM (
-       |    SELECT e.vec_id, e.v, e.n2, x.ccell,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${dist("e.n2", "e.v", "x.cc", "x.ccn2")}, x.ccell) AS rn
-       |    FROM e CROSS JOIN coarse x) WHERE rn = 1),
-       |af2 AS (
-       |  SELECT vec_id, v, cell FROM (
-       |    SELECT r.vec_id, r.v, f.cell,
-       |      row_number() OVER (PARTITION BY r.vec_id
-       |        ORDER BY ${dist("r.n2", "r.v", "f.c", "f.cn2")}, f.cell) AS rn
-       |    FROM vroute r JOIN f2c f USING (ccell)) WHERE rn = 1)""".stripMargin
-  }
-
-  def annIvf2Sql: String = {
-    def dist(n2v: String, v: String, c: String, n2c: String) =
-      distSql(n2v, v, c, n2c)
+  def annIvf2Sql: String =
     s"""WITH $ivfCentroidCtesSql,
        |$ivf2CoarseCtesSql,
-       |members AS (SELECT cell, vec_id AS nid, v AS nv FROM af2),
-       |qs AS (SELECT vec_id AS qid, v AS qv, n2 AS qn2 FROM e WHERE vec_id < 10),
-       |qroute AS (
-       |  SELECT qid, ccell FROM (
-       |    SELECT q.qid, x.ccell,
-       |      row_number() OVER (PARTITION BY q.qid
-       |        ORDER BY ${dist("q.qn2", "q.qv", "x.cc", "x.ccn2")}, x.ccell) AS rn
-       |    FROM qs q CROSS JOIN coarse x) WHERE rn <= $Ivf2CoarseProbe),
-       |qprobe AS (
-       |  SELECT qid, cell FROM (
-       |    SELECT q.qid, f.cell,
-       |      row_number() OVER (PARTITION BY q.qid
-       |        ORDER BY ${dist("q.qn2", "q.qv", "f.c", "f.cn2")}, f.cell) AS rn
-       |    FROM qs q JOIN qroute r USING (qid) JOIN f2c f USING (ccell)
-       |  ) WHERE rn <= $IvfProbe),
-       |scored AS (
-       |  SELECT p.qid, m.nid, ${cosine9Sql("q.qv", "m.nv")} AS cos_sim
-       |  FROM qprobe p
-       |  JOIN members m USING (cell)
-       |  JOIN qs q ON q.qid = p.qid
-       |  WHERE p.qid <> m.nid),
-       |ranked AS (SELECT qid, nid, cos_sim,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, nid) AS rank
-       |  FROM scored)
-       |SELECT qid, nid, cos_sim, rank FROM ranked WHERE rank <= 3 ORDER BY qid, rank""".stripMargin
-  }
+       |${ivfTop3Sql("af2",
+         nearestCte("qroute", "q.qid, x.ccell", distSql("q.qn2", "q.qv", "x.cc", "x.ccn2"),
+           "qid", "ccell", "qs q CROSS JOIN coarse x", Ivf2CoarseProbe) + ",\n" +
+         nearestCte("probes", "q.qid, f.cell", distSql("q.qn2", "q.qv", "f.c", "f.cn2"),
+           "qid", "cell", "qs q JOIN qroute r USING (qid) JOIN f2c f USING (ccell)", IvfProbe))}""".stripMargin
 
   // ---------------------------------------------------------------
   // dedup_semantic: SemDeDup-style cluster-bounded embedding dedup
@@ -837,14 +824,7 @@ object SimilarityOps {
     * web scale. The join is a cell-key equi-join (no global cross
     * join); the cosine is one codegen'd dot per pair. */
   def dedupSemantic(spark: SparkSession, d: String): DataFrame =
-    dedupSemanticOn(spark, d, cachedCentroids(spark, d))
-
-  /** [[dedupSemantic]] against an explicit centroid table — the
-    * bisection hook (lets tooling time the assign+pairwise body
-    * separately from the shared index build). */
-  private[graft] def dedupSemanticOn(spark: SparkSession, d: String,
-      cents: DataFrame): DataFrame =
-    semanticOn(assignCells(corpus(spark, d), cents)
+    semanticOn(assignCells(corpus(spark, d), cachedCentroids(spark, d))
       .select(col("cell"), col("vec_id"), col("v")))
 
   /** `dedup_semantic2`: SemDeDup through the TWO-LEVEL assignment —
@@ -1018,50 +998,18 @@ object SimilarityOps {
       .withColumn("n2s", norm2(col("sv")))
 
   /** Deterministic seeds: the [[PqK]] lowest vec_ids contribute their
-    * m-th subvector as code k of subspace m (a distributed ordered
-    * limit, never a corpus window). */
-  private def pqSeeds(sub: DataFrame, e: DataFrame): DataFrame = {
-    val w = Window.orderBy(col("vec_id"))
-    val ids = e.select(col("vec_id")).orderBy(col("vec_id")).limit(PqK)
-      .select(col("vec_id"), (row_number().over(w) - 1).as("k"))
-    sub.join(broadcast(ids), Seq("vec_id"))
+    * m-th subvector as code k of subspace m. */
+  private def pqSeeds(sub: DataFrame, e: DataFrame): DataFrame =
+    sub.join(broadcast(seeds(e.select(col("vec_id")), Seq(col("vec_id")), Left(PqK), "k")),
+        Seq("vec_id"))
       .select(col("m"), col("k"), col("sv").as("c"))
       .withColumn("n2c", norm2(col("c")))
-  }
 
-  /** Nearest-code assignment per (vector, subspace): broadcast the
-    * (≤ PqM·PqK-row) codebook, one codegen'd dot per candidate,
-    * deterministic argmin (rounded distance, ties to lower k). Keeps
-    * sv so [[pqRecompute]] can consume the result directly. */
+  /** Nearest code per (vector, subspace) against the broadcast
+    * (≤ PqM·PqK-row) codebook, on the distance rounded at 9. */
   private def pqAssign(sub: DataFrame, cents: DataFrame): DataFrame =
-    sub.join(broadcast(cents), Seq("m"))
-      .select(col("vec_id"), col("m"), col("sv"),
-        struct(round(sqdist2(col("n2s"), col("sv"), col("c"), col("n2c")), 9)
-          .as("dd"), col("k")).as("p"))
-      .groupBy(col("vec_id"), col("m"))
-      // first() is deterministic here: every row in a (vec_id, m)
-      // group carries the IDENTICAL sv (the group fans out only over
-      // candidate codes) — it grabs the one value, it never chooses
-      .agg(min(col("p")).as("p"), first(col("sv")).as("sv"))
-      .select(col("vec_id"), col("m"), col("p.k").as("k"), col("sv"))
-      .withColumn("n2s", norm2(col("sv")))
-
-  /** Per-(subspace, code) centroid update with order-independent
-    * quantized integer sums — same determinism contract as the IVF
-    * [[recomputeCentroids]], so the oracle replays it exactly. */
-  private def pqRecompute(assigned: DataFrame): DataFrame = {
-    val dims = assigned
-      .select(col("m"), col("k"), posexplode(col("sv")).as(Seq("i", "x")))
-      .groupBy(col("m"), col("k"), col("i"))
-      .agg(sum(round(col("x") * QScale).cast("long")).as("sq"),
-        count(lit(1)).as("n"))
-      .select(col("m"), col("k"), col("i"),
-        (col("sq").cast("double") / col("n") / QScale).as("cx"))
-    dims.groupBy(col("m"), col("k"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("cx")))),
-        s => s.getField("cx")).as("c"))
-      .withColumn("n2c", norm2(col("c")))
-  }
+    nearest(sub, broadcast(cents), Seq("m"), Seq("vec_id", "m"), Seq("sv"),
+      round(sqdist2(col("n2s"), col("sv"), col("c"), col("n2c")), 9), "k")
 
   /** 1-in-[[PqTrainMod]] deterministic hash-sample for codebook
     * training — the standard PQ recipe: codebooks are fit on a
@@ -1073,42 +1021,23 @@ object SimilarityOps {
     e.filter(pmod(xhash60(col("vec_id").cast("string"), 13), lit(PqTrainMod)) === 0)
 
   private def pqCodebook(e: DataFrame): DataFrame = {
-    // r17 final shape, chosen by measurement (see OPTIMIZATION_r17.md):
-    // the build stays a LAZY plan — seeds + PqRounds nested
-    // assign/recompute rounds, materialized by whichever single action
-    // consumes the codebook. An eager literal-collected variant (one
-    // driver collect per round, map-only assignment) removed the
-    // per-round broadcast fan-out but serialized construction into
-    // 3 driver round-trips and made every consumer's construction
-    // eager — measured 2× SLOWER end-to-end at sf0.1 (sim_ann_pq
-    // 2.40 → 4.79 bench; sim_pq_recall 0.43 → 2.24, whose lazy left
-    // join is otherwise pruned entirely under count()). The r16
-    // checkpoint of the ×PqM exploded subvectors was ALSO a measured
-    // regression (ADVICE r16, −17%); what remains is the narrow
-    // (vec_id, v) sample checkpoint — one materialization that every
-    // seed/round pass reads instead of re-running the corpus sample.
+    // The build stays a LAZY plan with the struct-min kernel, chosen by
+    // measurement (OPTIMIZATION_r17.md): literal centroids collected
+    // each round serialized construction into 3 driver round-trips and
+    // made every consumer's construction eager — 2× SLOWER end-to-end
+    // at sf0.1 (sim_ann_pq 2.40 → 4.79 s; sim_pq_recall 0.43 → 2.24 s,
+    // whose lazy left join is otherwise pruned entirely under count()).
+    // Checkpointing the ×PqM exploded subvectors also measured slower
+    // (−17%); the narrow (vec_id, v) sample checkpoint is the one
+    // materialization every seed/round pass reads.
     val train = pqTrain(e).select(col("vec_id"), col("v")).localCheckpoint(false)
     val sub = pqSub(train)
     var cents = pqSeeds(sub, train)
-    for (_ <- 1 to PqRounds) cents = pqRecompute(pqAssign(sub, cents))
+    for (_ <- 1 to PqRounds)
+      cents = centroidMeans(pqAssign(sub, cents), Seq("m", "k"), "sv", quantizedMean, "n2c")
     cents
   }
 
-  /** PQ ANN with true ADC scoring (Jégou et al. 2011): the corpus is
-    * compressed to [[PqM]] small integer codes per vector; each query
-    * precomputes a (qid, m, k) LOOKUP TABLE of partial squared
-    * distances to every code (10·8·16 entries here), and scoring a
-    * candidate is then PqM integer-keyed lookups summed — no
-    * per-candidate float dot at probe time. That is the 100 TB
-    * economics of PQ: the scan side touches only the code columns
-    * (PqM bytes/vector instead of 4·Dim), the float work is
-    * queries×codebook-sized, and the integer-quantized partials make
-    * the sum order-independent, so the DuckDB oracle replays the
-    * whole index + probe bit-exactly. The codebook trains on the
-    * deterministic [[pqTrain]] hash-sample (training cost stops
-    * scaling with the corpus; only the one encode pass touches every
-    * vector). Top-3 by ADC distance per query (qid < 10),
-    * self-matches excluded. */
   /** The PQ index as two tables — the artifacts a production build
     * job PERSISTS once (codebook: ≤ PqM·PqK rows; codes: one row per
     * (vector, subspace)) and every probe job reloads. Exposed so the
@@ -1145,13 +1074,24 @@ object SimilarityOps {
       .orderBy("qid", "rank")
   }
 
+  /** PQ ANN with true ADC scoring (Jégou et al. 2011): the corpus is
+    * compressed to [[PqM]] small integer codes per vector; each query
+    * precomputes a (qid, m, k) LOOKUP TABLE of partial squared
+    * distances to every code (10·8·16 entries here), and scoring a
+    * candidate is then PqM integer-keyed lookups summed — no
+    * per-candidate float dot at probe time. That is the 100 TB
+    * economics of PQ: the scan side touches only the code columns
+    * (PqM bytes/vector instead of 4·Dim), the float work is
+    * queries×codebook-sized, and the integer-quantized partials make
+    * the sum order-independent, so the DuckDB oracle replays the
+    * whole index + probe bit-exactly. The codebook trains on the
+    * deterministic [[pqTrain]] hash-sample (training cost stops
+    * scaling with the corpus; only the one encode pass touches every
+    * vector). Top-3 by ADC distance per query (qid < 10),
+    * self-matches excluded. */
   def annPq(spark: SparkSession, d: String): DataFrame = {
-    // Lazy composition of the two index tables + probe, one action.
-    // An r17 attempt fused encode+probe against a COLLECTED literal
-    // codebook/LUT (map-only at any scale) but the eager construction
-    // collects serialized the driver and defeated downstream plan
-    // pruning — measured 2× slower at sf0.1 (see pqCodebook note);
-    // reverted to the lazy shape, which the oracle replays unchanged.
+    // lazy composition of the two index tables + probe, one action
+    // (see the pqCodebook note)
     val e = corpus(spark, d)
     val (cents, codes) = pqIndex(e)
     pqProbe(cents, codes, e.filter(col("vec_id") < 10))
@@ -1160,37 +1100,20 @@ object SimilarityOps {
   /** DuckDB replay of [[annPq]]: identical seeds, quantized Lloyd's
     * rounds per subspace, codes, LUT and integer-summed ADC. */
   def annPqSql: String = {
-    def subDistSql(n2v: String, v: String, c: String, n2c: String) =
-      s"($n2v - 2.0 * list_sum(list_transform(range(1, $PqSubDim + 1), i -> $v[i] * $c[i]))) + $n2c"
     def pqAssignCte(name: String, cents: String, src: String) =
-      s"""$name AS (
-         |  SELECT vec_id, m, k, sv, n2s FROM (
-         |    SELECT s.vec_id, s.m, c.k, s.sv, s.n2s,
-         |      row_number() OVER (PARTITION BY s.vec_id, s.m
-         |        ORDER BY round(${subDistSql("s.n2s", "s.sv", "c.c", "c.n2c")}, 9), c.k) AS rn
-         |    FROM $src s JOIN $cents c USING (m)) WHERE rn = 1)""".stripMargin
-    def pqRecomputeCte(mName: String, cName: String, assigned: String) =
-      s"""$mName AS (
-         |  SELECT m, k, i.i AS i,
-         |    CAST(SUM(CAST(round(sv[i.i] * 1000000.0) AS BIGINT)) AS DOUBLE)
-         |      / COUNT(*) / 1000000.0 AS cx
-         |  FROM $assigned CROSS JOIN (SELECT unnest(range(1, $PqSubDim + 1)) AS i) i
-         |  GROUP BY m, k, i.i),
-         |$cName AS (
-         |  SELECT m, k, c, list_sum(list_transform(c, x -> x*x)) AS n2c
-         |  FROM (SELECT m, k, list(cx ORDER BY i) AS c FROM $mName GROUP BY m, k))""".stripMargin
+      nearestCte(name, "s.vec_id, s.m, c.k, s.sv, s.n2s",
+        s"round(${distSql("s.n2s", "s.sv", "c.c", "c.n2c")}, 9)", "vec_id, m", "k",
+        s"$src s JOIN $cents c USING (m)", 1)
     val rounds = (1 to PqRounds).map { r =>
       pqAssignCte(s"a$r", s"c${r - 1}", "subt") + ",\n" +
-        pqRecomputeCte(s"m$r", s"c$r", s"a$r")
+        meansCte(s"c$r", "m, k", "sv", quantizedMeanSql, "n2c", s"a$r")
     }.mkString(",\n")
     s"""WITH e AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |sub AS (
        |  SELECT vec_id, ms.m AS m,
        |    v[ms.m * $PqSubDim + 1 : ms.m * $PqSubDim + $PqSubDim] AS sv,
-       |    list_sum(list_transform(
-       |      v[ms.m * $PqSubDim + 1 : ms.m * $PqSubDim + $PqSubDim],
-       |      x -> x*x)) AS n2s
+       |    ${norm2Sql(s"v[ms.m * $PqSubDim + 1 : ms.m * $PqSubDim + $PqSubDim]")} AS n2s
        |  FROM e CROSS JOIN (SELECT unnest(range(0, $PqM)) AS m) ms),
        |subt AS (
        |  SELECT * FROM sub
@@ -1209,7 +1132,7 @@ object SimilarityOps {
        |  FROM sub WHERE vec_id < 10),
        |lut AS (
        |  SELECT q.qid, q.m, c.k,
-       |    CAST(round((${subDistSql("q.qn2", "q.qsv", "c.c", "c.n2c")}) * 1000000.0)
+       |    CAST(round((${distSql("q.qn2", "q.qsv", "c.c", "c.n2c")}) * 1000000.0)
        |      AS BIGINT) AS pq
        |  FROM q JOIN c$PqRounds c USING (m)),
        |adc AS (
@@ -1325,22 +1248,6 @@ object SimilarityOps {
       |SELECT vec_id, round(sqrt(d2), 6) AS mdist
       |FROM dist ORDER BY d2 DESC, vec_id LIMIT 10""".stripMargin
 
-  /** One power-iteration step toward the embedding covariance's top
-    * eigenvector — the distributed linear-algebra primitive under PCA
-    * whitening and spectral diagnostics: cov = E[xxᵀ] − μμᵀ built the
-    * way it scales (per-vector outer-product explode → (di, dj)
-    * partial aggregation onto dims² = 4096 keys, map-side combined —
-    * never a driver-side matrix), then v₁ = cov·v₀ from the exact
-    * dyadic start v₀ = (1/8,…,1/8) (unit L2 norm at 64 dims, and 1/8
-    * multiplies exactly). Cross-engine exactness: second moments sum
-    * through DECIMAL(28,12), the per-entry cov float math runs once on
-    * those exact operands, and the matvec re-sums rounded terms
-    * through decimal. Declared face: per-dimension variance (the cov
-    * diagonal) and the v₁ component. */
-  /** The embedding covariance as a distributed (di, dj, c) table —
-    * shared by [[embPower]] and [[embPowerIter]]. Per-vector
-    * outer-product explode → (di, dj) partial aggregation onto dims²
-    * keys, map-side combined; never a driver-side matrix. */
   /** Covariance of the embedding corpus via per-partition fixed-point
     * Gram accumulation — the distributed-BLAS block pattern. Each
     * coordinate quantizes ONCE to a 1e-6-grid long (`round(x·10⁶)`,
@@ -1424,6 +1331,18 @@ object SimilarityOps {
       |    CAST(sxy AS DOUBLE) / 1000000000000.0 / ma.n - ma.mu * mb.mu AS c
       |  FROM xx JOIN m ma ON ma.d = di JOIN m mb ON mb.d = dj)""".stripMargin
 
+  /** One power-iteration step toward the embedding covariance's top
+    * eigenvector — the distributed linear-algebra primitive under PCA
+    * whitening and spectral diagnostics: cov = E[xxᵀ] − μμᵀ built the
+    * way it scales (per-vector outer-product explode → (di, dj)
+    * partial aggregation onto dims² = 4096 keys, map-side combined —
+    * never a driver-side matrix), then v₁ = cov·v₀ from the exact
+    * dyadic start v₀ = (1/8,…,1/8) (unit L2 norm at 64 dims, and 1/8
+    * multiplies exactly). Cross-engine exactness: second moments sum
+    * through DECIMAL(28,12), the per-entry cov float math runs once on
+    * those exact operands, and the matvec re-sums rounded terms
+    * through decimal. Declared face: per-dimension variance (the cov
+    * diagonal) and the v₁ component. */
   def embPower(spark: SparkSession, d: String): DataFrame = {
     val cov = cachedCov(spark, d)
     val v1 = cov.groupBy(col("di").as("vd"))
@@ -1663,16 +1582,6 @@ object SimilarityOps {
       |FROM cov JOIN v1 ON v1.vd = cov.di
       |WHERE cov.di = cov.dj ORDER BY dim""".stripMargin
 
-  /** ANN self-evaluation: recall@3 of the IVF index against the exact
-    * brute-force top-3, per query — the metric an index owner watches
-    * when tuning nprobe/cell count, promoted to a first-class declared
-    * query (SimilaritySpec asserts a recall FLOOR; this exposes the
-    * exact per-query value under the hash gate, both sides replayed
-    * deterministically by the oracle). Scale shape: both inputs are
-    * existing declared plans (broadcast-probe joins); the recall join
-    * matches two ≤3-row-per-query sets on (qid, nid) and aggregates
-    * onto |queries| keys. Missed queries surface as recall 0, not as
-    * absent rows (left join from the exact side). */
   /** recall@3 core shared by [[annRecall]] (IVF) and [[pqRecall]]:
     * exact top-3 joined to an index's top-3 on (qid, nid), aggregated
     * onto |queries| keys; missed queries surface as recall 0, not as
@@ -1688,8 +1597,34 @@ object SimilarityOps {
       .orderBy("qid")
   }
 
+  /** DuckDB mirror of [[recall3Of]] over an index's top-3 query. */
+  private def recall3Sql(annSql: String): String =
+    s"""WITH brute3 AS (
+       |  SELECT qid, nid FROM ($bruteTopKSql) b WHERE rank <= 3),
+       |ann AS (SELECT qid, nid FROM ($annSql) a),
+       |hits AS (
+       |  SELECT brute3.qid, COUNT(*) AS h
+       |  FROM brute3 JOIN ann ON brute3.qid = ann.qid AND brute3.nid = ann.nid
+       |  GROUP BY brute3.qid)
+       |SELECT q.qid, COALESCE(h, 0) AS n_hits,
+       |  round(COALESCE(h, 0) / 3.0, 9) AS recall3
+       |FROM (SELECT DISTINCT qid FROM brute3) q
+       |LEFT JOIN hits ON q.qid = hits.qid
+       |ORDER BY q.qid""".stripMargin
+
+  /** ANN self-evaluation: recall@3 of the IVF index against the exact
+    * brute-force top-3, per query — the metric an index owner watches
+    * when tuning nprobe/cell count, promoted to a first-class declared
+    * query (SimilaritySpec asserts a recall FLOOR; this exposes the
+    * exact per-query value under the hash gate, both sides replayed
+    * deterministically by the oracle). Scale shape: both inputs are
+    * existing declared plans (broadcast-probe joins); the recall join
+    * matches two ≤3-row-per-query sets on (qid, nid) and aggregates
+    * onto |queries| keys. */
   def annRecall(spark: SparkSession, d: String): DataFrame =
     recall3Of(bruteTopK(spark, d).where(col("rank") <= 3), annIvf(spark, d))
+
+  def annRecallSql: String = recall3Sql(annIvfSql)
 
   /** recall@3 of the PQ index against the exact top-3 — [[annRecall]]
     * for the OTHER approximate index: IVF approximates by pruning the
@@ -1700,79 +1635,39 @@ object SimilarityOps {
   def pqRecall(spark: SparkSession, d: String): DataFrame =
     recall3Of(bruteTopK(spark, d).where(col("rank") <= 3), annPq(spark, d))
 
-  def pqRecallSql: String =
-    s"""WITH brute3 AS (
-       |  SELECT qid, nid FROM ($bruteTopKSql) b WHERE rank <= 3),
-       |ann AS (SELECT qid, nid FROM ($annPqSql) a),
-       |hits AS (
-       |  SELECT brute3.qid, COUNT(*) AS h
-       |  FROM brute3 JOIN ann ON brute3.qid = ann.qid AND brute3.nid = ann.nid
-       |  GROUP BY brute3.qid)
-       |SELECT q.qid, COALESCE(h, 0) AS n_hits,
-       |  round(COALESCE(h, 0) / 3.0, 9) AS recall3
-       |FROM (SELECT DISTINCT qid FROM brute3) q
-       |LEFT JOIN hits ON q.qid = hits.qid
-       |ORDER BY q.qid""".stripMargin
+  def pqRecallSql: String = recall3Sql(annPqSql)
 
-  def annRecallSql: String =
-    s"""WITH brute3 AS (
-       |  SELECT qid, nid FROM ($bruteTopKSql) b WHERE rank <= 3),
-       |ann AS (SELECT qid, nid FROM ($annIvfSql) a),
-       |hits AS (
-       |  SELECT brute3.qid, COUNT(*) AS h
-       |  FROM brute3 JOIN ann ON brute3.qid = ann.qid AND brute3.nid = ann.nid
-       |  GROUP BY brute3.qid)
-       |SELECT q.qid, COALESCE(h, 0) AS n_hits,
-       |  round(COALESCE(h, 0) / 3.0, 9) AS recall3
-       |FROM (SELECT DISTINCT qid FROM brute3) q
-       |LEFT JOIN hits ON q.qid = hits.qid
-       |ORDER BY q.qid""".stripMargin
+  // ---------------------------------------------------------------
+  // emb_kmeans*: k-means (k = 8) over the embedding corpus
+  // ---------------------------------------------------------------
 
-  /** One Lloyd iteration of k-means (k = 8) over the embedding corpus
-    * — the clustering primitive under the IVF index builders
-    * ([[annIvf]] trains its coarse quantizer exactly this way) exposed
-    * as its own declared, oracle-checked step: hash-ranked seed
-    * selection (TakeOrdered top-8 on the content-derived hash — the
-    * deterministic stand-in for random init; rand() is
-    * partitioning-dependent), one broadcast-assign pass (8 codegen'd
-    * dots per vector, argmin with rounded distances and centroid-id
-    * tie-break), and the per-cell population + mean distance the next
-    * iteration's convergence check reads. Scale shape: seeds are a
-    * k-row broadcast, assignment is one map-side pass over the corpus,
-    * the re-aggregate is onto k keys — a full Lloyd loop is this plan
-    * iterated, exactly like [[GraphOps.pagerank]]'s per-round shape.
-    * Mean distance goes through a rounded decimal sum (dsum recipe) so
-    * the division is exact-over-exact. */
   private def kmVectors(spark: SparkSession, d: String) =
     Tables.embeddings(spark, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
-  private def kmSeeds(e: DataFrame): DataFrame = e
-    .select(xhash60(col("vec_id").cast("string"), 99).as("h"),
-      col("vec_id"), col("v"))
-    .orderBy(col("h"), col("vec_id")).limit(8)
-    .withColumn("cid",
-      row_number().over(Window.orderBy(col("h"), col("vec_id"))).cast("long"))
-    .select(col("cid"), col("v").as("c"))
+  /** The 8 seeds (cid 1..8): the lowest content-derived hashes — the
+    * deterministic stand-in for random init (rand() is
+    * partitioning-dependent). */
+  private def kmSeeds(e: DataFrame): DataFrame =
+    seeds(e.withColumn("h", xhash60(col("vec_id").cast("string"), 99)),
+      Seq(col("h"), col("vec_id")), Left(8), "cid")
+      .select((col("cid") + 1).cast("long").as("cid"), col("v").as("c"))
 
-  /** Broadcast-assign: each vector to its nearest centroid (rounded
-    * L2², centroid-id tie-break). */
+  /** round(|v|² − 2·v·c + |c|², 9) against a centroid column or literal. */
+  private def kmDist(c: Column): Column =
+    round(norm2(col("v")) - lit(2.0) * dotd(col("v"), c) + norm2(c), 9)
+
   private def kmAssign(e: DataFrame, cents: DataFrame): DataFrame =
-    // struct-min argmin, NOT a window (r16 opt): same rewrite as
-    // [[assignCells]] — the window form shuffled the k×N cross-join
-    // fan-out (vectors included) every Lloyd round; the aggregate
-    // collapses it map-side to N rows. min(struct(dist2, cid)) =
-    // lowest dist2, ties to the lower cid — byte-identical to the old
-    // row_number ordering; first(v) reads the one identical v per
-    // group.
-    e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"),
-        struct(round(norm2(col("v")) - lit(2.0) * dotd(col("v"), col("c"))
-          + norm2(col("c")), 9).as("dist2"), col("cid").as("cid")).as("p"))
-      .groupBy(col("vec_id"))
-      .agg(min(col("p")).as("p"), first(col("v")).as("nv"))
-      .select(col("vec_id"), col("nv").as("v"), col("p.cid").as("cid"),
-        col("p.dist2").as("dist2"))
+    nearest(e, broadcast(cents), Nil, Seq("vec_id"), Seq("v"), kmDist(col("c")), "cid")
+
+  private def kmAssign(e: DataFrame, cents: Seq[(Long, Seq[Double])]): DataFrame =
+    nearest(e, cents, Seq("vec_id", "v"), kmDist, "cid")
+
+  /** Centroid re-estimation under the decimal-exact mean
+    * ([[graft.ops.OpsUtil.davg]]); a centroid that loses every vector
+    * drops out (k shrinks), the standard Lloyd degeneracy. */
+  private def kmUpdate(assigned: DataFrame): DataFrame =
+    centroidMeans(assigned, Seq("cid"), "v", davg, "cn2")
 
   /** The k ≤ 8 centroid rows COLLECTED (bounded by construction — the
     * [[graft.ops.TextAnalysisOps.ngramProfileLit]] 1-row-scalar
@@ -1781,72 +1676,42 @@ object SimilarityOps {
     cents.select(col("cid"), col("c")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
 
-  /** Per-row (dist2, cid) struct columns against LITERAL centroids —
-    * the identical round(|v|² − 2·v·c + |c|², 9) expression of
-    * [[kmAssign]] with c a literal array, so the arithmetic is
-    * bit-identical; each struct stays a plain codegen'd projection. */
-  private def kmDistCols(cents: Seq[(Long, Seq[Double])]): Seq[Column] =
-    cents.map { case (cid, c) =>
-      val cl = array(c.map(lit): _*)
-      struct(round(norm2(col("v")) - lit(2.0) * dotd(col("v"), cl)
-        + norm2(cl), 9).as("dist2"), lit(cid).as("cid"))
-    }
-
-  /** [[kmAssign]] against LITERAL centroids (r17 opt, guide §2.3/§2.4):
-    * the k-way cross-join fan-out and the N-row groupBy(vec_id)
-    * exchange — which carried every VECTOR — disappear entirely; the
-    * argmin is `least` over k codegen'd struct columns inside the scan
-    * projection (least on structs = lexicographic min = lowest dist2,
-    * ties to the lower cid — the exact [[kmAssign]] rule; cids are
-    * distinct so exact struct ties cannot occur). Map-only: no shuffle
-    * at any corpus size. */
-  private def kmAssignLit(e: DataFrame,
-      cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    val ds = kmDistCols(cents)
-    val p = if (ds.size == 1) ds.head else least(ds: _*)
-    e.select(col("vec_id"), col("v"), p.as("p"))
-      .select(col("vec_id"), col("v"), col("p.cid").as("cid"),
-        col("p.dist2").as("dist2"))
-  }
-
-  def embKmeans(spark: SparkSession, d: String): DataFrame = {
-    // r17 opt: literal-centroid assignment ([[kmAssignLit]]) — the
-    // seeds are ≤ 8 rows by construction, collected once; the whole
-    // query is then one map-only scoring pass + the 8-key aggregate.
-    val e = kmVectors(spark, d)
-    kmAssignLit(e, kmCentsLit(kmSeeds(e)))
-      .groupBy(col("cid").as("centroid"))
+  /** Per-cluster population and mean distance; the mean goes through
+    * a rounded decimal sum (dsum recipe) so the division is
+    * exact-over-exact. */
+  private def kmSummary(assigned: DataFrame): DataFrame =
+    assigned.groupBy(col("cid").as("centroid"))
       .agg(count(lit(1)).as("n_vecs"),
-        round(sum(round(sqrt(col("dist2")), 9).cast("decimal(18,6)"))
-          .cast("double") / count(lit(1)), 6).as("mean_dist"))
+        round(dsum(round(sqrt(col("dist")), 9)) / count(lit(1)), 6).as("mean_dist"))
       .orderBy("centroid")
+
+  /** One Lloyd iteration of k-means (k = 8) over the embedding corpus
+    * — the clustering primitive under the IVF index builders
+    * ([[annIvf]] trains its coarse quantizer exactly this way) exposed
+    * as its own declared, oracle-checked step: hash-ranked seed
+    * selection (TakeOrdered top-8), one assignment pass (8 codegen'd
+    * dots per vector, argmin with rounded distances and centroid-id
+    * tie-break), and the per-cell population + mean distance the next
+    * iteration's convergence check reads. The seeds are ≤ 8 rows by
+    * construction, collected once, so assignment is the literal form:
+    * one map-only scoring pass, then the 8-key aggregate. A full Lloyd
+    * loop is this plan iterated ([[embKmeansLoop]]), like
+    * [[GraphOps.pagerank]]'s per-round shape. */
+  def embKmeans(spark: SparkSession, d: String): DataFrame = {
+    val e = kmVectors(spark, d)
+    kmSummary(kmAssign(e, kmCentsLit(kmSeeds(e))))
   }
 
   /** The full Lloyd LOOP — the scale continuation of the declared
     * one-iteration [[embKmeans]] (the [[graft.ops.GraphOps.pagerank]]
     * shape applied to clustering): per round, one broadcast-assign
     * pass over the corpus, one (cid, dim)-keyed partial-aggregate to
-    * recompute means distributed (never a per-cluster array fold on
-    * one node), and exactly ONE bounded driver action — the 1-row
-    * total-cost scalar the convergence check reads. Centroid means go
-    * through the decimal-exact davg, so every round is deterministic
+    * recompute means distributed, and exactly ONE bounded driver
+    * action — the 1-row total-cost scalar the convergence check reads.
+    * Centroid means are decimal-exact, so every round is deterministic
     * and Lloyd's monotone-descent guarantee is assertable
-    * (ScaleStressSpec). A centroid that loses every vector drops out
-    * (k shrinks), the standard Lloyd degeneracy. Returns the final
-    * per-cluster summary and the per-round total cost trace. */
-  /** Centroid re-estimation from an assignment: per-(cid, dim)
-    * decimal-exact mean ([[graft.ops.OpsUtil.davg]] — order-free, so
-    * the distributed partial agg is deterministic), regathered into a
-    * dim-sorted array per surviving centroid. Never a per-cluster
-    * array fold on one node. */
-  private def kmUpdate(assigned: DataFrame): DataFrame =
-    assigned.select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("cid"), col("dim"))
-      .agg(graft.ops.OpsUtil.davg(col("x")).as("m"))
-      .groupBy(col("cid"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-        s => s.getField("m")).as("c"))
-
+    * (ScaleStressSpec). Returns the final per-cluster summary and the
+    * per-round total cost trace. */
   private[graft] def embKmeansIter(spark: SparkSession, d: String,
       rounds: Int): (DataFrame, Seq[Double]) = {
     val e = kmVectors(spark, d).localCheckpoint(false)
@@ -1854,124 +1719,82 @@ object SimilarityOps {
     val costs = scala.collection.mutable.ArrayBuffer.empty[Double]
     (1 to rounds).foreach { _ =>
       val best = kmAssign(e, cents).localCheckpoint(false)
-      costs += best.agg(
-        sum(round(sqrt(col("dist2")), 9).cast("decimal(18,6)"))
-          .cast("double").as("cost")).head().getDouble(0)
+      costs += best.agg(dsum(round(sqrt(col("dist")), 9))).head().getDouble(0)
       cents = kmUpdate(best)
     }
-    val summary = kmAssign(e, cents)
-      .groupBy(col("cid").as("centroid"))
-      .agg(count(lit(1)).as("n_vecs"))
-      .orderBy("centroid")
-    (summary, costs.toSeq)
+    (kmSummary(kmAssign(e, cents)), costs.toSeq)
   }
+
+  private val LloydRounds = 3
 
   /** The declared fixed-round Lloyd LOOP (r12 verdict #3): the
     * [[embKmeans]] single step iterated [[LloydRounds]] times under
     * the hash gate, exactly like `graph_pagerank`'s unrolled rounds —
-    * seeds, then per round one broadcast-assign pass over the corpus
-    * and one (cid, dim)-keyed partial aggregate, then the final
+    * seeds, then per round one assignment pass over the corpus and
+    * one (cid, dim)-keyed partial aggregate, then the final
     * assignment summarized per surviving centroid. Unlike the
-    * convergence-checked [[embKmeansIter]] (test-proven monotone
-    * descent), the declared query runs a FIXED round count with no
-    * driver action at all — the plan nests linearly (each round's
-    * centroids feed one broadcast), so the whole loop is one job the
-    * oracle replays round for round: centroid means are decimal-exact
-    * ([[kmUpdate]]), distances round to 9 after a fixed-order fold,
-    * so every round's assignment is bit-identical cross-engine. */
-  private val LloydRounds = 3
-
+    * convergence-checked [[embKmeansIter]], the declared query runs a
+    * FIXED round count. Centroids are ≤ 8×Dim doubles by
+    * construction, so each round collects them (one bounded driver
+    * action per round, the ngramProfileLit pattern) and assignment is
+    * the map-only literal form; the only shuffles are the means'
+    * k×Dim-row partial aggregates. Means are decimal-exact and
+    * distances round to 9 after a fixed-order fold, so every round's
+    * assignment is bit-identical cross-engine. */
   def embKmeansLoop(spark: SparkSession, d: String): DataFrame = {
-    // r17 opt (guide §2.3): per round the OLD shape cross-joined the
-    // broadcast centroids and shuffled N (vec_id, VECTOR) rows through
-    // groupBy(vec_id) to argmin the fan-out — 4 corpus-row exchanges
-    // carrying the payload. Centroids are ≤ 8×Dim doubles by
-    // construction, so each round now collects them (one bounded
-    // driver action per round — the declared loop already tolerates
-    // the ngramProfileLit eager-construction pattern) and assignment
-    // is a map-only literal-argmin projection; the only shuffles left
-    // are the (cid, dim)-keyed partial aggregates of [[kmUpdate]],
-    // k×Dim rows each. Arithmetic is bit-identical ([[kmDistCols]]),
-    // so assignments, means, and the final summary are unchanged.
     val e = kmVectors(spark, d).localCheckpoint(false)
     var cents = kmCentsLit(kmSeeds(e))
     (1 to LloydRounds).foreach(_ =>
-      cents = kmCentsLit(kmUpdate(kmAssignLit(e, cents))))
-    kmAssignLit(e, cents)
-      .groupBy(col("cid").as("centroid"))
-      .agg(count(lit(1)).as("n_vecs"),
-        round(sum(round(sqrt(col("dist2")), 9).cast("decimal(18,6)"))
-          .cast("double") / count(lit(1)), 6).as("mean_dist"))
-      .orderBy("centroid")
+      cents = kmCentsLit(kmUpdate(kmAssign(e, cents))))
+    kmSummary(kmAssign(e, cents))
   }
 
+  /** The k-means mirror prefix shared by [[embKmeansSql]],
+    * [[embKmeansLoopSql]] and [[embSilhouetteSql]]: the corpus `e`,
+    * the hash-ranked seeds `c0` and `a1`, each vector's n nearest
+    * seeds. */
+  private def kmSeedsScoredSql(n: Int, materialized: Boolean): String = {
+    val m = if (materialized) " MATERIALIZED" else ""
+    s"""e AS$m (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |c0 AS$m (
+       |  SELECT r AS cid, v AS c FROM (SELECT v, row_number() OVER (
+       |    ORDER BY ${xhash60Sql("CAST(vec_id AS VARCHAR)", 99)}, vec_id) AS r FROM e)
+       |  WHERE r <= 8),
+       |${kmAssignSql("a1", "c0", n, materialized)}""".stripMargin
+  }
+
+  private def kmAssignSql(name: String, cents: String, n: Int, materialized: Boolean) =
+    nearestCte(name, "e.vec_id, e.v, s.cid",
+      s"round(${distSql(norm2Sql("e.v"), "e.v", "s.c", norm2Sql("s.c"))}, 9)",
+      "vec_id", "cid", s"e CROSS JOIN $cents s", n, materialized)
+
+  private def kmSummarySql(assigned: String): String =
+    s"""SELECT CAST(cid AS BIGINT) AS centroid, COUNT(*) AS n_vecs,
+       |  round(CAST(SUM(CAST(round(sqrt(dist), 9) AS DECIMAL(18,6))) AS DOUBLE)
+       |    / COUNT(*), 6) AS mean_dist
+       |FROM $assigned GROUP BY cid ORDER BY centroid""".stripMargin
+
+  def embKmeansSql: String =
+    s"""WITH ${kmSeedsScoredSql(1, materialized = false)}
+       |${kmSummarySql("a1")}""".stripMargin
+
   /** DuckDB mirror of [[embKmeansLoop]]: seeds, then [[LloydRounds]]
-    * unrolled (assign → re-estimate) pairs with the identical decimal
+    * unrolled (re-estimate → assign) pairs with the identical decimal
     * mean and rounded-distance arithmetic, then the final assignment
     * summary. AS MATERIALIZED on every stage: each assignment is
     * referenced by the next round's means AND (transitively) every
     * later round — inlining would re-expand the pipeline
     * exponentially (the graph_bfs lesson). */
   def embKmeansLoopSql: String = {
-    def scored(cents: String, t: String) =
-      s"""sc$t AS MATERIALIZED (
-         |  SELECT e.vec_id, e.v, s.cid,
-         |    round(list_sum(list_transform(e.v, x -> x*x))
-         |      - 2.0 * list_sum(list_transform(range(1, len(e.v) + 1),
-         |          i -> e.v[i] * s.c[i]))
-         |      + list_sum(list_transform(s.c, x -> x*x)), 9) AS dist2
-         |  FROM e CROSS JOIN $cents s),
-         |a$t AS MATERIALIZED (
-         |  SELECT vec_id, v, cid, dist2 FROM (
-         |    SELECT vec_id, v, cid, dist2,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2, cid) AS rk
-         |    FROM sc$t) WHERE rk = 1)""".stripMargin
-    def means(t: Int) =
-      s"""m$t AS MATERIALIZED (
-         |  SELECT cid, list(m ORDER BY dim) AS c FROM (
-         |    SELECT cid, dim,
-         |      CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE) / COUNT(x) AS m
-         |    FROM (SELECT cid, unnest(range(0, len(v))) AS dim, unnest(v) AS x
-         |          FROM a$t)
-         |    GROUP BY cid, dim) GROUP BY cid)""".stripMargin
+    val davgSql = (x: String) => s"CAST(SUM(CAST($x AS DECIMAL(18,6))) AS DOUBLE) / COUNT($x)"
     val rounds = (1 to LloydRounds).map { t =>
-      val cents = if (t == 1) "c0" else s"m${t - 1}"
-      scored(cents, t.toString) + ",\n" + means(t)
+      meansCte(s"c$t", "cid", "v", davgSql, "cn2", s"a$t", materialized = true) + ",\n" +
+        kmAssignSql(s"a${t + 1}", s"c$t", 1, materialized = true)
     }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |sr AS (SELECT vec_id, v, row_number() OVER (
-       |  ORDER BY ${xhash60Sql("CAST(vec_id AS VARCHAR)", 99)}, vec_id) AS r FROM e),
-       |c0 AS MATERIALIZED (SELECT r AS cid, v AS c FROM sr WHERE r <= 8),
-       |$rounds,
-       |${scored(s"m$LloydRounds", "F")}
-       |SELECT CAST(cid AS BIGINT) AS centroid, COUNT(*) AS n_vecs,
-       |  round(CAST(SUM(CAST(round(sqrt(dist2), 9) AS DECIMAL(18,6))) AS DOUBLE)
-       |    / COUNT(*), 6) AS mean_dist
-       |FROM aF GROUP BY cid ORDER BY centroid""".stripMargin
+    s"""WITH ${kmSeedsScoredSql(1, materialized = true)},
+       |$rounds
+       |${kmSummarySql(s"a${LloydRounds + 1}")}""".stripMargin
   }
-
-  def embKmeansSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |sr AS (SELECT vec_id, v, row_number() OVER (
-       |  ORDER BY ${xhash60Sql("CAST(vec_id AS VARCHAR)", 99)}, vec_id) AS r FROM e),
-       |seeds AS (SELECT r AS cid, v AS c FROM sr WHERE r <= 8),
-       |scored AS (
-       |  SELECT e.vec_id, s.cid,
-       |    round(list_sum(list_transform(e.v, x -> x*x))
-       |      - 2.0 * list_sum(list_transform(range(1, len(e.v) + 1),
-       |          i -> e.v[i] * s.c[i]))
-       |      + list_sum(list_transform(s.c, x -> x*x)), 9) AS dist2
-       |  FROM e CROSS JOIN seeds s),
-       |best AS (
-       |  SELECT vec_id, cid, dist2,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY dist2, cid) AS rk
-       |  FROM scored)
-       |SELECT CAST(cid AS BIGINT) AS centroid, COUNT(*) AS n_vecs,
-       |  round(CAST(SUM(CAST(round(sqrt(dist2), 9) AS DECIMAL(18,6))) AS DOUBLE)
-       |    / COUNT(*), 6) AS mean_dist
-       |FROM best WHERE rk = 1 GROUP BY cid ORDER BY centroid""".stripMargin
 
   /** Simplified (centroid) silhouette of the k-means partition — the
     * clustering-quality readout next to [[embKmeans]]: per vector,
@@ -1979,42 +1802,34 @@ object SimilarityOps {
     * OTHER centroid, s = (b − a) / max(a, b); reported as the
     * per-cluster mean. The full silhouette's pairwise a/b is O(n²);
     * the centroid form is the standard O(n·k) large-scale substitute
-    * (one broadcast pass, same cost as the assignment itself).
+    * (one pass, same cost as the assignment itself).
     *
-    * Scale shape: identical to [[embKmeans]] — k-row broadcast of
-    * seeds, one map-side scoring pass, a per-vector rank window on
-    * k=8 rows each, then a k-key aggregate. a and b fall out of the
-    * SAME rank window (rk 1 and 2) — no second distance pass.
-    * Distances round at 9, s rounds at 9, means go through
-    * DECIMAL(18,9): bit-identical cross-engine. */
+    * Scale shape: identical to [[embKmeans]] — the collected seeds,
+    * one map-only scoring pass over the literal candidates, then a
+    * k-key aggregate. a and b fall out of the same candidates: the
+    * first `least` is the nearest seed, and nulling it out of a second
+    * `least` gives the runner-up (the candidates' ids are distinct, so
+    * only the nearest equals the first minimum). Distances round at 9,
+    * s rounds at 9, means go through DECIMAL(18,9): bit-identical
+    * cross-engine. */
   def embSilhouette(spark: SparkSession, d: String): DataFrame = {
-    // r17 opt (guide §2.3/§2.4): the old shape cross-joined the seed
-    // broadcast (k×N rows), ran a corpus-wide per-vector rank WINDOW
-    // (one full exchange + sort), split rk1/rk2 and SELF-JOINED them
-    // back on vec_id (another exchange). Seeds are ≤ 8 rows by
-    // construction — collected ([[kmCentsLit]]), the two nearest
-    // centroids fall out of `least` chains over k literal struct
-    // columns (lexicographic (dist2, cid) — the window's exact
-    // ordering; distinct cids make exact struct ties impossible, so
-    // null-ing the min out of the second `least` is the rk=2 row).
-    // Map-only: the only exchange left is the k-key final aggregate.
     // The s0..s7 structs live in their own projection so each distance
     // evaluates once (non-cheap exprs block projection collapse).
     val e = kmVectors(spark, d)
     val cents = kmCentsLit(kmSeeds(e))
-    val ds = kmDistCols(cents)
     val sCols = cents.indices.map(i => col(s"s$i"))
     val p1 = least(sCols: _*)
     val p2 = least(sCols.map(s => when(s === col("p1"), lit(null))
       .otherwise(s)): _*)
     val scored = e
-      .select(col("vec_id") +: ds.zipWithIndex.map { case (s, i) => s.as(s"s$i") }: _*)
+      .select(col("vec_id") +: candidates(cents, kmDist, "cid").zipWithIndex
+        .map { case (s, i) => s.as(s"s$i") }: _*)
       .select(col("vec_id") +: p1.as("p1") +: sCols: _*)
       .select(col("vec_id"), col("p1"), p2.as("p2"))
     scored
       .select(col("p1.cid").as("cid"),
-        round(sqrt(col("p1.dist2")), 9).as("da"),
-        round(sqrt(col("p2.dist2")), 9).as("db"))
+        round(sqrt(col("p1.dist")), 9).as("da"),
+        round(sqrt(col("p2.dist")), 9).as("db"))
       .select(col("cid"),
         when(greatest(col("da"), col("db")) > 0,
           round((col("db") - col("da")) / greatest(col("da"), col("db")), 9))
@@ -2026,28 +1841,13 @@ object SimilarityOps {
       .orderBy("cluster")
   }
 
-  /** DuckDB mirror of [[embSilhouette]] — the [[embKmeansSql]] CTE
-    * chain with the rank window kept to rk ≤ 2 and pivoted into
-    * (a, b) before the silhouette formula. */
+  /** DuckDB mirror of [[embSilhouette]]: the k-means prefix with each
+    * vector's two nearest seeds, pivoted into (a, b) before the
+    * silhouette formula. */
   def embSilhouetteSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |sr AS (SELECT vec_id, v, row_number() OVER (
-       |  ORDER BY ${xhash60Sql("CAST(vec_id AS VARCHAR)", 99)}, vec_id) AS r FROM e),
-       |seeds AS (SELECT r AS cid, v AS c FROM sr WHERE r <= 8),
-       |scored AS (
-       |  SELECT e.vec_id, s.cid,
-       |    round(list_sum(list_transform(e.v, x -> x*x))
-       |      - 2.0 * list_sum(list_transform(range(1, len(e.v) + 1),
-       |          i -> e.v[i] * s.c[i]))
-       |      + list_sum(list_transform(s.c, x -> x*x)), 9) AS dist2
-       |  FROM e CROSS JOIN seeds s),
-       |best AS (
-       |  SELECT vec_id, cid, dist2,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY dist2, cid) AS rk
-       |  FROM scored),
-       |aa AS (SELECT vec_id, cid, round(sqrt(dist2), 9) AS da FROM best WHERE rk = 1),
-       |bb AS (SELECT vec_id, round(sqrt(dist2), 9) AS db FROM best WHERE rk = 2),
+    s"""WITH ${kmSeedsScoredSql(2, materialized = false)},
+       |aa AS (SELECT vec_id, cid, round(sqrt(dist), 9) AS da FROM a1 WHERE rn = 1),
+       |bb AS (SELECT vec_id, round(sqrt(dist), 9) AS db FROM a1 WHERE rn = 2),
        |sil AS (SELECT aa.cid,
        |    CASE WHEN greatest(da, db) > 0
        |         THEN round((db - da) / greatest(da, db), 9)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.ops.OpsUtil.dsum
+import graft.ops.OpsUtil.{deleteRecursively, dsum}
 
 /** Structured Streaming equivalents of the batch event analytics
   * (graft.ops.EventOps). The reference is strictly batch (SURVEY.md
@@ -889,9 +889,6 @@ object EventStreams {
   // warmup + two passes) must not accumulate result dirs in /tmp, so
   // each call reaps the predecessor AFTER its own sink is written
   private val lastSink = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def deleteRecursively(dir: String): Unit =
-    graft.ops.OpsUtil.deleteRecursively(dir)
 
   // the FINAL sink per tag survives each call (its DataFrame reads it
   // lazily) — reap it at JVM exit so driver rounds don't pile sinks
