@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.Aggregator
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.SparkSession
+import graft.sources.SerializableHadoopConf
 import scala.jdk.CollectionConverters._
 
 /** Executes a [[MapReduceJob]] with the reference's exact dataflow
@@ -128,23 +129,6 @@ object MapReduceRunner {
       case FnSpec(f)     => rdd.mapPartitions(f)
     }
 
-  /** Serializable carrier for the session's Hadoop configuration —
-    * tasks must open files with the SAME fs settings (credentials,
-    * endpoints, custom schemes) the driver used for listing; a fresh
-    * `new Configuration()` in the task would silently drop them. */
-  private class SerializableHadoopConf(
-      @transient var value: org.apache.hadoop.conf.Configuration) extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
   /** F2 exact mode: sorted filenames, file i → map task i % M
     * (manager/__main__.py:101-107). Partition m of the returned RDD
     * streams exactly map task m's files, in assignment order. Files
@@ -162,6 +146,9 @@ object MapReduceRunner {
       (0 until m).map(t => files.zipWithIndex.collect {
         case (f, i) if i % m == t => f
       })
+    // tasks must open files with the SAME fs settings (credentials,
+    // endpoints, custom schemes) the driver used for listing; a fresh
+    // `new Configuration()` in the task would silently drop them
     val serConf = new SerializableHadoopConf(sc.hadoopConfiguration)
     // parallelize is positional: element m lands in partition m, so
     // TaskContext.partitionId IS the reference task_id.
@@ -203,6 +190,7 @@ object MapReduceRunner {
     val input = roundRobinInput(sc, job.inputDirectory, job.numMappers)
     val mapped = applyStage(input, job.mapper)
     val r = job.numReducers
+    // the session conf, as in roundRobinInput
     val serConf = new SerializableHadoopConf(sc.hadoopConfiguration)
     mapped.mapPartitionsWithIndex { (m, lines) =>
       val buckets = Array.fill(r)(scala.collection.mutable.ArrayBuffer.empty[String])

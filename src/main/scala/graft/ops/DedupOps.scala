@@ -377,37 +377,35 @@ object DedupOps {
     // lazy checkpoints here and per-round below: each round's single
     // driver action (the convergence count) materializes that round's
     // labels as a side effect — one job per round, not two
-    val edges = pairs.select(col("d1"), col("d2"))
-      .union(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
+    val edges = GraphOps.edgesOf(pairs)
       .localCheckpoint(false) // computed once; iterations reuse it
-    var labels = edges.select(col("d1").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
+    val labels0 = GraphOps.vertexIds(edges)
+      .select(col("id").as("doc_id"), col("id").as("cluster_id"))
       .localCheckpoint(false)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxRounds) {
-      val nbrMin = edges.join(labels, edges("d2") === labels("doc_id"))
-        .groupBy(col("d1")).agg(min(col("cluster_id")).as("nbr_min"))
-      // pointer jump: my label's CURRENT label (labels is checkpointed,
-      // so the three uses below scan materialized blocks, not lineage)
-      val self = labels.select(col("doc_id").as("jid"), col("cluster_id").as("jlabel"))
-      // the convergence indicator rides along in the propagation join
-      // itself (no separate old-vs-new join per round); the count after
-      // the eager checkpoint is a cheap scan of materialized partitions
-      val best = least(
-        coalesce(col("nbr_min"), col("cluster_id")),
-        coalesce(col("jlabel"), col("cluster_id")))
-      val next = labels
-        .join(nbrMin, labels("doc_id") === nbrMin("d1"), "left_outer")
-        .join(self, labels("cluster_id") === col("jid"), "left_outer")
-        .select(labels("doc_id"),
-          least(col("cluster_id"), best).as("cluster_id"),
-          (best < col("cluster_id")).cast("long").as("__chg"))
-        .localCheckpoint(false)
-      changed = next.agg(coalesce(sum(col("__chg")), lit(0L))).head().getLong(0)
-      labels = next.drop("__chg")
-      iter += 1
-    }
+    // the state carries the round's change count for the check below
+    val ((labels, changed), iter) =
+      GraphOps.untilStable(maxRounds)((labels0, 1L)) { case (labels, _) =>
+        val nbrMin = edges.join(labels, edges("dst") === labels("doc_id"))
+          .groupBy(col("src")).agg(min(col("cluster_id")).as("nbr_min"))
+        // pointer jump: my label's CURRENT label (labels is checkpointed,
+        // so the three uses below scan materialized blocks, not lineage)
+        val self = labels.select(col("doc_id").as("jid"), col("cluster_id").as("jlabel"))
+        // the convergence indicator rides along in the propagation join
+        // itself (no separate old-vs-new join per round); the count after
+        // the lazy checkpoint is a cheap scan of materialized partitions
+        val best = least(
+          coalesce(col("nbr_min"), col("cluster_id")),
+          coalesce(col("jlabel"), col("cluster_id")))
+        val next = labels
+          .join(nbrMin, labels("doc_id") === nbrMin("src"), "left_outer")
+          .join(self, labels("cluster_id") === col("jid"), "left_outer")
+          .select(labels("doc_id"),
+            least(col("cluster_id"), best).as("cluster_id"),
+            (best < col("cluster_id")).cast("long").as("__chg"))
+          .localCheckpoint(false)
+        val chg = next.agg(coalesce(sum(col("__chg")), lit(0L))).head().getLong(0)
+        ((next.drop("__chg"), chg), chg > 0)
+      }
     // with pointer jumping the cap is log-scale (maxRounds=20 covers
     // diameters ~2^20); past it, truncated labels are silently wrong
     // (and oracle-divergent), so fail LOUDLY
@@ -453,18 +451,15 @@ object DedupOps {
         (col("doc_id") === col("cluster_id")).as("is_kept"))
       .orderBy("doc_id")
 
-  def dedupClustersSql: String = {
-    val minhashPairs = dedupMinhashSql.replace("ORDER BY d1, d2", "")
-    s"""WITH RECURSIVE mh AS ($minhashPairs),
-       |edges AS (SELECT d1, d2 FROM mh UNION SELECT d2 AS d1, d1 AS d2 FROM mh),
+  def dedupClustersSql: String =
+    s"""WITH RECURSIVE ${GraphOps.minhashEdgeCtesSql},
        |reach(id, r) AS (
        |  SELECT doc_id, doc_id FROM documents
        |  UNION
-       |  SELECT e.d1, reach.r FROM edges e JOIN reach ON e.d2 = reach.id),
+       |  SELECT e.dst, reach.r FROM edges e JOIN reach ON e.src = reach.id),
        |clusters AS (SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id)
        |SELECT doc_id, cluster_id, doc_id = cluster_id AS is_kept
        |FROM clusters ORDER BY doc_id""".stripMargin
-  }
 
   /** Cluster-size histogram over [[dedupClusters]] — the dedup run's
     * headline ops metric: how many size-k near-dup clusters exist,

@@ -42,10 +42,6 @@ object GraphOps {
   // growth across rounds is otherwise quadratic in plan work)
   private val CheckpointEvery = 5
 
-  /** PageRank on the symmetrized near-dup graph: r₀ = 1, then
-    * [[Rounds]] rounds of r'(v) = 0.15 + 0.85·Σ_{u→v} r(u)/deg(u).
-    * Edge-induced subgraph only (every node has degree ≥ 1, so there
-    * is no dangling mass and every node receives rank each round). */
   // The near-dup pair graph is a build-once artifact: a pipeline runs
   // the minhash dedup once and then probes the graph many times
   // (ranking, density audits). One persisted pair table per
@@ -75,58 +71,149 @@ object GraphOps {
     * must target these DataFrames. */
   private[graft] def pairCacheSnapshot: Seq[DataFrame] = SharedBuild.live[DataFrame]("pairs")
 
+  // ---- the vertex-round kernel -----------------------------------
+  // Each round of an iterative graph algorithm is one MapReduce job:
+  // the vertex state joins the edges on src (map side), the result
+  // shuffles by dst, and a min, sum or count reduces it. The pieces
+  // below are that job's fixed parts; each algorithm supplies its own
+  // state, reduce and convergence measure.
+
+  /** The symmetrized edge table of an undirected pair list (d1, d2):
+    * each pair in both orientations, as (src, dst). */
+  private[ops] def edgesOf(pairs: DataFrame): DataFrame =
+    pairs.select(col("d1").as("src"), col("d2").as("dst"))
+      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
+
+  /** The vertex set of a symmetrized edge table, as `id`. */
+  private[ops] def vertexIds(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("id")).distinct()
+
+  /** Degree per vertex of a symmetrized edge table: (`key`, deg). */
+  private def degreesOf(edges: DataFrame, key: String = "doc_id"): DataFrame =
+    edges.groupBy(col("src").as(key)).agg(count(lit(1)).as("deg"))
+
+  /** Vertex-count ceiling for the broadcast plan: a vertex state row
+    * such as PageRank's (id BIGINT, r DOUBLE) is ≈ 24 B serialized,
+    * so 2²⁰ vertices is a ~25 MB broadcast — the largest per-round
+    * driver collect worth paying. Past the gate an unconditional
+    * `broadcast(state)` IS a per-round driver collect of |V| rows
+    * (|V| grows with the corpus at 100 TB), so the plan flips to the
+    * shuffle-reuse mode of [[VertexGate]]. */
+  private val BroadcastVertexLimit = 1L << 20
+
+  /** The |V| gate and relax join of every vertex-round loop. Join
+    * strategies are PINNED with explicit hints rather than left to
+    * stats: the pair table arrives from a shared persisted cache whose
+    * size estimate differs by orders of magnitude between the
+    * unmaterialized (plan-estimate) and materialized (actual-bytes)
+    * states, so an unhinted plan flips broadcast↔SMJ with cache
+    * warmth. Which PINNED plan runs is decided once, by one `count()`
+    * of the checkpointed vertex table (a build-time action, not a
+    * per-round one):
+    *
+    *  - |V| ≤ `limit`: the vertex state broadcasts — one shuffle per
+    *    round (the dst re-aggregation), no exchange on the edge side.
+    *  - |V| above the gate: the edge side is hash-partitioned by `src`
+    *    ONCE (the partitioning survives the localCheckpoint into the
+    *    LogicalRDD), and every round's join is a shuffled hash join
+    *    that reuses it — only the |V|-row state exchanges per round,
+    *    never the |E|-row edge side, and nothing |V|-sized ever visits
+    *    the driver.
+    *
+    * With `joinVertices` the vertex table (keyed `src`) is joined onto
+    * the edges, under the same pinned strategy, before the edge side's
+    * one checkpoint — PageRank's degrees. */
+  private final class VertexGate(edges: DataFrame, vertices: DataFrame, limit: Long,
+      joinVertices: Boolean = false) {
+    private val small = vertices.count() <= limit
+    private def pinned(t: DataFrame): DataFrame =
+      if (small) broadcast(t) else t.hint("shuffle_hash")
+    private val bySrc: DataFrame = {
+      val part = if (small) edges else edges.repartition(col("src"))
+      if (joinVertices) part.join(pinned(vertices), Seq("src")).localCheckpoint(false)
+      else if (small) edges
+      else part.localCheckpoint(false)
+    }
+
+    /** One round's relax join: the vertex state (keyed `id`) joined to
+      * each vertex's out-edges. */
+    def relax(state: DataFrame): DataFrame =
+      bySrc.join(pinned(state), col("id") === col("src"))
+  }
+
+  /** The capped early-exit loop of every vertex-round algorithm: runs
+    * `round` on the state until it reports no change or `cap` rounds
+    * have run, and returns the last state with the number of rounds
+    * run. Each round owns its convergence measure and its one driver
+    * action, which also materializes that round's lazy checkpoint —
+    * one job per round. Where the cap is declared semantics (BFS,
+    * label propagation, k-core) the early exit is invisible: a round
+    * that changes nothing is a fixpoint, every later round is the
+    * identity, and the oracle's unrolled rounds compute the same
+    * rows. */
+  private[ops] def untilStable[S](cap: Int)(init: S)(round: S => (S, Boolean)): (S, Int) = {
+    var state = init
+    var t = 0
+    var changed = true
+    while (changed && t < cap) {
+      t += 1
+      val (next, c) = round(state)
+      state = next
+      changed = c
+    }
+    (state, t)
+  }
+
+  /** The head of every DuckDB graph mirror: `up(d1, d2)`, the
+    * undirected pair list given by `upSql`, and `edges(src, dst)`,
+    * both its orientations ([[edgesOf]]). AS MATERIALIZED: the
+    * unrolled rounds and self-joins read both many times, and an
+    * inlining planner would re-run the whole pair build per
+    * reference. */
+  private def edgeCtesSql(upSql: String): String =
+    s"""up AS MATERIALIZED (
+       |  $upSql),
+       |edges AS MATERIALIZED (
+       |  SELECT d1 AS src, d2 AS dst FROM up
+       |  UNION ALL
+       |  SELECT d2 AS src, d1 AS dst FROM up)""".stripMargin
+
+  /** [[edgeCtesSql]] over the verified MinHash pairs (jaccard ≥ 0.6),
+    * after the shared minhash pair CTEs. */
+  private[ops] def minhashEdgeCtesSql: String =
+    s"""${DedupOps.minhashPairsCteSql},
+       |${edgeCtesSql("SELECT d1, d2 FROM pairs WHERE jaccard >= 0.6")}""".stripMargin
+
+  /** [[edgeCtesSql]] over the embedding-LSH pair build. */
+  private def lshEdgeCtesSql: String =
+    edgeCtesSql(s"SELECT v1 AS d1, v2 AS d2 FROM (${SimilarityOps.dedupEmbeddingLshSql})")
+
+  /** [[degreesOf]] as a CTE over `edges`. */
+  private val DegCteSql = "deg AS (SELECT src AS doc_id, COUNT(*) AS deg FROM edges GROUP BY src)"
+
+  /** PageRank on the symmetrized near-dup graph: r₀ = 1, then
+    * [[Rounds]] rounds of r'(v) = 0.15 + 0.85·Σ_{u→v} r(u)/deg(u).
+    * Edge-induced subgraph only (every node has degree ≥ 1, so there
+    * is no dangling mass and every node receives rank each round). */
   def pagerank(spark: SparkSession, d: String): DataFrame =
     pagerankOnPairs(cachedPairs(spark, d))
 
-  /** Vertex-count ceiling for the broadcast plan: ranks rows are
-    * (id BIGINT, r DOUBLE) ≈ 24 B serialized, so 2²⁰ vertices is a
-    * ~25 MB broadcast — the largest per-round driver collect worth
-    * paying. Past the gate an unconditional `broadcast(ranks)` IS a
-    * per-round driver collect of |V| rows (|V| grows with the corpus
-    * at 100 TB), so the plan flips to the shuffle-reuse mode below. */
-  private val BroadcastVertexLimit = 1L << 20
-
   /** PR over an arbitrary undirected pair list (d1, d2) — the testable
-    * core; [[pagerank]] feeds it the minhash near-dup pairs.
-    *
-    * Join strategies are PINNED with explicit hints rather than left
-    * to stats: the pair table arrives from a shared persisted cache
-    * whose size estimate differs by orders of magnitude between the
-    * unmaterialized (plan-estimate) and materialized (actual-bytes)
-    * states, so an unhinted plan flips broadcast↔SMJ with cache
-    * warmth. Which PINNED plan runs is gated on |V| (one build-time
-    * `deg.count()` on an already-checkpointed aggregate, not a
-    * per-round action):
-    *
-    *  - |V| ≤ [[BroadcastVertexLimit]]: broadcast deg/ranks — one
-    *    shuffle per round (the dst re-aggregation), no exchange on
-    *    the edge side.
-    *  - |V| above the gate: `withDeg` is hash-partitioned by `src`
-    *    ONCE (the partitioning survives the localCheckpoint into the
-    *    LogicalRDD), and every round's rank join is a shuffled hash
-    *    join that reuses it — only the |V|-row ranks side exchanges
-    *    per round, never the |E|-row edge side, and nothing |V|-sized
-    *    ever visits the driver. */
+    * core; [[pagerank]] feeds it the minhash near-dup pairs. Each
+    * round is one [[VertexGate]] relax join (rank × degree-decorated
+    * edge, keyed on src) plus one aggregation keyed on dst; the gate
+    * counts the checkpointed degree table. Fixed rounds, no early
+    * exit: the ranks move every round. */
   private[ops] def pagerankOnPairs(pairs: DataFrame, rounds: Int = Rounds,
       broadcastVertexLimit: Long = BroadcastVertexLimit): DataFrame = {
     // symmetrize once, materialize once: every round must re-read
     // blocks, not re-run the upstream pipeline
-    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .localCheckpoint(false)
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
-    val smallV = deg.count() <= broadcastVertexLimit
-    val withDeg =
-      if (smallV) edges.join(broadcast(deg), Seq("src")).localCheckpoint(false)
-      else edges.repartition(col("src"))
-        .join(deg.hint("shuffle_hash"), Seq("src")).localCheckpoint(false)
+    val edges = edgesOf(pairs).localCheckpoint(false)
+    val deg = degreesOf(edges, "src").localCheckpoint(false)
+    val gate = new VertexGate(edges, deg, broadcastVertexLimit, joinVertices = true)
     var ranks = deg.select(col("src").as("id"), lit(1.0).as("r"))
     for (t <- 1 to rounds) {
-      val contrib =
-        if (smallV) withDeg.join(broadcast(ranks), col("id") === col("src"))
-        else withDeg.join(ranks.hint("shuffle_hash"), col("id") === col("src"))
-      ranks = contrib
+      ranks = gate.relax(ranks)
         .select(col("dst"),
           // quantized contribution: exact BIGINT sum in any order
           round(col("r") / col("deg") * lit(QScale)).cast("long").as("cq"))
@@ -160,10 +247,10 @@ object GraphOps {
     * oracle unrolls exactly the same count — a vertex farther than
     * the cap from its true component minimum reports the best label
     * within the horizon, identically in both engines). Per-round
-    * plan: one equi-join (frontier × edges on src) + one min-agg on
-    * id, gated exactly like [[pagerankOnPairs]]: small |V| broadcasts
-    * the frontier; past the gate the edge table is hash-partitioned
-    * by src once and only the frontier shuffles. */
+    * plan: one [[VertexGate]] relax join (frontier × edges on src) +
+    * one min-agg on id: small |V| broadcasts the frontier; past the
+    * gate the edge table is hash-partitioned by src once and only the
+    * frontier shuffles. */
   def bfs(spark: SparkSession, d: String): DataFrame =
     bfsOnPairs(cachedPairs(spark, d))
 
@@ -187,24 +274,15 @@ object GraphOps {
     * round crosses the driver — no extra old-vs-new join. */
   private[ops] def bfsOnPairsCounted(pairs: DataFrame, rounds: Int = BfsRounds,
       broadcastVertexLimit: Long = BroadcastVertexLimit): (DataFrame, Int) = {
-    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .localCheckpoint(false)
-    var best = edges.select(col("src").as("id")).distinct()
+    val edges = edgesOf(pairs).localCheckpoint(false)
+    val best0 = vertexIds(edges)
       .select(col("id"), (col("id") * lit(BfsEnc)).as("enc"))
       .localCheckpoint(false)
-    val smallV = best.count() <= broadcastVertexLimit
-    val edgesBySrc =
-      if (smallV) edges else edges.repartition(col("src")).localCheckpoint(false)
-    var t = 0
-    var changed = 1L
-    while (changed > 0 && t < rounds) {
-      t += 1
-      val prop =
-        (if (smallV) edgesBySrc.join(broadcast(best), col("id") === col("src"))
-         else edgesBySrc.join(best.hint("shuffle_hash"), col("id") === col("src")))
-          .select(col("dst").as("id"), (col("enc") + lit(1L)).as("enc"),
-            lit(Long.MaxValue).as("old"))
+    val gate = new VertexGate(edges, best0, broadcastVertexLimit)
+    val (best, t) = untilStable(rounds)(best0) { best =>
+      val prop = gate.relax(best)
+        .select(col("dst").as("id"), (col("enc") + lit(1L)).as("enc"),
+          lit(Long.MaxValue).as("old"))
       // every id appears exactly once in best (the vertex set is
       // fixed), so min(old) over the group IS the previous label
       val next = best.select(col("id"), col("enc"), col("enc").as("old"))
@@ -212,10 +290,10 @@ object GraphOps {
         .groupBy(col("id"))
         .agg(min(col("enc")).as("enc"), min(col("old")).as("old"))
         .localCheckpoint(false) // lazy; the count below materializes it
-      changed = next
+      val changed = next
         .agg(coalesce(sum((col("enc") < col("old")).cast("long")), lit(0L)))
         .head().getLong(0)
-      best = next.drop("old")
+      (next.drop("old"), changed > 0)
     }
     (best.select(col("id").as("doc_id"),
         expr(s"enc div $BfsEnc").as("root"),
@@ -240,11 +318,7 @@ object GraphOps {
          |    FROM b${t - 1} b JOIN edges e ON e.src = b.id) u
          |  GROUP BY id)""".stripMargin
     }.mkString(",\n")
-    s"""WITH ${DedupOps.minhashPairsCteSql},
-       |edges AS MATERIALIZED (
-       |  SELECT d1 AS src, d2 AS dst FROM pairs WHERE jaccard >= 0.6
-       |  UNION ALL
-       |  SELECT d2 AS src, d1 AS dst FROM pairs WHERE jaccard >= 0.6),
+    s"""WITH $minhashEdgeCtesSql,
        |b0 AS MATERIALIZED (
        |  SELECT DISTINCT src AS id, src * $BfsEnc AS enc FROM edges),
        |$roundCtes
@@ -293,18 +367,13 @@ object GraphOps {
   }
 
   private[ops] def orientedEdges(pairs: DataFrame): DataFrame =
-    orientedEdges(pairs, degreesOf(pairs))
-
-  private def degreesOf(pairs: DataFrame): DataFrame =
-    pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .groupBy(col("src").as("doc_id")).agg(count(lit(1)).as("deg"))
+    orientedEdges(pairs, degreesOf(edgesOf(pairs)))
 
   private[ops] def trianglesOnPairs(rawPairs: DataFrame): DataFrame = {
     val pairs = rawPairs.localCheckpoint(false) // (d1 < d2) by upstream construction
     // one degree aggregate feeds BOTH the orientation and the final
     // coefficient join (localCheckpoint: small |V|-row table, read 3×)
-    val deg = degreesOf(pairs).localCheckpoint(false)
+    val deg = degreesOf(edgesOf(pairs)).localCheckpoint(false)
     // materialize the oriented list once: the two-join reads it thrice
     val ord = orientedEdges(pairs, deg).localCheckpoint(false)
     // the candidate-path self-joins are edge-scale on BOTH sides —
@@ -327,13 +396,8 @@ object GraphOps {
   }
 
   def trianglesSql: String =
-    s"""WITH ${DedupOps.minhashPairsCteSql},
-       |up AS (SELECT d1, d2 FROM pairs WHERE jaccard >= 0.6),
-       |edges AS (
-       |  SELECT d1 AS src, d2 AS dst FROM up
-       |  UNION ALL
-       |  SELECT d2 AS src, d1 AS dst FROM up),
-       |deg AS (SELECT src AS doc_id, COUNT(*) AS deg FROM edges GROUP BY src),
+    s"""WITH $minhashEdgeCtesSql,
+       |$DegCteSql,
        |tri AS (
        |  SELECT ab.d1 AS a, ab.d2 AS b, bc.d2 AS c
        |  FROM up ab
@@ -363,7 +427,7 @@ object GraphOps {
     degreeDistOnPairs(cachedPairs(spark, d))
 
   private[ops] def degreeDistOnPairs(pairs: DataFrame): DataFrame = {
-    val hist = degreesOf(pairs)
+    val hist = degreesOf(edgesOf(pairs))
       .groupBy(col("deg")).agg(count(lit(1)).as("n_nodes"))
     val tot = hist.agg(sum(col("n_nodes")).as("nv"))
     // degree-descending running sum = nodes with degree ≥ this one;
@@ -379,11 +443,8 @@ object GraphOps {
   }
 
   def degreeDistSql: String =
-    s"""WITH ${DedupOps.minhashPairsCteSql},
-       |up AS (SELECT d1, d2 FROM pairs WHERE jaccard >= 0.6),
-       |edges AS (
-       |  SELECT d1 AS src FROM up UNION ALL SELECT d2 FROM up),
-       |deg AS (SELECT src AS doc_id, COUNT(*) AS deg FROM edges GROUP BY src),
+    s"""WITH $minhashEdgeCtesSql,
+       |$DegCteSql,
        |hist AS (SELECT deg, COUNT(*) AS n_nodes FROM deg GROUP BY deg),
        |tot AS (SELECT SUM(n_nodes) AS nv FROM hist)
        |SELECT deg, CAST(n_nodes AS BIGINT) AS n_nodes,
@@ -418,9 +479,8 @@ object GraphOps {
 
   private[ops] def linkPredOnPairs(rawPairs: DataFrame): DataFrame = {
     val pairs = rawPairs.localCheckpoint(false) // (d1 < d2) upstream
-    val deg = degreesOf(pairs).localCheckpoint(false)
-    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
+    val edges = edgesOf(pairs)
+    val deg = degreesOf(edges).localCheckpoint(false)
     // two-path join through the middle vertex; a < c keeps each
     // candidate once (the undirected pair), same-vertex excluded
     val common = edges.select(col("src").as("a"), col("dst").as("b"))
@@ -439,13 +499,8 @@ object GraphOps {
   }
 
   def linkPredSql: String =
-    s"""WITH up AS (
-       |  SELECT v1 AS d1, v2 AS d2 FROM (${SimilarityOps.dedupEmbeddingLshSql})),
-       |edges AS (
-       |  SELECT d1 AS src, d2 AS dst FROM up
-       |  UNION ALL
-       |  SELECT d2 AS src, d1 AS dst FROM up),
-       |deg AS (SELECT src AS doc_id, COUNT(*) AS deg FROM edges GROUP BY src),
+    s"""WITH $lshEdgeCtesSql,
+       |$DegCteSql,
        |common AS (
        |  SELECT e1.src AS a, e2.dst AS c, COUNT(*) AS n_common
        |  FROM edges e1 JOIN edges e2 ON e1.dst = e2.src
@@ -472,14 +527,10 @@ object GraphOps {
          |  FROM wdeg e JOIN r${t - 1} r ON r.id = e.src
          |  GROUP BY e.dst)""".stripMargin
     }.mkString(",\n")
-    s"""WITH ${DedupOps.minhashPairsCteSql},
-       |edges AS (
-       |  SELECT d1 AS src, d2 AS dst FROM pairs WHERE jaccard >= 0.6
-       |  UNION ALL
-       |  SELECT d2 AS src, d1 AS dst FROM pairs WHERE jaccard >= 0.6),
-       |deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
-       |wdeg AS (SELECT e.src, e.dst, d.deg FROM edges e JOIN deg d ON d.src = e.src),
-       |r0 AS (SELECT src AS id, CAST(1.0 AS DOUBLE) AS r FROM deg),
+    s"""WITH $minhashEdgeCtesSql,
+       |$DegCteSql,
+       |wdeg AS (SELECT e.src, e.dst, d.deg FROM edges e JOIN deg d ON d.doc_id = e.src),
+       |r0 AS (SELECT doc_id AS id, CAST(1.0 AS DOUBLE) AS r FROM deg),
        |$round1
        |SELECT id AS doc_id, r AS rank FROM r$Rounds ORDER BY doc_id""".stripMargin
   }
@@ -501,12 +552,12 @@ object GraphOps {
     * components are isolated couples with no majority structure).
     *
     * Rounds are CAPPED at [[LpaRounds]] as declared semantics (the
-    * oracle unrolls exactly that count) with the [[bfsOnPairsCounted]]
+    * oracle unrolls exactly that count) with the [[untilStable]]
     * early exit: a round that changes no label is a fixpoint — every
     * later round recomputes the identity, so stopping is invisible.
-    * Per-round plan: one equi-join (labels × edges, broadcast under
-    * the [[BroadcastVertexLimit]] vertex gate, frontier-only shuffle
-    * past it), one (vertex,label) count aggregate, and a per-vertex
+    * Per-round plan: one [[VertexGate]] relax join (labels × edges,
+    * broadcast under the vertex gate, frontier-only shuffle past
+    * it), one (vertex,label) count aggregate, and a per-vertex
     * winner pick via a ROW_NUMBER window partitioned by vertex —
     * candidate lists per vertex are degree-bounded, so the window
     * sort is per-neighborhood work, never data-sized. All-integer
@@ -521,24 +572,14 @@ object GraphOps {
 
   private[ops] def labelPropOnPairsCounted(pairs: DataFrame, rounds: Int = LpaRounds,
       broadcastVertexLimit: Long = BroadcastVertexLimit): (DataFrame, Int) = {
-    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
+    val edges = edgesOf(pairs).localCheckpoint(false)
+    val labels0 = vertexIds(edges).select(col("id"), col("id").as("label"))
       .localCheckpoint(false)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint(false)
-    val smallV = labels.count() <= broadcastVertexLimit
-    val edgesBySrc =
-      if (smallV) edges else edges.repartition(col("src")).localCheckpoint(false)
-    var t = 0
-    var changed = 1L
-    while (changed > 0 && t < rounds) {
-      t += 1
-      val votes =
-        (if (smallV) edgesBySrc.join(broadcast(labels), col("id") === col("src"))
-         else edgesBySrc.join(labels.hint("shuffle_hash"), col("id") === col("src")))
-          .select(col("dst").as("vid"), col("label"))
-          .union(labels.select(col("id").as("vid"), col("label"))) // self-vote
+    val gate = new VertexGate(edges, labels0, broadcastVertexLimit)
+    val (labels, t) = untilStable(rounds)(labels0) { labels =>
+      val votes = gate.relax(labels)
+        .select(col("dst").as("vid"), col("label"))
+        .union(labels.select(col("id").as("vid"), col("label"))) // self-vote
       val w = Window.partitionBy(col("vid"))
         .orderBy(col("cnt").desc, col("label").asc)
       val next = votes.groupBy(col("vid"), col("label"))
@@ -547,19 +588,15 @@ object GraphOps {
         .where(col("rn") === 1)
         .select(col("vid").as("id"), col("label"))
         .localCheckpoint(false) // lazy; the count below materializes it
-      changed = next
+      val changed = next
         .join(labels.withColumnRenamed("label", "old"), Seq("id"))
         .agg(coalesce(sum((col("label") =!= col("old")).cast("long")), lit(0L)))
         .head().getLong(0)
-      labels = next
+      (next, changed > 0)
     }
     (labels.select(col("id").as("vec_id"), col("label")).orderBy("vec_id"), t)
   }
 
-  /** DuckDB mirror: the embedding-LSH pair build as a subquery, then
-    * [[LpaRounds]] unrolled majority-vote rounds with the identical
-    * self-vote union and (cnt DESC, label ASC) winner order. AS
-    * MATERIALIZED per round for the same reason as [[bfsSql]]. */
   /** The up/edges/l0/round CTE chain ending in `l{LpaRounds}` —
     * shared by [[labelPropSql]] and [[modularitySql]]. */
   private def labelPropCtesSql: String = {
@@ -576,16 +613,15 @@ object GraphOps {
          |      ROW_NUMBER() OVER (PARTITION BY vid ORDER BY cnt DESC, label ASC) AS rn
          |    FROM c$t) x WHERE rn = 1)""".stripMargin
     }.mkString(",\n")
-    s"""up AS MATERIALIZED (
-       |  SELECT v1 AS d1, v2 AS d2 FROM (${SimilarityOps.dedupEmbeddingLshSql})),
-       |edges AS MATERIALIZED (
-       |  SELECT d1 AS src, d2 AS dst FROM up
-       |  UNION ALL
-       |  SELECT d2 AS src, d1 AS dst FROM up),
+    s"""$lshEdgeCtesSql,
        |l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS label FROM edges),
        |$roundCtes""".stripMargin
   }
 
+  /** DuckDB mirror: the embedding-LSH pair build as a subquery, then
+    * [[LpaRounds]] unrolled majority-vote rounds with the identical
+    * self-vote union and (cnt DESC, label ASC) winner order. AS
+    * MATERIALIZED per round for the same reason as [[bfsSql]]. */
   def labelPropSql: String =
     s"""WITH $labelPropCtesSql
        |SELECT id AS vec_id, label FROM l$LpaRounds ORDER BY vec_id""".stripMargin
@@ -607,10 +643,9 @@ object GraphOps {
   def modularity(spark: SparkSession, d: String): DataFrame = {
     val pairs = cachedLshPairs(spark, d)
     val labels = labelPropOnPairs(pairs).localCheckpoint(false)
-    val deg = pairs.select(col("d1").as("src")).union(pairs.select(col("d2").as("src")))
-      .groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    val deg = degreesOf(edgesOf(pairs))
     val m = pairs.agg(count(lit(1)).as("m"))
-    val dc = deg.join(labels.select(col("vec_id").as("src"), col("label")), Seq("src"))
+    val dc = deg.join(labels.select(col("vec_id").as("doc_id"), col("label")), Seq("doc_id"))
       .groupBy(col("label")).agg(sum(col("deg")).as("d_c"))
     val ec = pairs
       .join(labels.select(col("vec_id").as("d1"), col("label").as("la")), Seq("d1"))
@@ -630,10 +665,10 @@ object GraphOps {
     s"""WITH $labelPropCtesSql,
        |labels AS MATERIALIZED (SELECT id, label FROM l$LpaRounds),
        |m AS (SELECT COUNT(*) AS m FROM up),
+       |$DegCteSql,
        |dc AS (
-       |  SELECT l.label, SUM(d.deg) AS d_c FROM
-       |    (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1) d
-       |  JOIN labels l ON l.id = d.src GROUP BY 1),
+       |  SELECT l.label, SUM(d.deg) AS d_c
+       |  FROM deg d JOIN labels l ON l.id = d.doc_id GROUP BY 1),
        |ec AS (
        |  SELECT la.label, COUNT(*) AS e_c
        |  FROM up JOIN labels la ON la.id = up.d1 JOIN labels lb ON lb.id = up.d2
@@ -672,32 +707,27 @@ object GraphOps {
 
   private[ops] def kcoreOnPairs(pairs: DataFrame, maxK: Int = KcoreMaxK,
       rounds: Int = KcoreRounds): DataFrame = {
-    val edges0 = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .localCheckpoint(false)
-    val verts = edges0.select(col("src").as("id")).distinct().localCheckpoint(false)
-    var coreness = verts.select(col("id"), lit(1L).as("coreness"))
-    var live = edges0
-    var liveCount = live.count()
+    val edges = edgesOf(pairs).localCheckpoint(false)
+    var coreness = vertexIds(edges).localCheckpoint(false)
+      .select(col("id"), lit(1L).as("coreness"))
+    // the live edge set with its count: the count is each round's
+    // convergence measure and its one driver action
+    var live = (edges, edges.count())
     for (k <- 2 to maxK) {
-      var r = 0
-      var changed = true
-      while (changed && r < rounds && liveCount > 0) {
-        r += 1
-        val keep = live.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      // an empty graph has nothing left to peel at any level
+      live = untilStable(if (live._2 > 0) rounds else 0)(live) { case (liveEdges, n) =>
+        val keep = liveEdges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
           .where(col("deg") >= k).select(col("src").as("kid"))
-        val next = live
+        val next = liveEdges
           .join(keep, col("src") === col("kid"), "left_semi")
           .join(keep, col("dst") === col("kid"), "left_semi")
           .localCheckpoint(false) // lazy; the count below materializes it
         val nextCount = next.count()
         // peeling strictly shrinks the edge set whenever any vertex
         // fell below k, so an unchanged count IS the fixpoint
-        changed = nextCount != liveCount
-        live = next
-        liveCount = nextCount
-      }
-      val inCore = live.select(col("src").as("id")).distinct()
+        ((next, nextCount), nextCount != n && nextCount > 0)
+      }._1
+      val inCore = vertexIds(live._1)
       coreness = coreness
         .join(inCore.withColumn("hit", lit(1L)), Seq("id"), "left_outer")
         .select(col("id"), (col("coreness") + coalesce(col("hit"), lit(0L))).as("coreness"))
@@ -709,13 +739,9 @@ object GraphOps {
     * k = 2..[[KcoreMaxK]], each MATERIALIZED ([[bfsSql]] rationale),
     * then coreness = 1 + level-membership indicators. */
   def kcoreSql: String = {
-    val ctes = scala.collection.mutable.ArrayBuffer(
-      s"""up AS MATERIALIZED (
-         |  SELECT v1 AS d1, v2 AS d2 FROM (${SimilarityOps.dedupEmbeddingLshSql}))""".stripMargin,
-      """e_1 AS MATERIALIZED (
-        |  SELECT d1 AS src, d2 AS dst FROM up UNION ALL SELECT d2, d1 FROM up)""".stripMargin,
-      "verts AS MATERIALIZED (SELECT DISTINCT src AS id FROM e_1)")
-    var prev = "e_1"
+    val ctes = scala.collection.mutable.ArrayBuffer(lshEdgeCtesSql,
+      "verts AS MATERIALIZED (SELECT DISTINCT src AS id FROM edges)")
+    var prev = "edges"
     val coreCols = (2 to KcoreMaxK).map { k =>
       (1 to KcoreRounds).foreach { r =>
         ctes += s"""keep_${k}_$r AS MATERIALIZED (
@@ -757,12 +783,11 @@ object GraphOps {
     assortativityOnPairs(cachedLshPairs(spark, d))
 
   private[ops] def assortativityOnPairs(pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-    val deg = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+    val edges = edgesOf(pairs)
+    val deg = degreesOf(edges)
     val xy = edges
-      .join(deg.select(col("id").as("src"), col("deg").as("x")), Seq("src"))
-      .join(deg.select(col("id").as("dst"), col("deg").as("y")), Seq("dst"))
+      .join(deg.select(col("doc_id").as("src"), col("deg").as("x")), Seq("src"))
+      .join(deg.select(col("doc_id").as("dst"), col("deg").as("y")), Seq("dst"))
     val s = xy.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
       sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
       sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"))
@@ -775,14 +800,11 @@ object GraphOps {
   }
 
   def assortativitySql: String =
-    s"""WITH up AS MATERIALIZED (
-       |  SELECT v1 AS d1, v2 AS d2 FROM (${SimilarityOps.dedupEmbeddingLshSql})),
-       |edges AS (
-       |  SELECT d1 AS src, d2 AS dst FROM up UNION ALL SELECT d2, d1 FROM up),
-       |deg AS (SELECT src AS id, COUNT(*) AS deg FROM edges GROUP BY 1),
+    s"""WITH $lshEdgeCtesSql,
+       |$DegCteSql,
        |xy AS (
        |  SELECT dx.deg AS x, dy.deg AS y FROM edges e
-       |  JOIN deg dx ON dx.id = e.src JOIN deg dy ON dy.id = e.dst),
+       |  JOIN deg dx ON dx.doc_id = e.src JOIN deg dy ON dy.doc_id = e.dst),
        |s AS (
        |  SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy, SUM(x*y) AS sxy,
        |         SUM(x*x) AS sxx, SUM(y*y) AS syy FROM xy)
@@ -816,19 +838,17 @@ object GraphOps {
     clusteringOnPairs(cachedLshPairs(spark, d))
 
   private[ops] def clusteringOnPairs(pairs: DataFrame): DataFrame = {
-    val up = pairs.select(col("d1"), col("d2"))
-    val edges = up.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(up.select(col("d2").as("src"), col("d1").as("dst")))
-    val deg = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+    val edges = edgesOf(pairs)
+    val deg = degreesOf(edges)
     val paths = edges.as("e1").join(edges.as("e2"),
         col("e1.dst") === col("e2.src") && col("e1.src") < col("e2.dst"))
       .select(col("e1.src").as("a"), col("e1.dst").as("v"), col("e2.dst").as("c"))
-    // inner (not semi) is safe: `up` is distinct canonical pairs, so
-    // each closing edge matches a path exactly once
-    val tri = paths.join(up.select(col("d1").as("a"), col("d2").as("c")), Seq("a", "c"))
+    // inner (not semi) is safe: `pairs` is distinct canonical pairs,
+    // so each closing edge matches a path exactly once
+    val tri = paths.join(pairs.select(col("d1").as("a"), col("d2").as("c")), Seq("a", "c"))
       .groupBy(col("v")).agg(count(lit(1)).as("tri"))
     val cv = deg.where(col("deg") >= 2)
-      .join(tri, col("id") === col("v"), "left_outer")
+      .join(tri, col("doc_id") === col("v"), "left_outer")
       .select(col("deg"),
         round(lit(2.0) * coalesce(col("tri"), lit(0L))
           / (col("deg") * (col("deg") - 1)), 9).as("cc"))
@@ -840,11 +860,8 @@ object GraphOps {
   }
 
   def clusteringSql: String =
-    s"""WITH up AS MATERIALIZED (
-       |  SELECT v1 AS d1, v2 AS d2 FROM (${SimilarityOps.dedupEmbeddingLshSql})),
-       |edges AS MATERIALIZED (
-       |  SELECT d1 AS src, d2 AS dst FROM up UNION ALL SELECT d2, d1 FROM up),
-       |deg AS (SELECT src AS id, COUNT(*) AS deg FROM edges GROUP BY 1),
+    s"""WITH $lshEdgeCtesSql,
+       |$DegCteSql,
        |paths AS (
        |  SELECT e1.src AS a, e1.dst AS v, e2.dst AS c
        |  FROM edges e1 JOIN edges e2 ON e1.dst = e2.src AND e1.src < e2.dst),
@@ -854,7 +871,7 @@ object GraphOps {
        |cv AS (
        |  SELECT d.deg,
        |    round(2.0 * COALESCE(t.tri, 0) / (d.deg * (d.deg - 1)), 9) AS cc
-       |  FROM deg d LEFT JOIN tri t ON t.v = d.id WHERE d.deg >= 2)
+       |  FROM deg d LEFT JOIN tri t ON t.v = d.doc_id WHERE d.deg >= 2)
        |SELECT deg, COUNT(*) AS n_nodes,
        |  round(CAST(SUM(CAST(cc AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*), 9)
        |    AS avg_cc

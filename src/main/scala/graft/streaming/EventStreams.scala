@@ -203,7 +203,7 @@ object EventStreams {
       sessionizeFlat(ss, readEvents(ss, drop.toString, maxFilesPerTrigger = Some(1))),
       "stream_flatmap_sessions", OutputMode.Append())
       .orderBy("user_id", "start_us")
-    finally dropStaged(drop.toString)
+    finally deleteRecursively(drop.toString)
   }
 
   /** Batch twin: gap-split sessions per user, minus each user's last
@@ -310,18 +310,12 @@ object EventStreams {
     s
   }
 
-  /** The watermark-windowed [[hourlyAgg]] pipeline DRIVEN to
-    * completion over the dir's events table as a file stream — the
-    * declared-query face of the streaming surface, putting Structured
-    * Streaming itself under the driver's DuckDB hash gate (oracle =
-    * the batch twin `EventOps.hourlySql`; batch≡stream is the
-    * property being checked). AvailableNow + Complete mode: every
-    * window emits once the static input drains, exactly the batch
-    * result. */
   /** Stage the dir's events table as a one-drop landing directory:
     * the sf tables are single parquet FILES and a file-stream source
     * needs a directory (in production the ingest dir IS the landing
-    * directory). */
+    * directory). Callers delete it once the stream has drained — the
+    * memory sink holds the results, so repeated calls (bench reps)
+    * must not accumulate 20 MB staging copies in the temp dir. */
   private def stageEventsDrop(d: String, tag: String, n: Long,
       copies: Int = 1): String = {
     val drop = java.nio.file.Files.createTempDirectory(s"graft-$tag-$n")
@@ -333,21 +327,14 @@ object EventStreams {
     drop.toString
   }
 
-  /** Delete a staged drop dir once the stream has drained — the
-    * memory sink holds the results, so repeated calls (bench reps)
-    * must not accumulate 20 MB staging copies in the temp dir. */
-  private def dropStaged(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.isDirectory(p)) {
-      // Files.list holds a directory fd until closed — bench reps call
-      // this repeatedly, so an unclosed stream leaks an fd per call
-      val st = java.nio.file.Files.list(p)
-      try st.forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally st.close()
-      java.nio.file.Files.deleteIfExists(p)
-    }
-  }
-
+  /** The watermark-windowed [[hourlyAgg]] pipeline DRIVEN to
+    * completion over the dir's events table as a file stream — the
+    * declared-query face of the streaming surface, putting Structured
+    * Streaming itself under the driver's DuckDB hash gate (oracle =
+    * the batch twin `EventOps.hourlySql`; batch≡stream is the
+    * property being checked). AvailableNow + Complete mode: every
+    * window emits once the static input drains, exactly the batch
+    * result. */
   def streamHourly(spark: SparkSession, d: String): DataFrame = {
     val n = sinkSeq.incrementAndGet()
     val staged = stageEventsDrop(d, "stream-hourly", n)
@@ -355,7 +342,7 @@ object EventStreams {
     try runToMemory(ss, hourlyAgg(readEvents(ss, staged)),
       s"graft_stream_hourly_$n")
       .orderBy("hr", "event_type")
-    finally dropStaged(staged)
+    finally deleteRecursively(staged)
   }
 
   def streamSliding(spark: SparkSession, d: String): DataFrame = {
@@ -365,7 +352,7 @@ object EventStreams {
     try runToMemory(ss, slidingAgg(readEvents(ss, staged)),
       s"graft_stream_sliding_$n")
       .orderBy("win_start", "event_type")
-    finally dropStaged(staged)
+    finally deleteRecursively(staged)
   }
 
   /** DuckDB replay: every event exploded to its 4 slide-grid window
@@ -405,7 +392,7 @@ object EventStreams {
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value")),
       s"graft_stream_enrich_$n")
       .orderBy("cohort_day", "event_type")
-    finally dropStaged(staged)
+    finally deleteRecursively(staged)
   }
 
   def streamEnrichSql: String =
@@ -440,7 +427,7 @@ object EventStreams {
     try runToParquetSink(ss, sessionAgg(readEvents(ss, staged)),
       "stream_sessions")
       .orderBy("user_id", "start_ts")
-    finally dropStaged(staged)
+    finally deleteRecursively(staged)
   }
 
   /** The watermark-windowed hourly pipeline driven by a REAL clock
@@ -490,7 +477,7 @@ object EventStreams {
       q.awaitTermination()
       StreamMeter.addQuery(q)
       ss.table(name).orderBy("hr", "event_type")
-    } finally dropStaged(drop.toString)
+    } finally deleteRecursively(drop.toString)
   }
 
   /** Streaming exact dedup under the hash gate: the events table
@@ -585,7 +572,7 @@ object EventStreams {
         .select("event_id", "user_id", "event_type", "value"),
       "stream_dedup", OutputMode.Append())
       .orderBy("event_id")
-    finally dropStaged(staged)
+    finally deleteRecursively(staged)
   }
 
   // event_ids are unique in the driver data (checked at every SF), so
@@ -632,7 +619,7 @@ object EventStreams {
         .select(col("user_id"), col("p.n_events").as("n_events"),
           col("p.last_ms").as("last_ms"))
         .orderBy("user_id")
-    } finally dropStaged(drop.toString)
+    } finally deleteRecursively(drop.toString)
   }
 
   def streamUserTotalsSql: String =
@@ -700,7 +687,7 @@ object EventStreams {
         .select(col("user_id"), col("p.n_updates").as("n_updates"),
           col("p.last_type").as("last_type"), col("p.last_vm").as("last_vm"))
         .orderBy("user_id")
-    } finally dropStaged(drop.toString)
+    } finally deleteRecursively(drop.toString)
   }
 
   def streamCdcSql: String =
@@ -737,7 +724,7 @@ object EventStreams {
     try runToParquetSink(ss, attribution(readEvents(ss, staged)),
       "stream_attribution", OutputMode.Append())
       .orderBy("user_id", "click_id", "purchase_id")
-    finally dropStaged(staged)
+    finally deleteRecursively(staged)
   }
 
   /** LEFT OUTER variant of [[attribution]] — the join shape that
@@ -799,7 +786,7 @@ object EventStreams {
         .select(col("user_id"), col("click_id"), col("c_us"),
           col("purchase_id"), col("amount"))
         .orderBy("user_id", "click_id", "purchase_id")
-    } finally dropStaged(staged)
+    } finally deleteRecursively(staged)
   }
 
   def streamAttrOuterSql: String =
@@ -949,7 +936,7 @@ object EventStreams {
       .start()
     q.awaitTermination()
     StreamMeter.addQuery(q)
-    dropStaged(drop)
+    deleteRecursively(drop)
     require(version.get() >= 2,
       s"upsert loop expected multiple micro-batches, saw ${version.get()}")
     val prevRoot = lastSink.put("stream-upsert", storeRoot)
@@ -1023,7 +1010,7 @@ object EventStreams {
       .start()
     q.awaitTermination()
     StreamMeter.addQuery(q)
-    dropStaged(drop)
+    deleteRecursively(drop)
     require(nCommits.get() >= 2,
       s"txlog sink expected multiple micro-batches, saw ${nCommits.get()}")
     require(retried.get(), "the injected batch-1 replay never ran")

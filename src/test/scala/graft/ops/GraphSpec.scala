@@ -261,6 +261,57 @@ class GraphSpec extends AnyFunSuite {
     val fpSmall = PlanFingerprint.of(GraphOps.pagerankOnPairs(wide))
     assert(fpSmall.contains("BroadcastHashJoin") && !fpSmall.contains("ShuffledHashJoin"),
       s"small-|V| mode must keep the broadcast plan: [$fpSmall]")
+    // BFS and label propagation ride the same gate. Their rounds sit
+    // behind lazy checkpoints, so the joins show in the checkpointed
+    // plans, not in the returned frame's
+    val loops = Seq[(String, Long => (org.apache.spark.sql.DataFrame, Int))](
+      "bfs" -> (limit => GraphOps.bfsOnPairsCounted(wide, broadcastVertexLimit = limit)),
+      "labelprop" -> (limit => GraphOps.labelPropOnPairsCounted(wide, broadcastVertexLimit = limit)))
+    for ((name, run) <- loops) {
+      val (small, smallJoins) = checkpointedJoins(run(1L << 20))
+      val (big, bigJoins) = checkpointedJoins(run(8L))
+      assert(small._1.collect().toSeq === big._1.collect().toSeq,
+        s"$name: the two pinned plan modes must agree to the bit")
+      assert(small._2 === big._2, s"$name: both modes must run the same rounds")
+      assert(bigJoins.contains("ShuffledHashJoin") && !bigJoins.contains("BroadcastHashJoin"),
+        s"$name: large-|V| rounds must use the pinned shuffled hash join: $bigJoins")
+      assert(smallJoins.contains("BroadcastHashJoin") && !smallJoins.contains("ShuffledHashJoin"),
+        s"$name: small-|V| rounds must keep the broadcast plan: $smallJoins")
+    }
+  }
+
+  /** Runs `body` and returns its value with the join operators of
+    * every plan it checkpointed (a listener sees each checkpoint's
+    * executed plan; listener events arrive asynchronously, so the
+    * collection waits for a quiet bus: a probe query's own event). */
+  private def checkpointedJoins[T](body: => T): (T, Set[String]) = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val joins = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val probed = new java.util.concurrent.CountDownLatch(1)
+    val probe = s"probe-${System.nanoTime()}"
+    def names(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => names(a.executedPlan)
+      case q: QueryStageExec => names(q.plan)
+      case _ => p.getClass.getSimpleName.stripSuffix("Exec") +: p.children.flatMap(names)
+    }
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        if (funcName == "localCheckpoint")
+          names(qe.executedPlan).filter(_.endsWith("Join")).foreach(joins.add)
+        else if (funcName == "collect" && qe.analyzed.toString.contains(probe))
+          probed.countDown()
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      Seq(probe).toDF(probe).collect() // the bus delivers in order
+      assert(probed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+      import scala.jdk.CollectionConverters._
+      (out, joins.asScala.toSet)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("labelprop: the self-vote breaks the 2-cycle oscillation in one round") {
@@ -301,11 +352,15 @@ class GraphSpec extends AnyFunSuite {
     val pairs = (Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)) ++
       Seq((5L, 6L), (6L, 7L), (7L, 8L), (5L, 8L), (1L, 5L)) ++
       Seq((20L, 21L), (21L, 22L))).toDF("d1", "d2")
-    val out = GraphOps.kcoreOnPairs(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Seq(1L, 2L, 3L, 4L).forall(out(_) == 3L), s"K4 is the 3-core: $out")
-    assert(Seq(5L, 6L, 7L, 8L).forall(out(_) == 2L), s"cycle is 2-core only: $out")
-    assert(Seq(20L, 21L, 22L).forall(out(_) == 1L), s"chain peels at k=2: $out")
+    // a larger round budget must not change the stratification: the
+    // early exit makes every round past the fixpoint invisible
+    for ((budget, cores) <- Seq("default rounds" -> GraphOps.kcoreOnPairs(pairs),
+        "8 rounds" -> GraphOps.kcoreOnPairs(pairs, rounds = 8))) {
+      val out = cores.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(Seq(1L, 2L, 3L, 4L).forall(out(_) == 3L), s"K4 is the 3-core ($budget): $out")
+      assert(Seq(5L, 6L, 7L, 8L).forall(out(_) == 2L), s"cycle is 2-core only ($budget): $out")
+      assert(Seq(20L, 21L, 22L).forall(out(_) == 1L), s"chain peels at k=2 ($budget): $out")
+    }
   }
 
   test("declared graph_pagerank runs on the sf0.001 corpus (edge-induced nodes only)") {
