@@ -32,9 +32,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftFunctions {
 
-  /** The salt argument of SQL `xhash60(s, salt)` must be a foldable
-    * integer literal — it is baked into the generated code, exactly
-    * like the Column API's `Int` parameter. */
   /** The bin-width argument of SQL `range_overlap(s1,e1,s2,e2, w)`
     * must be a foldable integer literal — planning metadata, like the
     * xhash60 salt. */
@@ -47,6 +44,9 @@ object GraftFunctions {
     }
   }
 
+  /** The salt argument of SQL `xhash60(s, salt)` must be a foldable
+    * integer literal — it is baked into the generated code, exactly
+    * like the Column API's `Int` parameter. */
   private def saltOf(e: Expression): Int = {
     require(e.foldable, s"xhash60 salt must be a literal, got $e")
     e.eval() match {

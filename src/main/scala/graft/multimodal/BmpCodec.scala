@@ -76,11 +76,6 @@ object BmpCodec {
     BmpMeta(width, height, bpp, stride, imageBytes, topDown = rawHeight < 0)
   }
 
-  /** Pixel PAYLOAD decode: walk every row at its padded stride and sum
-    * the unsigned pixel bytes (24-bit only — what [[encode]] writes).
-    * Row padding is skipped, so a decoder that confuses stride with
-    * width*3 produces a different sum and hash-mismatches against the
-    * oracle's cycled-source closed form. */
   /** Nearest-neighbor resample to a tw×th grid and sum the sampled
     * channel bytes — the real pixel-level half of the thumbnailing
     * pass whose geometry mm_bmp plans ([[MultimodalOps]]): source
@@ -111,6 +106,11 @@ object BmpCodec {
     sum
   }
 
+  /** Pixel PAYLOAD decode: walk every row at its padded stride and sum
+    * the unsigned pixel bytes (24-bit only — what [[encode]] writes).
+    * Row padding is skipped, so a decoder that confuses stride with
+    * width*3 produces a different sum and hash-mismatches against the
+    * oracle's cycled-source closed form. */
   def pixelSum(payload: Array[Byte]): Long = {
     val m = decode(payload)
     require(m.bitsPerPixel == 24, s"pixelSum supports 24-bit, got ${m.bitsPerPixel}")

@@ -128,17 +128,6 @@ object TextAnalysisOps {
        |  ON d.doc_id = b.doc_id
        |ORDER BY d.doc_id""".stripMargin
 
-  /** Char-n-gram language ID — the classic n-gram-profile heuristic:
-    * build per-language top-20 character-bigram profiles, then
-    * classify each document by profile overlap (argmax, ties to the
-    * alphabetically first language).
-    *
-    * The profile is built from a deterministic 1-in-10 hash sample of
-    * documents (the [[DedupOps.sampleHash]] pattern): a tiny
-    * top-20-per-language artifact must not cost an O(corpus) second
-    * pass at 100 TB, and a content-hash sample is partitioning- and
-    * engine-independent so the oracle reproduces it exactly. Only the
-    * scoring pass touches the full corpus. */
   /** doc_id + lang + distinct char-bigram array over the lowered
     * 256-char prefix. The lowered prefix is materialized as its OWN
     * projection first: an expression inside the transform() lambda
@@ -249,6 +238,17 @@ object TextAnalysisOps {
     struct(m.as("overlap"), pred.as("lang"))
   }
 
+  /** Char-n-gram language ID — the classic n-gram-profile heuristic:
+    * build per-language top-20 character-bigram profiles, then
+    * classify each document by profile overlap (argmax, ties to the
+    * alphabetically first language).
+    *
+    * The profile is built from a deterministic 1-in-10 hash sample of
+    * documents (the [[DedupOps.sampleHash]] pattern): a tiny
+    * top-20-per-language artifact must not cost an O(corpus) second
+    * pass at 100 TB, and a content-hash sample is partitioning- and
+    * engine-independent so the oracle reproduces it exactly. Only the
+    * scoring pass touches the full corpus. */
   def langIdNgram(spark: SparkSession, d: String): DataFrame = {
     // r16 opt (guide §2.3/§2.4): the old shape exploded the corpus's
     // bigrams, broadcast-joined the profile, shuffled (doc, lang)

@@ -282,7 +282,7 @@ object EventStreams {
   // repeated calls (bench reps) can never collide on a catalog slot
   private val sinkSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Shuffle/state partition count for the declared streaming runs.
+  /** The most shuffle/state partitions a declared streaming run uses.
     * Stateful operators pay a fixed per-partition per-batch state-store
     * cost (snapshot, maintenance, the no-data cleanup batch — a
     * stream-stream join keeps FOUR stores per partition), so the
@@ -295,7 +295,17 @@ object EventStreams {
     * decimal-sum aggregates keep them bit-stable); 2 measured no
     * better than 4. At production scale this is the knob you SIZE UP
     * with input rate — state partition count is fixed at first start
-    * by spark.sql.shuffle.partitions. */
+    * by spark.sql.shuffle.partitions.
+    *
+    * It is a cap, not a width: a session whose own shuffle width is
+    * narrower runs that many state partitions ([[streamingSession]]).
+    * More partitions than task slots only queues the per-partition
+    * cost; in a `local[1]` session stream_dedup's `durationMs` split
+    * put `addBatch` first (284–317 ms for batch 0, 190–232 ms for
+    * batch 1, against 40–44 ms of `queryPlanning` and 13–15 ms each
+    * for `walCommit`, `commitOffsets` and `latestOffset`), and inside
+    * it the state stage took 190 ms for 4 tasks against 75 ms for 1
+    * (4-core VM). */
   private val StreamShufflePartitions = 4
 
   /** A per-run session clone for a declared streaming query: streaming
@@ -303,10 +313,15 @@ object EventStreams {
     * session, and a streaming query snapshots its session's conf at
     * START — so each run gets its own `newSession` (shared
     * SparkContext/catalog-state, independent conf; the builder's
-    * initial options — timezone, nanosAsLong — are re-applied). */
-  private def streamingSession(spark: SparkSession): SparkSession = {
+    * initial options — timezone, nanosAsLong — are re-applied). The
+    * clone runs min([[StreamShufflePartitions]], the caller's shuffle
+    * width) state partitions; the width is read from `spark` itself,
+    * since a clone does not inherit its runtime conf. */
+  private[streaming] def streamingSession(spark: SparkSession): SparkSession = {
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
+    s.conf.set("spark.sql.shuffle.partitions",
+      math.min(StreamShufflePartitions, width).toString)
     s
   }
 
@@ -480,14 +495,6 @@ object EventStreams {
     } finally deleteRecursively(drop.toString)
   }
 
-  /** Streaming exact dedup under the hash gate: the events table
-    * staged as TWO identical drops, replayed as SEPARATE micro-batches
-    * (`maxFilesPerTrigger = 1`), so the watermark-bounded
-    * dropDuplicates state must carry across batches — batch 2's rows
-    * are either deduped against retained state or dropped as late
-    * (older than the post-batch-1 watermark), and the declared result
-    * is exactly the distinct events table. Append mode, parquet sink:
-    * rows emit on first sight, nothing driver-side. */
   /** How many rate-source rows the declared [[streamRateHourly]] run
     * keeps: values 0..N−1, two hours of one-per-second synthetic
     * events. Everything downstream is a pure function of the value
@@ -563,6 +570,14 @@ object EventStreams {
        |  CAST(SUM(CAST(val AS DECIMAL(18,6))) AS DOUBLE) AS total_value
        |FROM e GROUP BY 1, 2 ORDER BY hr, event_type""".stripMargin
 
+  /** Streaming exact dedup under the hash gate: the events table
+    * staged as TWO identical drops, replayed as SEPARATE micro-batches
+    * (`maxFilesPerTrigger = 1`), so the watermark-bounded
+    * dropDuplicates state must carry across batches — batch 2's rows
+    * are either deduped against retained state or dropped as late
+    * (older than the post-batch-1 watermark), and the declared result
+    * is exactly the distinct events table. Append mode, parquet sink:
+    * rows emit on first sight, nothing driver-side. */
   def streamDedup(spark: SparkSession, d: String): DataFrame = {
     val n = sinkSeq.incrementAndGet()
     val staged = stageEventsDrop(d, "stream-dedup", n, copies = 2)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -212,6 +213,32 @@ class StreamingSpec extends AnyFunSuite {
       .select("user_id", "click_id", "purchase_id", "amount")
     assert(got.count() > 0)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
+  test("stateful declared queries give the same rows at state width 1 as at 4") {
+    // a streaming run's state width is min(4, its session's shuffle
+    // width), so it follows the machine; the results must not
+    def stateWidth(s: SparkSession): String =
+      EventStreams.streamingSession(s).conf.get("spark.sql.shuffle.partitions")
+    val narrow = spark.newSession()
+    narrow.conf.set("spark.sql.shuffle.partitions", "1")
+    assert(stateWidth(narrow) === "1")
+    assert(stateWidth(spark) === "4")
+    val stateful: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+      "dropDuplicates" -> EventStreams.streamDedup,
+      "stream-stream inner join" -> EventStreams.streamAttribution,
+      "stream-stream outer join" -> EventStreams.streamAttrOuter,
+      "mapGroupsWithState" -> EventStreams.streamUserTotals,
+      "flatMapGroupsWithState" -> EventStreams.streamSessionizeFlat,
+      "session_window" -> EventStreams.streamSessions)
+    stateful.foreach { case (op, run) =>
+      // materialized first: the next run of the same query deletes the
+      // parquet sink this one reads from
+      val got = run(narrow, sf).localCheckpoint()
+      val want = run(spark, sf)
+      assert(want.count() > 0, op)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, op)
+    }
   }
 
   test("parquet-sink streaming sessions equal the memory-sink result (scale-safe path)") {

@@ -77,6 +77,16 @@ SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
   sbt -batch "runMain graft.Verify $SF $OUT/verify" 2>&1 | tail -1
 python3 tools/check_oracle.py "$OUT/verify" "$SF"
 
+# A streaming run's state width is min(4, its session's shuffle width),
+# so a one-CPU machine runs every stateful operator on 1 partition: the
+# declared stream_* results must not move with it.
+echo "== stream_* queries at SPARK_GRAFT_CPUS=1 vs DuckDB oracle @ $SF"
+STREAMS=$(grep -oE '"stream_[a-z_]+" *->' src/main/scala/graft/SparkEntry.scala |
+  grep -oE 'stream_[a-z_]+' | sort -u | paste -sd, -)
+SPARK_GRAFT_CPUS=1 SPARK_GRAFT_ONLY="$STREAMS" \
+  sbt -batch "runMain graft.Verify $SF $OUT/verify-streams-1cpu" 2>&1 | tail -1
+python3 tools/check_oracle.py "$OUT/verify-streams-1cpu" "$SF"
+
 # The MR goldens are absent, so the perfbench oracle (word counts,
 # md5-mod placement, byte order, grep) is the end-to-end MR check.
 echo "== MR correctness smoke (perfbench mr_corpus)"
