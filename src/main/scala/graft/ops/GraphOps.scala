@@ -147,7 +147,7 @@ object GraphOps {
     * run. Each round owns its convergence measure and its one driver
     * action, which also materializes that round's lazy checkpoint —
     * one job per round. Where the cap is declared semantics (BFS,
-    * label propagation, k-core) the early exit is invisible: a round
+    * label propagation) the early exit is invisible: a round
     * that changes nothing is a fixpoint, every later round is the
     * identity, and the oracle's unrolled rounds compute the same
     * rows. */
@@ -691,48 +691,47 @@ object GraphOps {
     * a vertex peeled away with the trees and pendants, coreness 2
     * survives the cycle-preserving peel, coreness ≥ 3 sits in the
     * densely-interconnected heart a semantic-dedup pass should treat
-    * as one redundancy cluster. Peeling at each level runs AT MOST
-    * [[KcoreRounds]] rounds as declared capped semantics (the
-    * [[bfs]] horizon stance — the oracle unrolls exactly the same
-    * count, and the early exit below is invisible because a round
-    * that removes nothing is a fixpoint and every later round is the
-    * identity). Per-round plan: one map-side-combined degree
-    * aggregate + two semi-joins against the survivor set, all keyed
-    * on vertex id; the edge set shrinks monotonically, so round cost
-    * is non-increasing; the only driver traffic is the 1-row edge
-    * count that doubles as the checkpoint materialization action
-    * (the [[DedupOps.connectedComponents]] pattern). */
+    * as one redundancy cluster.
+    *
+    * Peeling at each level k = 2..[[KcoreMaxK]] runs exactly
+    * [[KcoreRounds]] rounds as declared capped semantics (the [[bfs]]
+    * horizon stance; the oracle unrolls the same count): a round
+    * keeps an edge when both endpoints have live degree ≥ k, and
+    * level k+1 starts from level k's last edge set. Coreness is 1 +
+    * the number of levels whose last edge set holds the vertex.
+    *
+    * Scale shape: ONE task. The graph is the LSH build's top
+    * [[SimilarityOps.LshPairLimit]] pairs, so it has at most twice
+    * that many directed edges at any corpus size — an input one
+    * reducer holds. The edge list coalesces to one partition and
+    * [[peel]] runs every round in plain Scala; a distributed round
+    * would pay one plan, one stage and one driver action per round
+    * for the same handful of rows. */
   def kcore(spark: SparkSession, d: String): DataFrame =
     kcoreOnPairs(cachedLshPairs(spark, d))
 
   private[ops] def kcoreOnPairs(pairs: DataFrame, maxK: Int = KcoreMaxK,
       rounds: Int = KcoreRounds): DataFrame = {
-    val edges = edgesOf(pairs).localCheckpoint(false)
-    var coreness = vertexIds(edges).localCheckpoint(false)
-      .select(col("id"), lit(1L).as("coreness"))
-    // the live edge set with its count: the count is each round's
-    // convergence measure and its one driver action
-    var live = (edges, edges.count())
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    edgesOf(pairs).coalesce(1).as[(Long, Long)]
+      .mapPartitions(it => peel(it.toVector, maxK, rounds).iterator)
+      .toDF("vec_id", "coreness").orderBy("vec_id")
+  }
+
+  /** [[kcoreOnPairs]]' capped peel over a symmetrized edge list:
+    * (vertex, coreness) for every vertex of `edges`. */
+  private def peel(edges: Seq[(Long, Long)], maxK: Int, rounds: Int): Seq[(Long, Long)] = {
+    val coreness = scala.collection.mutable.LongMap(edges.map(e => e._1 -> 1L): _*)
+    var live = edges
     for (k <- 2 to maxK) {
-      // an empty graph has nothing left to peel at any level
-      live = untilStable(if (live._2 > 0) rounds else 0)(live) { case (liveEdges, n) =>
-        val keep = liveEdges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .where(col("deg") >= k).select(col("src").as("kid"))
-        val next = liveEdges
-          .join(keep, col("src") === col("kid"), "left_semi")
-          .join(keep, col("dst") === col("kid"), "left_semi")
-          .localCheckpoint(false) // lazy; the count below materializes it
-        val nextCount = next.count()
-        // peeling strictly shrinks the edge set whenever any vertex
-        // fell below k, so an unchanged count IS the fixpoint
-        ((next, nextCount), nextCount != n && nextCount > 0)
-      }._1
-      val inCore = vertexIds(live._1)
-      coreness = coreness
-        .join(inCore.withColumn("hit", lit(1L)), Seq("id"), "left_outer")
-        .select(col("id"), (col("coreness") + coalesce(col("hit"), lit(0L))).as("coreness"))
+      for (_ <- 1 to rounds) {
+        val deg = live.groupMapReduce(_._1)(_ => 1)(_ + _)
+        live = live.filter { case (s, t) => deg(s) >= k && deg(t) >= k }
+      }
+      live.map(_._1).distinct.foreach(v => coreness(v) += 1)
     }
-    coreness.select(col("id").as("vec_id"), col("coreness")).orderBy("vec_id")
+    coreness.toSeq
   }
 
   /** DuckDB mirror: [[KcoreRounds]] unrolled peel rounds per level

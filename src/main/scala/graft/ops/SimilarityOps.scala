@@ -119,6 +119,12 @@ object SimilarityOps {
       .orderBy("qid", "rank")
   }
 
+  /** The LSH pair build keeps this many highest-cosine pairs, so every
+    * graph over it ([[GraphOps.kcore]] and the other LSH-graph
+    * queries) has at most twice as many directed edges at any corpus
+    * size. */
+  private[ops] val LshPairLimit = 50
+
   /** Embedding near-dup detection at corpus scale: the LSH-bucketed
     * counterpart of [[DedupOps.dedupEmbedding]] — identical output
     * contract (top-50 highest-cosine pairs, v1 < v2) but candidate
@@ -154,7 +160,7 @@ object SimilarityOps {
       .select(col("v1"), col("v2"),
         round(dotd(col("e1"), col("e2")) / (col("m1") * col("m2")), 9).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("v1"), col("v2"))
-      .limit(50)
+      .limit(LshPairLimit)
   }
 
   /** DuckDB mirror of [[dedupEmbeddingLsh]]: rebuilds the identical
@@ -172,7 +178,7 @@ object SimilarityOps {
        |  JOIN e ea ON ea.vec_id = c.v1
        |  JOIN e eb ON eb.vec_id = c.v2)
        |SELECT v1, v2, cos_sim FROM scored
-       |ORDER BY cos_sim DESC, v1, v2 LIMIT 50""".stripMargin
+       |ORDER BY cos_sim DESC, v1, v2 LIMIT $LshPairLimit""".stripMargin
 
   /** Int8 scalar quantization round-trip: per vector, the symmetric
     * scale (127/max|x|), quantize, dequantize, and report the max

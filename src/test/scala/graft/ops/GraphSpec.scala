@@ -344,23 +344,34 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("kcore: K4 heart, cycle shell, and pendant chain stratify as 3/2/1") {
+    def coreness(edges: Seq[(Long, Long)], rounds: Option[Int]): Map[Long, Long] = {
+      val pairs = edges.toDF("d1", "d2")
+      rounds.fold(GraphOps.kcoreOnPairs(pairs))(r => GraphOps.kcoreOnPairs(pairs, rounds = r))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    val heart = (1L to 4L).map(_ -> 3L).toMap
     // K4 on 1..4 (3-core), a 4-cycle 5-6-7-8 hanging off vertex 1 via
     // edge (1,5) (2-core but not 3), and a pendant chain 20-21-22
     // (peels entirely at k=2 → coreness 1). The chain needs TWO
     // peel rounds at k=2 (22 falls first, then 21) — exercising the
-    // iterated peel, not just the first degree filter.
-    val pairs = (Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)) ++
-      Seq((5L, 6L), (6L, 7L), (7L, 8L), (5L, 8L), (1L, 5L)) ++
-      Seq((20L, 21L), (21L, 22L))).toDF("d1", "d2")
-    // a larger round budget must not change the stratification: the
-    // early exit makes every round past the fixpoint invisible
-    for ((budget, cores) <- Seq("default rounds" -> GraphOps.kcoreOnPairs(pairs),
-        "8 rounds" -> GraphOps.kcoreOnPairs(pairs, rounds = 8))) {
-      val out = cores.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Seq(1L, 2L, 3L, 4L).forall(out(_) == 3L), s"K4 is the 3-core ($budget): $out")
-      assert(Seq(5L, 6L, 7L, 8L).forall(out(_) == 2L), s"cycle is 2-core only ($budget): $out")
-      assert(Seq(20L, 21L, 22L).forall(out(_) == 1L), s"chain peels at k=2 ($budget): $out")
-    }
+    // iterated peel, not just the first degree filter. A larger round
+    // budget must not change it: the peel reaches its fixpoint first.
+    val shells = k4 ++ Seq((5L, 6L), (6L, 7L), (7L, 8L), (5L, 8L), (1L, 5L)) ++
+      Seq((20L, 21L), (21L, 22L))
+    val shellCores = heart ++ (5L to 8L).map(_ -> 2L) ++ (20L to 22L).map(_ -> 1L)
+    // A pendant path 4-30-31-32-33-34-35 sheds one vertex per round at
+    // k=2, so the capped default rounds leave 30 and 31 in the 2-core
+    // while 8 rounds peel the whole path: the cap is semantics, not a
+    // fixpoint the peel would reach anyway.
+    val path = k4 ++ (4L +: (30L to 35L)).sliding(2).map(p => (p(0), p(1))).toSeq
+    for ((name, edges, rounds, want) <- Seq(
+        ("shells, default rounds", shells, None, shellCores),
+        ("shells, 8 rounds", shells, Some(8), shellCores),
+        ("path, default rounds", path, None,
+          heart ++ Map(30L -> 2L, 31L -> 2L) ++ (32L to 35L).map(_ -> 1L)),
+        ("path, 8 rounds", path, Some(8), heart ++ (30L to 35L).map(_ -> 1L))))
+      assert(coreness(edges, rounds) === want, name)
   }
 
   test("declared graph_pagerank runs on the sf0.001 corpus (edge-induced nodes only)") {

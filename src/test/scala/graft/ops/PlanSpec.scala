@@ -144,6 +144,17 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.toString.contains("TakeOrderedAndProject"), plan.toString)
   }
 
+  /** Spark jobs started while `body` runs, with async listener-bus
+    * updates from earlier work drained on both sides. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    Thread.sleep(1000)
+    val tracker = spark.sparkContext.statusTracker
+    val before = tracker.getJobIdsForGroup(null).length
+    val out = body
+    Thread.sleep(1000)
+    (out, tracker.getJobIdsForGroup(null).length - before)
+  }
+
   test("sim_ann_ivf constructs lazily: no Spark jobs, no driver-side data in the plan") {
     // The r3 verdict's scale-killer: KMeans fit + collect() routing ran
     // JOBS during query *construction*. The rebuilt build/probe split
@@ -152,18 +163,34 @@ class PlanSpec extends AnyFunSuite {
     // Warm the Tables schema cache first — the one legitimate
     // construction-time job is parquet schema inference on a cold path.
     SimilarityOps.bruteTopK(spark, sf)
-    Thread.sleep(1000) // drain async listener-bus updates from prior tests
-    val tracker = spark.sparkContext.statusTracker
-    val before = tracker.getJobIdsForGroup(null).length
-    val df = SimilarityOps.annIvf(spark, sf)
-    df.queryExecution.analyzed // force analysis too — still no jobs
-    Thread.sleep(1000)
-    val after = tracker.getJobIdsForGroup(null).length
-    assert(after === before, "query construction must not run Spark jobs")
+    val (df, jobs) = jobsDuring {
+      val df = SimilarityOps.annIvf(spark, sf)
+      df.queryExecution.analyzed // force analysis too — still no jobs
+      df
+    }
+    assert(jobs === 0, "query construction must not run Spark jobs")
     // collect()-then-parallelize routing would surface as a local scan
     val logical = df.queryExecution.analyzed.toString
     assert(!logical.contains("LogicalRDD") && !logical.contains("LocalRelation"),
       "plan must not embed driver-side materialized data")
+  }
+
+  test("graph_kcore constructs lazily on a cold LSH pair build: no Spark jobs of its own") {
+    // The peel is one task inside the action; construction only plans.
+    // The LSH build's lazy `keys` checkpoint still runs the shuffle
+    // stages below it under AQE: the embeddings scan's fan-out, in a
+    // session wider than that scan. So kcore's construction may run
+    // exactly the jobs the bare build runs, and none more. (That
+    // checkpoint also embeds a LogicalRDD, so the plan check of the
+    // test above does not apply.)
+    SimilarityOps.bruteTopK(spark, sf) // warm the Tables schema cache
+    try {
+      SharedBuild.releaseBlocks()
+      val (_, build) = jobsDuring(GraphOps.cachedLshPairs(spark, sf))
+      SharedBuild.releaseBlocks()
+      val (_, jobs) = jobsDuring(GraphOps.kcore(spark, sf).queryExecution.analyzed)
+      assert(jobs === build, "kcore construction must run no Spark job beyond the LSH build's")
+    } finally SharedBuild.releaseBlocks()
   }
 
   test("token/bigram explodes don't re-tokenize inside pushed-down filters") {

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Full local gate: compile, tests, oracle correctness, MR smoke, bench.
+# Full local gate: compile, tests, oracle correctness, perfbench smoke, bench.
 # Usage: tools/ci.sh [sf_dir]   (default /root/testdata/sf0.01)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -87,18 +87,24 @@ SPARK_GRAFT_CPUS=1 SPARK_GRAFT_ONLY="$STREAMS" \
   sbt -batch "runMain graft.Verify $SF $OUT/verify-streams-1cpu" 2>&1 | tail -1
 python3 tools/check_oracle.py "$OUT/verify-streams-1cpu" "$SF"
 
-# The MR goldens are absent, so the perfbench oracle (word counts,
-# md5-mod placement, byte order, grep) is the end-to-end MR check.
-echo "== MR correctness smoke (perfbench mr_corpus)"
-if ! MRLINE=$(python3 perfbench/run.py --workload mr_corpus --seed 1 --seconds 5 --trace 0 | tail -1); then
-  echo "FAIL: perfbench mr_corpus exited non-zero"
-  exit 1
-fi
-echo "$MRLINE"
-if ! echo "$MRLINE" | python3 -c 'import json, sys; sys.exit(0 if json.load(sys.stdin)["correct"] is True else 1)'; then
-  echo "FAIL: perfbench mr_corpus reports correct != true"
-  exit 1
-fi
+# The MR goldens are absent, so the perfbench oracles are the
+# end-to-end checks of the MR runner (word counts, md5-mod placement,
+# byte order, grep) and of the LLM pipeline's queries across passes
+# that release and rebuild their shared builds. Every workload that
+# BENCHMARK.json names runs once.
+WORKLOADS=$(python3 -c 'import json; print(" ".join(w["name"] for w in json.load(open("BENCHMARK.json"))["workloads"]))')
+for W in $WORKLOADS; do
+  echo "== perfbench correctness smoke ($W)"
+  if ! PBLINE=$(python3 perfbench/run.py --workload "$W" --seed 1 --seconds 5 --trace 0 | tail -1); then
+    echo "FAIL: perfbench $W exited non-zero"
+    exit 1
+  fi
+  echo "$PBLINE"
+  if ! echo "$PBLINE" | python3 -c 'import json, sys; sys.exit(0 if json.load(sys.stdin)["correct"] is True else 1)'; then
+    echo "FAIL: perfbench $W reports correct != true"
+    exit 1
+  fi
+done
 
 echo "== bench @ sf0.1 (steady-state; keep the box otherwise idle)"
 run_bench() {
