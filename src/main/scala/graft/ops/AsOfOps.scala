@@ -83,16 +83,14 @@ object AsOfOps {
   // timestamps is unspecified, and the Spark window's tie-break
   // (ascending event_id, last() wins) selects exactly that row
   def eventAsOfPurchaseSql: String =
-    """SELECT e.event_id, e.user_id, e.event_type, epoch_ms(e.ts) AS ts_ms,
+    s"""SELECT e.event_id, e.user_id, e.event_type, epoch_ms(e.ts) AS ts_ms,
       |  p.event_id AS purchase_event_id,
       |  p.value AS purchase_value,
       |  epoch_ms(p.ts) AS purchase_ts_ms
       |FROM (SELECT * FROM events WHERE event_type <> 'purchase') e
-      |ASOF LEFT JOIN
-      |  (SELECT user_id, ts, event_id, value FROM events
-      |   WHERE event_type = 'purchase'
-      |   QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id, ts
-      |                              ORDER BY event_id DESC) = 1) p
+      |ASOF LEFT JOIN (${OpsUtil.topKSql(
+        "(SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'purchase')",
+        "user_id, ts", "event_id DESC", 1, "rn")}) p
       |  ON e.user_id = p.user_id AND e.ts >= p.ts
       |ORDER BY e.event_id""".stripMargin
 
@@ -147,23 +145,17 @@ object AsOfOps {
   // pass is inclusive (≥) — immaterial by construction: a Δ=0 tie
   // always resolves backward in both engines (Δb=0 wins the ≤ argmin),
   // so the forward pick is only ever consulted at Δf > 0.
-  def nearestClickSql: String =
-    """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
+  def nearestClickSql: String = {
+    // each purchase paired with the clicks on one `side` of it in time
+    def clicks(side: String) =
+      "(SELECT p.event_id, c.event_id AS rid, c.us AS rus " +
+        s"FROM p JOIN c ON c.user_id = p.user_id AND c.us $side p.us)"
+    s"""WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
       |  WHERE event_type = 'purchase'),
       |c AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
       |  WHERE event_type = 'click'),
-      |b AS (
-      |  SELECT * FROM (
-      |    SELECT p.event_id, c.event_id AS rid, c.us AS rus,
-      |      row_number() OVER (PARTITION BY p.event_id
-      |        ORDER BY c.us DESC, c.event_id DESC) AS rn
-      |    FROM p JOIN c ON c.user_id = p.user_id AND c.us <= p.us) WHERE rn = 1),
-      |f AS (
-      |  SELECT * FROM (
-      |    SELECT p.event_id, c.event_id AS rid, c.us AS rus,
-      |      row_number() OVER (PARTITION BY p.event_id
-      |        ORDER BY c.us ASC, c.event_id DESC) AS rn
-      |    FROM p JOIN c ON c.user_id = p.user_id AND c.us > p.us) WHERE rn = 1)
+      |b AS (${OpsUtil.topKSql(clicks("<="), "event_id", "rus DESC, rid DESC", 1, "rn")}),
+      |f AS (${OpsUtil.topKSql(clicks(">"), "event_id", "rus ASC, rid DESC", 1, "rn")})
       |SELECT p.event_id, p.user_id,
       |  CASE WHEN b.rid IS NULL AND f.rid IS NULL THEN 'none'
       |       WHEN f.rid IS NULL THEN 'backward'
@@ -183,6 +175,7 @@ object AsOfOps {
       |FROM p LEFT JOIN b ON b.event_id = p.event_id
       |       LEFT JOIN f ON f.event_id = p.event_id
       |ORDER BY p.event_id""".stripMargin
+  }
 
   /** Point-in-time (SCD-2) join — the warehouse staple `evt_scd2`
     * builds the history FOR: every purchase joined to the user's

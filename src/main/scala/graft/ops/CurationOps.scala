@@ -596,9 +596,7 @@ object CurationOps {
       .join(broadcast(priors), Seq("cls"))
       .select(col("doc_id"), col("actual"), col("cls"),
         (col("logprior") + col("sum_logp")).as("loglik"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("loglik").desc, col("cls"))
-    scores.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
+    topK(scores, Seq(col("doc_id")), Seq(col("loglik").desc, col("cls")), 1, "rn")
       .groupBy(col("actual"), col("cls"))
       .agg(count(lit(1)).as("n_docs"),
         (floor(sum(col("loglik")).cast("double") / count(lit(1)) * lit(1e9)
@@ -642,14 +640,10 @@ object CurationOps {
        |  FROM held h JOIN model m ON h.bucket = m.bucket
        |  JOIN priors p ON p.cls = m.cls
        |  GROUP BY h.doc_id, h.actual, m.cls),
-       |pred AS (
-       |  SELECT actual, cls AS predicted, loglik,
-       |    row_number() OVER (PARTITION BY doc_id
-       |      ORDER BY loglik DESC, cls) AS rn
-       |  FROM scores)
-       |SELECT actual, predicted, COUNT(*) AS n_docs,
+       |pred AS (${topKSql("scores", "doc_id", "loglik DESC, cls", 1, "rn")})
+       |SELECT actual, cls AS predicted, COUNT(*) AS n_docs,
        |  floor(CAST(SUM(loglik) AS DOUBLE) / COUNT(*) * 1e9 + 0.5) / 1e9
        |    AS avg_loglik
-       |FROM pred WHERE rn = 1
-       |GROUP BY actual, predicted ORDER BY actual, predicted""".stripMargin
+       |FROM pred
+       |GROUP BY actual, cls ORDER BY actual, predicted""".stripMargin
 }

@@ -580,12 +580,9 @@ object GraphOps {
       val votes = gate.relax(labels)
         .select(col("dst").as("vid"), col("label"))
         .union(labels.select(col("id").as("vid"), col("label"))) // self-vote
-      val w = Window.partitionBy(col("vid"))
-        .orderBy(col("cnt").desc, col("label").asc)
-      val next = votes.groupBy(col("vid"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
+      val next = OpsUtil.topK(votes.groupBy(col("vid"), col("label"))
+          .agg(count(lit(1)).as("cnt")),
+          Seq(col("vid")), Seq(col("cnt").desc, col("label").asc), 1, "rn")
         .select(col("vid").as("id"), col("label"))
         .localCheckpoint(false) // lazy; the count below materializes it
       val changed = next
@@ -608,10 +605,8 @@ object GraphOps {
          |    SELECT id AS vid, label FROM l${t - 1}) v
          |  GROUP BY vid, label),
          |l$t AS MATERIALIZED (
-         |  SELECT vid AS id, label FROM (
-         |    SELECT vid, label,
-         |      ROW_NUMBER() OVER (PARTITION BY vid ORDER BY cnt DESC, label ASC) AS rn
-         |    FROM c$t) x WHERE rn = 1)""".stripMargin
+         |  SELECT vid AS id, label
+         |  FROM (${OpsUtil.topKSql(s"c$t", "vid", "cnt DESC, label ASC", 1, "rn")}))""".stripMargin
     }.mkString(",\n")
     s"""$lshEdgeCtesSql,
        |l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS label FROM edges),

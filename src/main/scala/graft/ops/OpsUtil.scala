@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Shared expression helpers for the declared-query surface.
@@ -77,6 +78,31 @@ object OpsUtil {
       finally st.close()
     }
   }
+  /** The per-key top-k reducer: numbers each `by` group in `order` as
+    * column `as` (1, 2, …) and keeps the rows numbered ≤ k. Every
+    * per-key "best k" and argmax (k = 1) in the query surface goes
+    * through here, so its plan shape lives in one place: Catalyst puts
+    * a partial WindowGroupLimit below the `by` exchange, and each task
+    * forwards at most k rows per key (PlanSpec pins it). `order` must
+    * end in a unique column so ties are deterministic. A non-empty
+    * `by` is required: a window without a partition spec runs in one
+    * task, and a global top-k is an ordered limit instead. */
+  def topK(df: DataFrame, by: Seq[Column], order: Seq[Column], k: Int,
+      as: String): DataFrame = {
+    require(by.nonEmpty, "topK needs a partition key; a global top-k is an ordered limit")
+    df.withColumn(as, row_number().over(Window.partitionBy(by: _*).orderBy(order: _*)))
+      .where(col(as) <= k)
+  }
+
+  /** DuckDB mirror of [[topK]]: every column of `from` (a table, CTE or
+    * parenthesized subquery) plus the rank `as`, for ranks ≤ k per
+    * `by` group in `order` (SQL lists). */
+  def topKSql(from: String, by: String, order: String, k: Int, as: String): String = {
+    require(by.nonEmpty, "topKSql needs a partition key")
+    s"SELECT *, ROW_NUMBER() OVER (PARTITION BY $by ORDER BY $order) AS $as " +
+      s"FROM $from QUALIFY $as <= $k"
+  }
+
   /** Order-independent exact sum of a double column: sum as
     * DECIMAL(18,6) then back to double. DuckDB mirror:
     * `CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE)`. */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.OpsUtil._
@@ -1295,29 +1295,23 @@ object RelationalOps {
     * input is |groups|×|values|, already reduced, so the rank never
     * sees fact-table cardinality. */
   def modeOrderStatus(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val counts = Tables.orders(spark, d)
       .groupBy(col("o_orderpriority"), col("o_orderstatus"))
       .agg(count("*").as("cnt"))
-    val w = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("cnt").desc, col("o_orderstatus"))
-    counts.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+    OpsUtil.topK(counts, Seq(col("o_orderpriority")),
+        Seq(col("cnt").desc, col("o_orderstatus")), 1, "rk")
       .select(col("o_orderpriority"),
         col("o_orderstatus").as("mode_status"), col("cnt").as("mode_n"))
       .orderBy("o_orderpriority")
   }
 
   def modeOrderStatusSql: String =
-    """WITH counts AS (
+    s"""WITH counts AS (
       |  SELECT o_orderpriority, o_orderstatus, COUNT(*) AS cnt
-      |  FROM orders GROUP BY 1, 2),
-      |ranked AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-      |    ORDER BY cnt DESC, o_orderstatus) AS rk
-      |  FROM counts)
+      |  FROM orders GROUP BY 1, 2)
       |SELECT o_orderpriority, o_orderstatus AS mode_status, cnt AS mode_n
-      |FROM ranked WHERE rk = 1 ORDER BY o_orderpriority""".stripMargin
+      |FROM (${OpsUtil.topKSql("counts", "o_orderpriority", "cnt DESC, o_orderstatus", 1, "rk")})
+      |ORDER BY o_orderpriority""".stripMargin
 
   /** Distribution window functions over per-customer spend: quartile
     * (ntile), percent_rank, cume_dist, and first/last order price per
@@ -1646,32 +1640,20 @@ object RelationalOps {
   def basketLift(spark: SparkSession, d: String): DataFrame = {
     // r16 opt (guide §2.3/§2.4), same rewrite as [[itemCosine]]: one
     // shuffle of lineitem by order into sorted per-order part-sets
-    // (collect_set dedupes map-side — this exchange replaces the old
-    // distinct + the order-keyed self-join's two sorted sides), then
-    // the ≤(7 choose 2) pairs per order come from a codegen'd in-array
-    // expansion instead of a join. The basket count and per-part
-    // frequencies are derived from the same checkpointed set table, so
-    // the old COUNT(DISTINCT l_orderkey) expand disappears too.
-    // fanOut (guide §2.5): single-row-group fixture → one-task scan;
-    // the collect_set partials are the whole map pass.
-    val sets = fanOut(Tables.lineitem(spark, d)
-        .select(col("l_orderkey"), col("l_partkey")))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      .localCheckpoint(false) // read by total, freq, and the pair path
+    // (this exchange replaces the old distinct + the order-keyed
+    // self-join's two sorted sides), then the ≤(7 choose 2) pairs per
+    // order come from [[pairsWithin]] instead of a join. The basket
+    // count and per-part frequencies are derived from the same
+    // checkpointed set table (read by total, freq, and the pair path),
+    // so the old COUNT(DISTINCT l_orderkey) expand disappears too.
+    val sets = sortedSets(Tables.lineitem(spark, d), col("l_orderkey"), col("l_partkey"))
     // one row per order → the basket count is a plain count
     val total = sets.agg(count(lit(1)).cast("double").as("total"))
     // arrays are per-order sets → count over the explode = the old
     // distinct-incidence per-part frequency
     val freq = sets.select(explode(col("ps")).as("l_partkey"))
       .groupBy(col("l_partkey")).agg(count(lit(1)).as("n"))
-    // two chained codegen'd Generates — see the itemCosine pair-stage
-    // comment (the nested-lambda expansion this replaces was
-    // interpreted per element)
-    val pairs = sets
-      .select(col("ps"), posexplode(col("ps")).as(Seq("i", "pa")))
-      .select(col("pa"),
-        explode(slice(col("ps"), col("i") + lit(2), size(col("ps")))).as("pb"))
+    val pairs = pairsWithin(sets, "pa", "pb")
       .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("n_both"))
     pairs
       .join(freq.select(col("l_partkey").as("pa"), col("n").as("n_a")), Seq("pa"))
@@ -1698,6 +1680,31 @@ object RelationalOps {
       |    (CAST(fa.n AS DOUBLE) * fb.n), 9) AS lift
       |FROM pairs JOIN freq fa ON fa.l_partkey = pa JOIN freq fb ON fb.l_partkey = pb
       |ORDER BY n_both DESC, pa, pb LIMIT 20""".stripMargin
+
+  /** Per-`key` sorted part-sets `ps` = sort_array(collect_set(`item`))
+    * of `rows`, lazily checkpointed: the one shuffle of the incidence,
+    * which [[basketLift]] and [[itemCosine]] each read more than once.
+    * collect_set dedupes map-side, so the exchange carries partially
+    * deduplicated sets, not raw rows. fanOut (guide §2.5): on a
+    * single-row-group fixture the scan is one task, and the
+    * collect_set partials are the whole map pass. */
+  private def sortedSets(rows: DataFrame, key: Column, item: Column): DataFrame =
+    fanOut(rows.select(key, item)).groupBy(key)
+      .agg(sort_array(collect_set(item)).as("ps"))
+      .localCheckpoint(false)
+
+  /** Every pair (a < b) within each sorted set `ps` of `sets`: the
+    * "pairs" co-occurrence expansion, as TWO chained Generates.
+    * posexplode picks `a` at 0-based index i, and
+    * explode(slice(ps, i + 2, size(ps))) pairs it with every later
+    * element (slice is 1-based and clamps at the end). Both explodes
+    * are codegen'd operators: the first cut of this stage built the
+    * pairs with nested transform/slice/flatten lambdas, and that
+    * interpreted O(set²) struct churn measured ~2× the whole
+    * rec_item_cosine query (13.3 s against ~4 s for this shape). */
+  private[ops] def pairsWithin(sets: DataFrame, a: String, b: String): DataFrame =
+    sets.select(col("ps"), posexplode(col("ps")).as(Seq("i", a)))
+      .select(col(a), explode(slice(col("ps"), col("i") + lit(2), size(col("ps")))).as(b))
 
   /** RANGE-interval window frame — the VALUE-based frame the rest of
     * the window family ([[windowOrderRank]] / [[windowNtile]] /
@@ -1917,9 +1924,8 @@ object RelationalOps {
     "o_totalprice", "o_orderdate", "o_orderpriority")
 
   /** Top-3 suppliers per nation by lineitem revenue — the rank-per-
-    * group idiom (`row_number` + `rnk <= K` filter) that every
-    * reporting layer runs; the global-top-N face is `top_orders`,
-    * this is the grouped face.
+    * group idiom ([[OpsUtil.topK]]) that every reporting layer runs;
+    * the global-top-N face is `top_orders`, this is the grouped face.
     *
     * Scale shape: revenue aggregates FIRST (lineitem-scale shuffle
     * onto (nation, supplier) keys — supplier-catalog-sized output),
@@ -1930,30 +1936,26 @@ object RelationalOps {
     * mechanism). Revenue through DECIMAL; ranks break ties by
     * supplier id. */
   def topPerGroup(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val rev = Tables.lineitem(spark, d)
       .join(Tables.supplier(spark, d).select(col("s_suppkey"), col("s_nationkey")),
         col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("s_nationkey").as("nation"), col("l_suppkey").as("supp"))
       .agg(OpsUtil.dsum(col("l_extendedprice") * (lit(1) - col("l_discount")))
         .as("revenue"))
-    rev.withColumn("rnk", row_number().over(
-        Window.partitionBy(col("nation")).orderBy(col("revenue").desc, col("supp"))))
-      .where(col("rnk") <= 3)
+    OpsUtil.topK(rev, Seq(col("nation")), Seq(col("revenue").desc, col("supp")), 3, "rnk")
       .orderBy(col("nation"), col("rnk"))
   }
 
   def topPerGroupSql: String =
-    """WITH rev AS (
+    s"""WITH rev AS (
       |  SELECT s.s_nationkey AS nation, l.l_suppkey AS supp,
       |    CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)))
       |      AS DOUBLE) AS revenue
       |  FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey
       |  GROUP BY 1, 2)
-      |SELECT nation, supp, revenue, rnk FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY nation
-      |    ORDER BY revenue DESC, supp) AS rnk FROM rev)
-      |WHERE rnk <= 3 ORDER BY nation, rnk""".stripMargin
+      |SELECT nation, supp, revenue, rnk
+      |FROM (${OpsUtil.topKSql("rev", "nation", "revenue DESC, supp", 3, "rnk")})
+      |ORDER BY nation, rnk""".stripMargin
 
   /** Relative-rank windows (percent_rank + cume_dist) over per-nation
     * customer spend: for each nation's top-3 spenders, where they sit
@@ -2061,12 +2063,7 @@ object RelationalOps {
     // pair stage is a codegen'd in-array expansion — no join. Pair
     // volume is identical (same (parts-per-customer)² bound); the
     // single-buyer prune is preserved below.
-    // fanOut (guide §2.5): the incidence scan is one task on the
-    // single-row-group fixture, so the collect_set partials — the
-    // whole 600k-row map pass — ran on one core.
-    val sets0 = fanOut(inc).groupBy(col("cust"))
-      .agg(sort_array(collect_set(col("part"))).as("ps"))
-      .localCheckpoint(false) // read by the marginals AND the pair path
+    val sets0 = sortedSets(inc, col("cust"), col("part"))
     // marginals: n = number of customers holding the part — arrays are
     // per-cust sets, so a plain count over the explode IS the distinct
     // count (identical to the old distinct→groupBy marg).
@@ -2095,19 +2092,7 @@ object RelationalOps {
       .join(marg.where(col("n") >= 2).select(col("part")), Seq("part"), "left_semi")
       .groupBy(col("cust")).agg(sort_array(collect_set(col("part"))).as("ps"))
       .repartition(spark.sparkContext.defaultParallelism)
-    // all ordered pairs (p1 < p2) within each sorted set, as TWO
-    // chained Generates: posexplode picks p1 at 0-based index i,
-    // explode(slice(ps, i+2, …)) pairs it with every later element
-    // (slice is 1-based and clamps at the end). Both explodes are
-    // codegen'd operators — the first cut of this stage built the
-    // pairs with nested transform/slice/flatten lambdas, and that
-    // interpreted O(set²) struct churn measured ~2× the whole query
-    // (13.3 s vs the 7.1 s pre-rewrite record; this shape benches
-    // ~4 s). Pair volume is unchanged.
-    val co = sets
-      .select(col("ps"), posexplode(col("ps")).as(Seq("i", "p1")))
-      .select(col("p1"),
-        explode(slice(col("ps"), col("i") + lit(2), size(col("ps")))).as("p2"))
+    val co = pairsWithin(sets, "p1", "p2")
       .groupBy(col("p1"), col("p2"))
       .agg(count(lit(1)).as("co"))
       .where(col("co") >= 2)

@@ -6,19 +6,26 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.OpsUtil._
 
-/** Similarity search over `embeddings.embedding: array<float>`.
+/** Similarity search and vector analytics over
+  * `embeddings.embedding: array<float>`. The families:
+  *  - exact top-k: [[bruteTopK]] (a broadcast of the small query set
+  *    against the corpus, the correctness baseline), [[knnLabel]] and
+  *    the [[mmrSelect]] pool;
+  *  - approximate top-k: sign-LSH ([[annLsh]], [[dedupEmbeddingLsh]]),
+  *    IVF ([[annIvf]], the two-level [[annIvf2]]) and PQ ([[annPq]]),
+  *    with their recall audits ([[annRecall]], [[pqRecall]]);
+  *  - cluster-bounded dedup: [[dedupSemantic]], [[dedupSemantic2]];
+  *  - clustering: [[embKmeans]], [[embKmeansLoop]], [[embSilhouette]];
+  *  - spectral and projection stats: [[embPower]], [[embPowerIter]],
+  *    [[embPca2]], [[randomProjection]], [[quantizeError]],
+  *    [[embOutliers]], [[embHofStats]].
   *
-  * Two paths, per the north star:
-  *  - [[bruteTopK]]: exact cosine top-k — a broadcast of the (small)
-  *    query set against the full corpus, so the big side streams
-  *    through one codegen stage with no shuffle. The correctness
-  *    baseline.
-  *  - [[annLsh]]: random-hyperplane LSH (sign-of-projection buckets,
-  *    multi-table) — candidates come from equi-joins on bucket keys,
-  *    never an all-pairs compare. This is the 100 TB path: bucket
-  *    cardinality scales with corpus size, each query probes T
-  *    buckets. Recall vs the brute-force baseline is asserted in
-  *    SimilaritySpec.
+  * Two kernels serve them. Every per-query ranking is one
+  * [[OpsUtil.topK]]; every Lloyd round and cell assignment is
+  * [[nearest]] + [[centroidMeans]]. Every approximate index is built
+  * deterministically (md5-derived planes, hash-ranked seeds, quantized
+  * means), so each query's DuckDB mirror replays the identical index
+  * for a hash-exact oracle.
   */
 object SimilarityOps {
 
@@ -34,14 +41,11 @@ object SimilarityOps {
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     val c = e.select(col("vec_id").as("nid"), col("v").as("nv"), col("nrm").as("nn"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid"))
-    broadcast(q).crossJoin(c)
+    topK(broadcast(q).crossJoin(c)
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        round(dotd(col("qv"), col("nv")) / (col("qn") * col("nn")), 9).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= K)
+        round(dotd(col("qv"), col("nv")) / (col("qn") * col("nn")), 9).as("cos_sim")),
+      Seq(col("qid")), Seq(col("cos_sim").desc, col("nid")), K, "rank")
       .orderBy("qid", "rank")
   }
 
@@ -50,12 +54,9 @@ object SimilarityOps {
        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
        |scored AS (
        |  SELECT qid, e.vec_id AS nid, ${cosine9Sql("qv", "e.v")} AS cos_sim
-       |  FROM q CROSS JOIN e WHERE qid <> e.vec_id),
-       |ranked AS (
-       |  SELECT qid, nid, cos_sim,
-       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, nid) AS rank
-       |  FROM scored)
-       |SELECT qid, nid, cos_sim, rank FROM ranked WHERE rank <= $K
+       |  FROM q CROSS JOIN e WHERE qid <> e.vec_id)
+       |SELECT qid, nid, cos_sim, rank
+       |FROM (${topKSql("scored", "qid", "cos_sim DESC, nid", K, "rank")})
        |ORDER BY qid, rank""".stripMargin
 
   // LSH configuration: T hash tables × B hyperplanes each. Plane
@@ -108,14 +109,11 @@ object SimilarityOps {
     val q = buckets.where(col("vec_id") < 10)
       .select(col("tab"), col("bkt"), col("vec_id").as("qid"), col("v").as("qv"))
     val c = buckets.select(col("tab"), col("bkt"), col("vec_id").as("nid"), col("v").as("nv"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid"))
-    broadcast(q).join(c, Seq("tab", "bkt"))
+    topK(broadcast(q).join(c, Seq("tab", "bkt"))
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), cosine9(col("qv"), col("nv")).as("cos_sim"))
-      .distinct()
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 3)
+      .distinct(),
+      Seq(col("qid")), Seq(col("cos_sim").desc, col("nid")), 3, "rank")
       .orderBy("qid", "rank")
   }
 
@@ -318,11 +316,10 @@ object SimilarityOps {
        |  SELECT cands.qid, cands.nid, ${cosine9Sql("qe.v", "ne.v")} AS cos_sim
        |  FROM cands
        |  JOIN e qe ON qe.vec_id = cands.qid
-       |  JOIN e ne ON ne.vec_id = cands.nid),
-       |ranked AS (SELECT qid, nid, cos_sim,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, nid) AS rank
-       |  FROM scored)
-       |SELECT qid, nid, cos_sim, rank FROM ranked WHERE rank <= 3 ORDER BY qid, rank""".stripMargin
+       |  JOIN e ne ON ne.vec_id = cands.nid)
+       |SELECT qid, nid, cos_sim, rank
+       |FROM (${topKSql("scored", "qid", "cos_sim DESC, nid", 3, "rank")})
+       |ORDER BY qid, rank""".stripMargin
   }
 
   // IVF configuration. The cell count k is sized ∝ corpus — each cell
@@ -465,14 +462,12 @@ object SimilarityOps {
 
   /** The SQL mirror of [[nearest]], and of the top-n routes: per
     * `part` group, the rows of `from` ranked ≤ n by (dist, id) —
-    * row_number ordered by distance, ties to the lower id. Output:
-    * `sel`'s columns, `dist` and the rank `rn`. */
+    * ties to the lower id. Output: `sel`'s columns, `dist` and the
+    * rank `rn`. */
   private def nearestCte(name: String, sel: String, dist: String, part: String,
       id: String, from: String, n: Int, materialized: Boolean = false): String =
     s"""$name AS${if (materialized) " MATERIALIZED" else ""} (
-       |  SELECT * FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY $part ORDER BY dist, $id) AS rn
-       |    FROM (SELECT $sel, $dist AS dist FROM $from)) WHERE rn <= $n)""".stripMargin
+       |  ${topKSql(s"(SELECT $sel, $dist AS dist FROM $from)", part, s"dist, $id", n, "rn")})""".stripMargin
 
   /** The SQL mirror of [[centroidMeans]]: per (keys, dim) the `mean`
     * of the exploded `v` arrays of `from`, re-gathered in dim order
@@ -587,38 +582,30 @@ object SimilarityOps {
     * once by an indexing job and every probe job just broadcasts it. */
   def annIvfProbe(spark: SparkSession, d: String, centroids: DataFrame): DataFrame = {
     val e = corpus(spark, d)
-    ivfTop3(e, assignCells(e, centroids), q => nearestN(q.crossJoin(broadcast(centroids)),
-      sqdist2(col("qn2"), col("qv"), col("c"), col("cn2")), "cell", IvfProbe))
+    ivfTop3(e, assignCells(e, centroids), q => topK(q.crossJoin(broadcast(centroids))
+      .withColumn("dist", sqdist2(col("qn2"), col("qv"), col("c"), col("cn2"))),
+      Seq(col("qid")), Seq(col("dist"), col("cell")), IvfProbe, "rn")
+      .select(col("qid"), col("cell")))
   }
 
   /** The probe side of both IVF variants: the queries (vec_id < 10)
     * of `e`, routed by `probe` to (qid, cell) pairs, then the top-3
     * cosine neighbours per query among those cells' members of the
-    * `assigned` corpus. */
+    * `assigned` corpus. A route is a [[topK]] over (qid, cell) distances,
+    * not the [[nearest]] aggregate: the query side is a handful of rows
+    * and each query keeps n > 1 cells. */
   private def ivfTop3(e: DataFrame, assigned: DataFrame,
       probe: DataFrame => DataFrame): DataFrame = {
     val members = assigned.select(col("cell"), col("vec_id").as("nid"), col("v").as("nv"))
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("n2").as("qn2"))
-    val wr = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid"))
-    probe(q).join(members, Seq("cell"))
+    topK(probe(q).join(members, Seq("cell"))
       .join(broadcast(q.select(col("qid"), col("qv"))), Seq("qid"))
       .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), cosine9(col("qv"), col("nv")).as("cos_sim"))
-      .withColumn("rank", row_number().over(wr))
-      .where(col("rank") <= 3)
+      .select(col("qid"), col("nid"), cosine9(col("qv"), col("nv")).as("cos_sim")),
+      Seq(col("qid")), Seq(col("cos_sim").desc, col("nid")), 3, "rank")
       .orderBy("qid", "rank")
   }
-
-  /** The n nearest centroids `id` per query: a row_number window, not
-    * the [[nearest]] aggregate, since the query side is a handful of
-    * rows and n > 1. */
-  private def nearestN(joined: DataFrame, dist: Column, id: String, n: Int): DataFrame =
-    joined.withColumn("dist", dist)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist"), col(id))))
-      .where(col("rn") <= n)
-      .select(col("qid"), col(id))
 
   // ---------------------------------------------------------------
   // sim_ann_ivf2: two-level (coarse-quantized) IVF — the >65,536-cell
@@ -697,10 +684,14 @@ object SimilarityOps {
     // query routing: beam Ivf2CoarseProbe coarse cells, then the
     // IvfProbe nearest fine cells among those groups
     ivfTop3(e, assignCellsCoarseOn(e, coarse, f2c), q => {
-      val qroute = nearestN(q.crossJoin(broadcast(coarse)),
-        sqdist2(col("qn2"), col("qv"), col("cc"), col("ccn2")), "ccell", Ivf2CoarseProbe)
-      nearestN(q.join(qroute, Seq("qid")).join(f2c, Seq("ccell")),
-        sqdist2(col("qn2"), col("qv"), col("c"), col("cn2")), "cell", IvfProbe)
+      val qroute = topK(q.crossJoin(broadcast(coarse))
+        .withColumn("dist", sqdist2(col("qn2"), col("qv"), col("cc"), col("ccn2"))),
+        Seq(col("qid")), Seq(col("dist"), col("ccell")), Ivf2CoarseProbe, "rn")
+        .select(col("qid"), col("ccell"))
+      topK(q.join(qroute, Seq("qid")).join(f2c, Seq("ccell"))
+        .withColumn("dist", sqdist2(col("qn2"), col("qv"), col("c"), col("cn2"))),
+        Seq(col("qid")), Seq(col("dist"), col("cell")), IvfProbe, "rn")
+        .select(col("qid"), col("cell"))
     })
   }
 
@@ -765,11 +756,10 @@ object SimilarityOps {
        |  FROM probes p
        |  JOIN members m USING (cell)
        |  JOIN qs q ON q.qid = p.qid
-       |  WHERE p.qid <> m.nid),
-       |ranked AS (SELECT qid, nid, cos_sim,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, nid) AS rank
-       |  FROM scored)
-       |SELECT qid, nid, cos_sim, rank FROM ranked WHERE rank <= 3 ORDER BY qid, rank""".stripMargin
+       |  WHERE p.qid <> m.nid)
+       |SELECT qid, nid, cos_sim, rank
+       |FROM (${topKSql("scored", "qid", "cos_sim DESC, nid", 3, "rank")})
+       |ORDER BY qid, rank""".stripMargin
 
   /** The coarse-level CTE chain shared by [[annIvf2Sql]] and
     * [[dedupSemantic2Sql]]: coarse seeds over the fine centroids,
@@ -909,22 +899,17 @@ object SimilarityOps {
         col("label").as("true_label"))
     val c = e.select(col("vec_id").as("nid"), col("v").as("nv"),
       col("nrm").as("nn"), col("label").as("n_label"))
-    val wRank = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid"))
-    val neighbors = broadcast(q).crossJoin(c)
+    val neighbors = topK(broadcast(q).crossJoin(c)
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("true_label"), col("nid"), col("n_label"),
-        round(dotd(col("qv"), col("nv")) / (col("qn") * col("nn")), 9).as("cos_sim"))
-      .withColumn("rank", row_number().over(wRank))
-      .where(col("rank") <= KnnK)
-    val wVote = Window.partitionBy(col("qid"))
-      .orderBy(col("votes").desc, col("sim_sum").desc, col("n_label"))
-    neighbors
+        round(dotd(col("qv"), col("nv")) / (col("qn") * col("nn")), 9).as("cos_sim")),
+      Seq(col("qid")), Seq(col("cos_sim").desc, col("nid")), KnnK, "rank")
+    val votes = neighbors
       .groupBy(col("qid"), col("true_label"), col("n_label"))
       .agg(count(lit(1)).as("votes"),
         sum(col("cos_sim").cast("decimal(18,9)")).cast("double").as("sim_sum"))
-      .withColumn("rn", row_number().over(wVote))
-      .where(col("rn") === 1)
+    topK(votes, Seq(col("qid")),
+        Seq(col("votes").desc, col("sim_sum").desc, col("n_label")), 1, "rn")
       .select(col("qid").as("vec_id"), col("true_label"),
         col("n_label").as("pred_label"), col("votes"),
         (col("n_label") === col("true_label")).as("agree"))
@@ -937,21 +922,18 @@ object SimilarityOps {
        |q AS (SELECT vec_id AS qid, v AS qv, label AS true_label
        |  FROM e WHERE vec_id % 25 = 0 AND vec_id < 2500),
        |scored AS (
-       |  SELECT qid, true_label, e.label AS n_label,
-       |    ${cosine9Sql("qv", "e.v")} AS cos_sim,
-       |    row_number() OVER (PARTITION BY qid
-       |      ORDER BY ${cosine9Sql("qv", "e.v")} DESC, e.vec_id) AS rank
+       |  SELECT qid, true_label, e.vec_id AS nid, e.label AS n_label,
+       |    ${cosine9Sql("qv", "e.v")} AS cos_sim
        |  FROM q CROSS JOIN e WHERE qid <> e.vec_id),
        |votes AS (
        |  SELECT qid, true_label, n_label, count(*) AS votes,
        |    CAST(SUM(CAST(cos_sim AS DECIMAL(18,9))) AS DOUBLE) AS sim_sum
-       |  FROM scored WHERE rank <= $KnnK
+       |  FROM (${topKSql("scored", "qid", "cos_sim DESC, nid", KnnK, "rank")})
        |  GROUP BY qid, true_label, n_label)
        |SELECT qid AS vec_id, true_label, n_label AS pred_label, votes,
        |  n_label = true_label AS agree
-       |FROM (SELECT *, row_number() OVER (PARTITION BY qid
-       |    ORDER BY votes DESC, sim_sum DESC, n_label) AS rn FROM votes)
-       |WHERE rn = 1 ORDER BY vec_id""".stripMargin
+       |FROM (${topKSql("votes", "qid", "votes DESC, sim_sum DESC, n_label", 1, "rn")})
+       |ORDER BY vec_id""".stripMargin
 
   /** The SemDeDup SQL tail over a named (vec_id, v, cell) assignment
     * CTE — mirrors [[semanticOn]] step for step. */
@@ -960,10 +942,8 @@ object SimilarityOps {
        |  SELECT b.vec_id, a.vec_id AS aid, ${cosine9Sql("a.v", "b.v")} AS cos
        |  FROM $af a JOIN $af b ON a.cell = b.cell AND a.vec_id < b.vec_id),
        |best AS (
-       |  SELECT vec_id, aid AS nn_id, cos AS nn_cos FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id
-       |      ORDER BY cos DESC, aid) AS rn
-       |    FROM pairs) WHERE rn = 1)
+       |  SELECT vec_id, aid AS nn_id, cos AS nn_cos
+       |  FROM (${topKSql("pairs", "vec_id", "cos DESC, aid", 1, "rn")}))
        |SELECT m.vec_id, m.cell, b.nn_id, b.nn_cos,
        |  COALESCE(b.nn_cos >= $SemThresh, FALSE) AS is_dup
        |FROM $af m LEFT JOIN best b USING (vec_id)""".stripMargin
@@ -1073,9 +1053,7 @@ object SimilarityOps {
       .where(col("vec_id") =!= col("qid"))
       .groupBy(col("qid"), col("vec_id").as("nid"))
       .agg(round(sum(col("pq")).cast("double") / QScale, 6).as("adc"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc"), col("nid"))
-    adc.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 3)
+    topK(adc, Seq(col("qid")), Seq(col("adc"), col("nid")), 3, "rank")
       .select(col("qid"), col("nid"), col("adc"), col("rank"))
       .orderBy("qid", "rank")
   }
@@ -1146,12 +1124,8 @@ object SimilarityOps {
        |    round(CAST(SUM(l.pq) AS DOUBLE) / 1000000.0, 6) AS adc
        |  FROM codes cd JOIN lut l ON cd.m = l.m AND cd.k = l.k
        |  WHERE cd.vec_id <> l.qid
-       |  GROUP BY l.qid, cd.vec_id),
-       |ranked AS (
-       |  SELECT qid, nid, adc,
-       |    row_number() OVER (PARTITION BY qid ORDER BY adc, nid) AS rank
-       |  FROM adc)
-       |SELECT qid, nid, adc, rank FROM ranked WHERE rank <= 3
+       |  GROUP BY l.qid, cd.vec_id)
+       |SELECT qid, nid, adc, rank FROM (${topKSql("adc", "qid", "adc, nid", 3, "rank")})
        |ORDER BY qid, rank""".stripMargin
   }
 
@@ -1893,15 +1867,13 @@ object SimilarityOps {
     val q = e.where(col("vec_id") < MmrQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val cand = e.select(col("vec_id").as("nid"), col("v").as("nv"))
-    val wPool = Window.partitionBy(col("qid")).orderBy(col("rel").desc, col("nid"))
     // the one corpus-sized stage; eager checkpoint so the pair build
     // and the collect below both read a flat <= 60-row block scan
-    val pool = broadcast(q).crossJoin(cand)
+    val pool = topK(broadcast(q).crossJoin(cand)
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), cosine9(col("qv"), col("nv")).as("rel"),
-        col("nv"))
-      .withColumn("rk", row_number().over(wPool))
-      .where(col("rk") <= MmrPoolK)
+        col("nv")),
+      Seq(col("qid")), Seq(col("rel").desc, col("nid")), MmrPoolK, "rk")
       .drop("rk")
       .localCheckpoint(true)
     val pa = pool.select(col("qid"), col("nid").as("a"), col("nv").as("av"))
@@ -1953,38 +1925,34 @@ object SimilarityOps {
   def mmrSelectSql: String = {
     def roundCte(r: Int): String = {
       val prev = (1 until r).map(i => s"SELECT * FROM s$i").mkString(" UNION ALL ")
+      val scored =
+        s"""(SELECT c.qid, c.nid, floor((CAST(0.7 AS DOUBLE) * c.rel
+           |        - CAST(0.3 AS DOUBLE) * m.maxsim) * 1e9 + 0.5) / 1e9 AS score
+           |    FROM slim c
+           |    JOIN (SELECT ps.qid, ps.a, MAX(ps.sim) AS maxsim
+           |          FROM ps JOIN ($prev) sel ON ps.qid = sel.qid AND ps.b = sel.nid
+           |          GROUP BY ps.qid, ps.a) m
+           |      ON m.qid = c.qid AND m.a = c.nid
+           |    WHERE NOT EXISTS (SELECT 1 FROM ($prev) sel
+           |                      WHERE sel.qid = c.qid AND sel.nid = c.nid))""".stripMargin
       s"""s$r AS MATERIALIZED (
-         |  SELECT qid, $r AS pick, nid, score FROM (
-         |    SELECT c.qid, c.nid, floor((CAST(0.7 AS DOUBLE) * c.rel
-         |        - CAST(0.3 AS DOUBLE) * m.maxsim) * 1e9 + 0.5) / 1e9 AS score
-         |    FROM slim c
-         |    JOIN (SELECT ps.qid, ps.a, MAX(ps.sim) AS maxsim
-         |          FROM ps JOIN ($prev) sel ON ps.qid = sel.qid AND ps.b = sel.nid
-         |          GROUP BY ps.qid, ps.a) m
-         |      ON m.qid = c.qid AND m.a = c.nid
-         |    WHERE NOT EXISTS (SELECT 1 FROM ($prev) sel
-         |                      WHERE sel.qid = c.qid AND sel.nid = c.nid))
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) = 1)""".stripMargin
+         |  SELECT qid, $r AS pick, nid, score
+         |  FROM (${topKSql(scored, "qid", "score DESC, nid", 1, "rn")}))""".stripMargin
     }
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $MmrQueries),
        |pool AS MATERIALIZED (
-       |  SELECT qid, nid, rel, nv FROM (
-       |    SELECT qid, e.vec_id AS nid, ${cosine9Sql("qv", "e.v")} AS rel, e.v AS nv,
-       |      ROW_NUMBER() OVER (PARTITION BY qid
-       |        ORDER BY ${cosine9Sql("qv", "e.v")} DESC, e.vec_id) AS rk
-       |    FROM q CROSS JOIN e WHERE qid <> e.vec_id)
-       |  WHERE rk <= $MmrPoolK),
+       |  SELECT qid, nid, rel, nv FROM (${topKSql(
+         s"(SELECT qid, e.vec_id AS nid, ${cosine9Sql("qv", "e.v")} AS rel, e.v AS nv " +
+           "FROM q CROSS JOIN e WHERE qid <> e.vec_id)", "qid", "rel DESC, nid", MmrPoolK, "rk")})),
        |ps AS MATERIALIZED (
        |  SELECT p1.qid, p1.nid AS a, p2.nid AS b, ${cosine9Sql("p1.nv", "p2.nv")} AS sim
        |  FROM pool p1 JOIN pool p2 ON p1.qid = p2.qid AND p1.nid <> p2.nid),
        |slim AS (SELECT qid, nid, rel FROM pool),
        |s1 AS MATERIALIZED (
-       |  SELECT qid, 1 AS pick, nid, score FROM (
-       |    SELECT qid, nid,
-       |      floor(CAST(0.7 AS DOUBLE) * rel * 1e9 + 0.5) / 1e9 AS score
-       |    FROM slim)
-       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) = 1),
+       |  SELECT qid, 1 AS pick, nid, score FROM (${topKSql(
+         "(SELECT qid, nid, floor(CAST(0.7 AS DOUBLE) * rel * 1e9 + 0.5) / 1e9 AS score FROM slim)",
+         "qid", "score DESC, nid", 1, "rn")})),
        |${(2 to MmrK).map(roundCte).mkString(",\n")}
        |SELECT qid, pick, nid, score FROM (
        |  ${(1 to MmrK).map(i => s"SELECT * FROM s$i").mkString(" UNION ALL ")})

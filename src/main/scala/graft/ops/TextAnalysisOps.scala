@@ -118,13 +118,10 @@ object TextAnalysisOps {
        |  SELECT doc_id, sl_lang, COUNT(*) AS n_hits
        |  FROM tok JOIN dict ON tokn = sl_word
        |  GROUP BY doc_id, sl_lang),
-       |best AS (
-       |  SELECT doc_id, sl_lang AS pred_lang, n_hits,
-       |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY n_hits DESC, sl_lang) AS rnk
-       |  FROM hits)
-       |SELECT d.doc_id, COALESCE(b.pred_lang, 'und') AS pred_lang,
+       |best AS (${topKSql("hits", "doc_id", "n_hits DESC, sl_lang", 1, "rnk")})
+       |SELECT d.doc_id, COALESCE(b.sl_lang, 'und') AS pred_lang,
        |  COALESCE(b.n_hits, 0) AS n_hits, d.lang AS meta_lang
-       |FROM documents d LEFT JOIN (SELECT * FROM best WHERE rnk = 1) b
+       |FROM documents d LEFT JOIN best b
        |  ON d.doc_id = b.doc_id
        |ORDER BY d.doc_id""".stripMargin
 
@@ -284,22 +281,17 @@ object TextAnalysisOps {
        |  SELECT lang, unnest(bgs) AS bg FROM bigrams
        |  WHERE ${xhash60Sql("CAST(doc_id AS VARCHAR)", 5)} % 10 = 0),
        |prof AS (
-       |  SELECT lang AS p_lang, bg FROM (
-       |    SELECT lang, bg, COUNT(*) AS df,
-       |      ROW_NUMBER() OVER (PARTITION BY lang ORDER BY COUNT(*) DESC, bg) AS rnk
-       |    FROM sampled GROUP BY lang, bg)
-       |  WHERE rnk <= 20),
+       |  SELECT lang AS p_lang, bg FROM (${topKSql(
+         "(SELECT lang, bg, COUNT(*) AS df FROM sampled GROUP BY lang, bg)",
+         "lang", "df DESC, bg", 20, "rnk")})),
        |scored AS (
        |  SELECT doc_id, p_lang, COUNT(*) AS overlap
        |  FROM exploded JOIN prof ON exploded.bg = prof.bg
        |  GROUP BY doc_id, p_lang),
-       |best AS (
-       |  SELECT doc_id, p_lang AS pred_lang, overlap,
-       |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY overlap DESC, p_lang) AS rnk
-       |  FROM scored)
-       |SELECT d.doc_id, COALESCE(b.pred_lang, 'und') AS pred_lang,
+       |best AS (${topKSql("scored", "doc_id", "overlap DESC, p_lang", 1, "rnk")})
+       |SELECT d.doc_id, COALESCE(b.p_lang, 'und') AS pred_lang,
        |  COALESCE(b.overlap, 0) AS overlap, d.lang AS meta_lang
-       |FROM documents d LEFT JOIN (SELECT * FROM best WHERE rnk = 1) b
+       |FROM documents d LEFT JOIN best b
        |  ON d.doc_id = b.doc_id
        |ORDER BY d.doc_id""".stripMargin
 
@@ -793,13 +785,10 @@ object TextAnalysisOps {
     val idf = df.crossJoin(broadcast(n))
       .select(col("term"),
         round(log((col("n_docs") + 1).cast("double") / (col("df") + 1)), 6).as("idf"))
-    tf.join(idf, Seq("term"))
+    topK(tf.join(idf, Seq("term"))
       .select(col("doc_id"), col("term"), col("tf"),
-        round(col("tf") * col("idf"), 9).as("tfidf"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("doc_id"))
-          .orderBy(col("tfidf").desc, col("term"))))
-      .where(col("rank") <= TfidfK)
+        round(col("tf") * col("idf"), 9).as("tfidf")),
+      Seq(col("doc_id")), Seq(col("tfidf").desc, col("term")), TfidfK, "rank")
       .orderBy("doc_id", "rank")
   }
 
@@ -815,13 +804,10 @@ object TextAnalysisOps {
        |  FROM df, n),
        |scored AS (
        |  SELECT tf.doc_id, tf.term, tf.tf, round(tf.tf * idf.idf, 9) AS tfidf
-       |  FROM tf JOIN idf ON tf.term = idf.term),
-       |ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY doc_id
-       |    ORDER BY tfidf DESC, term) AS rank
-       |  FROM scored)
-       |SELECT doc_id, term, tf, tfidf, rank FROM ranked
-       |WHERE rank <= $TfidfK ORDER BY doc_id, rank""".stripMargin
+       |  FROM tf JOIN idf ON tf.term = idf.term)
+       |SELECT doc_id, term, tf, tfidf, rank
+       |FROM (${topKSql("scored", "doc_id", "tfidf DESC, term", TfidfK, "rank")})
+       |ORDER BY doc_id, rank""".stripMargin
 
   private val TopkRanks = 5
 
@@ -844,10 +830,7 @@ object TextAnalysisOps {
     val sk = tok.groupBy(col("lang"))
       .agg(graft.functions.MgTopKAgg.mg_topk(col("token")).as("sk"))
     val exact = tok.groupBy(col("lang"), col("token")).agg(count(lit(1)).as("n"))
-    val top = exact
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("lang")).orderBy(col("n").desc, col("token"))))
-      .where(col("rank") <= TopkRanks)
+    val top = topK(exact, Seq(col("lang")), Seq(col("n").desc, col("token")), TopkRanks, "rank")
     // try_element_at, not element_at: Spark 4 runs ANSI mode by
     // default, where element_at THROWS on a missing map key — and a
     // top-K token the MG sketch evicted (est = 0) is exactly the case
@@ -868,13 +851,10 @@ object TextAnalysisOps {
   def topkSketchSql: String =
     s"""WITH tok AS (
        |  SELECT lang, unnest(${tokensSql("text")}) AS token FROM documents),
-       |exact AS (SELECT lang, token, COUNT(*) AS n FROM tok GROUP BY lang, token),
-       |ranked AS (
-       |  SELECT lang, token, n, row_number() OVER (PARTITION BY lang
-       |    ORDER BY n DESC, token) AS rank
-       |  FROM exact)
+       |exact AS (SELECT lang, token, COUNT(*) AS n FROM tok GROUP BY lang, token)
        |SELECT lang, rank, token, n, TRUE AS bounds_hold, TRUE AS hh_tracked
-       |FROM ranked WHERE rank <= $TopkRanks ORDER BY lang, rank""".stripMargin
+       |FROM (${topKSql("exact", "lang", "n DESC, token", TopkRanks, "rank")})
+       |ORDER BY lang, rank""".stripMargin
 
   /** Count-Min frequency estimates per language via the
     * [[graft.functions.CmsAgg]] sketch, probed at the exact top-5
@@ -898,10 +878,7 @@ object TextAnalysisOps {
     val sk = tok.groupBy(col("lang"))
       .agg(CmsAgg.cms_sketch(col("token")).as("sk"))
     val exact = tok.groupBy(col("lang"), col("token")).agg(count(lit(1)).as("n"))
-    val top = exact
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("lang")).orderBy(col("n").desc, col("token"))))
-      .where(col("rank") <= TopkRanks)
+    val top = topK(exact, Seq(col("lang")), Seq(col("n").desc, col("token")), TopkRanks, "rank")
     // row r's bucket: the r-th 8-hex-digit slice of md5(token) mod W —
     // the same built-in md5 the oracle replays (functions, not UDFs)
     val est = least((0 until CmsAgg.D).map { r =>
@@ -922,10 +899,7 @@ object TextAnalysisOps {
     s"""WITH tok AS (
        |  SELECT lang, unnest(${tokensSql("text")}) AS token FROM documents),
        |exact AS (SELECT lang, token, COUNT(*) AS n FROM tok GROUP BY lang, token),
-       |ranked AS (
-       |  SELECT lang, token, n, row_number() OVER (PARTITION BY lang
-       |    ORDER BY n DESC, token) AS rank
-       |  FROM exact),
+       |ranked AS (${topKSql("exact", "lang", "n DESC, token", TopkRanks, "rank")}),
        |rws AS (SELECT unnest(range(4)) AS r),
        |cnt AS (
        |  SELECT t.lang, w.r,
@@ -935,8 +909,7 @@ object TextAnalysisOps {
        |probe AS (
        |  SELECT k.lang, k.rank, k.token, k.n, w.r,
        |    ('0x' || substr(md5(k.token), CAST(8*w.r + 1 AS INT), 8))::BIGINT % 64 AS b
-       |  FROM ranked k CROSS JOIN rws w
-       |  WHERE k.rank <= $TopkRanks)
+       |  FROM ranked k CROSS JOIN rws w)
        |SELECT p.lang, p.rank, p.token, p.n,
        |  CAST(MIN(COALESCE(c.c, 0)) AS BIGINT) AS est,
        |  MIN(COALESCE(c.c, 0)) >= p.n AS overcount_ok

@@ -171,22 +171,19 @@ object TrainingPrepOps {
     * so the shuffle carries K × langs × tasks rows, not the corpus.
     * PlanSpec pins the WindowGroupLimit Partial node. */
   def sampleStratified(spark: SparkSession, d: String): DataFrame =
-    Tables.documents(spark, d)
+    topK(Tables.documents(spark, d)
       .select(col("doc_id"), col("lang"), col("n_chars"),
-        xhash60(col("doc_id").cast("string"), 21).as("hk"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("lang")).orderBy(col("hk"), col("doc_id"))))
-      .where(col("rn") <= StratumK)
+        xhash60(col("doc_id").cast("string"), 21).as("hk")),
+      Seq(col("lang")), Seq(col("hk"), col("doc_id")), StratumK, "rn")
       .select(col("lang"), col("doc_id"), col("n_chars"))
       .orderBy("lang", "doc_id")
 
   def sampleStratifiedSql: String =
-    s"""SELECT lang, doc_id, n_chars FROM (
-       |  SELECT lang, doc_id, n_chars,
-       |    row_number() OVER (PARTITION BY lang
-       |      ORDER BY ${xhash60Sql("CAST(doc_id AS VARCHAR)", 21)}, doc_id) AS rn
-       |  FROM documents)
-       |WHERE rn <= $StratumK ORDER BY lang, doc_id""".stripMargin
+    s"""SELECT lang, doc_id, n_chars FROM (${topKSql(
+         s"(SELECT lang, doc_id, n_chars, ${xhash60Sql("CAST(doc_id AS VARCHAR)", 21)} AS hk " +
+           "FROM documents)",
+         "lang", "hk, doc_id", StratumK, "rn")})
+       |ORDER BY lang, doc_id""".stripMargin
 
   /** Weighted sampling WITHOUT replacement — Efraimidis–Spirakis: each
     * document draws key = −ln(u)/w from a deterministic uniform
@@ -462,7 +459,6 @@ object TrainingPrepOps {
     * (no sqrt): monotone for ranking and one fewer float op to
     * mirror. */
   def embHardExamples(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(spark, d)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -476,16 +472,13 @@ object TrainingPrepOps {
       .select(col("label"), col("vec_id"),
         round((norm2(col("v")) - lit(2.0) * dotd(col("v"), col("c")))
           + norm2(col("c")), 9).as("dist2"))
-    val w = Window.partitionBy(col("label"))
-      .orderBy(col("dist2").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 3)
+    topK(scored, Seq(col("label")), Seq(col("dist2").desc, col("vec_id")), 3, "rank")
       .select(col("label"), col("rank"), col("vec_id"), col("dist2"))
       .orderBy("label", "rank")
   }
 
   def embHardExamplesSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |ex AS (
       |  SELECT label, unnest(range(0, len(v))) AS dim, unnest(v) AS x FROM e),
@@ -500,13 +493,9 @@ object TrainingPrepOps {
       |      - 2.0 * list_sum(list_transform(range(1, len(e.v) + 1),
       |          i -> e.v[i] * c.c[i])))
       |      + list_sum(list_transform(c.c, x -> x*x)), 9) AS dist2
-      |  FROM e JOIN cents c USING (label)),
-      |ranked AS (
-      |  SELECT label, vec_id, dist2,
-      |    row_number() OVER (PARTITION BY label
-      |      ORDER BY dist2 DESC, vec_id) AS rank
-      |  FROM scored)
-      |SELECT label, rank, vec_id, dist2 FROM ranked WHERE rank <= 3
+      |  FROM e JOIN cents c USING (label))
+      |SELECT label, rank, vec_id, dist2
+      |FROM (${topKSql("scored", "label", "dist2 DESC, vec_id", 3, "rank")})
       |ORDER BY label, rank""".stripMargin
 
   // ---------------------------------------------------------------

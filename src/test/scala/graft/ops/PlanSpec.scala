@@ -252,11 +252,17 @@ class PlanSpec extends AnyFunSuite {
     // map-side partial top-K (each task forwards ≤ K rows per lang),
     // so the shuffle carries K × langs × tasks rows, not the corpus.
     // This pins the optimization so a refactor (e.g. a rank filter the
-    // rule can't see through) fails here instead of at scale.
-    val plan = TrainingPrepOps.sampleStratified(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit") && plan.contains("Partial"),
-      s"expected a partial WindowGroupLimit below the exchange:\n$plan")
+    // rule can't see through) fails here instead of at scale. Every
+    // query below ranks through OpsUtil.topK (k = 1 included), so the
+    // kernel's plan shape is pinned wherever it is used.
+    val topKQueries = Seq("sample_stratified", "sim_brute_topk", "text_tfidf",
+      "window_top_per_group", "sim_ann_lsh", "sim_ann_pq", "knn_label", "agg_mode",
+      "agg_topk_sketch", "agg_cms", "emb_hard_examples", "score_nb")
+    for (name <- topKQueries) {
+      val plan = graft.SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l => l.contains("WindowGroupLimit") && l.endsWith("Partial")),
+        s"$name: expected a partial WindowGroupLimit below the exchange:\n$plan")
+    }
   }
 
   test("dedup QA cross-check samples are fixed-budget (TakeOrdered, no full sort)") {

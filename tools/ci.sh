@@ -72,7 +72,8 @@ fi
 echo "== PLANS.md matches the code"
 # DumpPlans writes the same text on every run of the same code, so any
 # difference is a plan that moved without PLANS.md being regenerated.
-sbt -batch "runMain graft.tools.DumpPlans /root/testdata/sf0.001 $OUT/PLANS.md" 2>&1 | tail -1
+# PLANS.md is generated against the sf0.001 tables next to $SF.
+sbt -batch "runMain graft.tools.DumpPlans $(dirname "$SF")/sf0.001 $OUT/PLANS.md" 2>&1 | tail -1
 if ! diff PLANS.md "$OUT/PLANS.md"; then
   echo "FAIL: PLANS.md differs from the code's plans (lines above);"
   echo "      regenerate it with sbt \"runMain graft.tools.DumpPlans\""
