@@ -18,7 +18,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - [[staged]]: files, catalog tables or a database written once,
   *    with the release closure that removes them. They live until
   *    [[releaseAll]] or JVM exit, so bench passes do not re-stage
-  *    sources.
+  *    sources. The result dirs of declared streaming runs
+  *    (kind `stream-result`, one entry per run) live here too, keyed
+  *    on the session the query was called with, so a returned
+  *    DataFrame stays readable however often its query runs again.
   *
   * Each key is built at most once, even when callers race (Verify
   * constructs queries on 8 threads). The build runs under its own

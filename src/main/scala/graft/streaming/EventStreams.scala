@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.Files
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.ops.OpsUtil.{deleteRecursively, dsum}
+import graft.ops.SharedBuild
 
 /** Structured Streaming equivalents of the batch event analytics
   * (graft.ops.EventOps). The reference is strictly batch (SURVEY.md
@@ -182,28 +185,17 @@ object EventStreams {
   }
 
   /** [[sessionizeFlat]] under the hash gate: events staged as two
-    * time-ordered halves replayed as separate micro-batches (the
-    * [[streamUserTotals]] staging), so sessions spanning the midpoint
-    * prove state carries across batches. Append mode, parquet sink. */
+    * time-ordered halves ([[stageSlices]]) replayed as separate
+    * micro-batches, so sessions spanning the midpoint prove state
+    * carries across batches. Append mode, parquet sink. */
   def streamSessionizeFlat(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
     val ss = streamingSession(spark)
-    val ev = graft.Tables.events(ss, d)
-    val bounds = ev.agg(
-      min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).head()
-    val cut = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) / 2
-    val drop = java.nio.file.Files.createTempDirectory(s"graft-stream-flatmap-$n")
-    ev.filter(unix_millis(col("ts")) < cut)
-      .coalesce(1).write.mode("append").parquet(drop.toString)
-    Thread.sleep(5) // distinct mod-times: deterministic batch order
-    ev.filter(unix_millis(col("ts")) >= cut)
-      .coalesce(1).write.mode("append").parquet(drop.toString)
-    try runToParquetSink(ss,
-      sessionizeFlat(ss, readEvents(ss, drop.toString, maxFilesPerTrigger = Some(1))),
+    val drop = stageSlices(ss, d, "graft-stream-flatmap-", 2)
+    try runToParquetSink(spark,
+      sessionizeFlat(ss, readEvents(ss, drop, maxFilesPerTrigger = Some(1))),
       "stream_flatmap_sessions", OutputMode.Append())
       .orderBy("user_id", "start_us")
-    finally deleteRecursively(drop.toString)
+    finally deleteRecursively(drop)
   }
 
   /** Batch twin: gap-split sessions per user, minus each user's last
@@ -278,10 +270,6 @@ object EventStreams {
         col("p_ts"), col("amount"))
   }
 
-  // one memory-sink table per call — a counter, not a path hash, so
-  // repeated calls (bench reps) can never collide on a catalog slot
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** The most shuffle/state partitions a declared streaming run uses.
     * Stateful operators pay a fixed per-partition per-batch state-store
     * cost (snapshot, maintenance, the no-data cleanup batch — a
@@ -328,18 +316,40 @@ object EventStreams {
   /** Stage the dir's events table as a one-drop landing directory:
     * the sf tables are single parquet FILES and a file-stream source
     * needs a directory (in production the ingest dir IS the landing
-    * directory). Callers delete it once the stream has drained — the
-    * memory sink holds the results, so repeated calls (bench reps)
-    * must not accumulate 20 MB staging copies in the temp dir. */
-  private def stageEventsDrop(d: String, tag: String, n: Long,
+    * directory). The staging is input only: callers delete it once the
+    * stream has drained, while the run's result lives on in its own
+    * sink (a memory table on the run's clone session, or a result dir
+    * owned in [[SharedBuild]], see [[runToParquetSink]]), so repeated
+    * calls (bench reps) do not accumulate staging copies. */
+  private def stageEventsDrop(d: String, prefix: String,
       copies: Int = 1): String = {
-    val drop = java.nio.file.Files.createTempDirectory(s"graft-$tag-$n")
+    val drop = Files.createTempDirectory(prefix)
     (1 to copies).foreach { i =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(d, "events.parquet"),
+      Files.copy(java.nio.file.Paths.get(d, "events.parquet"),
         drop.resolve(s"drop$i.parquet"))
     }
     drop.toString
+  }
+
+  /** Stage the dir's events table as `k` time-ordered single-file
+    * drops (equal event-time slices, production ingest order, no
+    * duplication) with distinct mod-times, so a `maxFilesPerTrigger = 1`
+    * replay runs them as `k` micro-batches in time order: state must
+    * carry across batches, and no event is late against the watermark
+    * of the batches before it. Input only; callers delete it. */
+  private def stageSlices(ss: SparkSession, d: String, prefix: String,
+      k: Int): String = {
+    val ev = graft.Tables.events(ss, d)
+    val ms = unix_millis(col("ts"))
+    val bounds = ev.agg(min(ms), max(ms)).head()
+    val (lo, width) = (bounds.getLong(0), (bounds.getLong(1) - bounds.getLong(0)) / k + 1)
+    val drop = Files.createTempDirectory(prefix).toString
+    (0 until k).foreach { i =>
+      ev.filter(ms >= lo + i * width && ms < lo + (i + 1) * width)
+        .coalesce(1).write.mode("append").parquet(drop)
+      Thread.sleep(5) // distinct mod-times: deterministic batch order
+    }
+    drop
   }
 
   /** The watermark-windowed [[hourlyAgg]] pipeline DRIVEN to
@@ -351,21 +361,17 @@ object EventStreams {
     * window emits once the static input drains, exactly the batch
     * result. */
   def streamHourly(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
-    val staged = stageEventsDrop(d, "stream-hourly", n)
+    val staged = stageEventsDrop(d, "graft-stream-hourly-")
     val ss = streamingSession(spark)
-    try runToMemory(ss, hourlyAgg(readEvents(ss, staged)),
-      s"graft_stream_hourly_$n")
+    try runToMemory(ss, hourlyAgg(readEvents(ss, staged)), "graft_stream_hourly")
       .orderBy("hr", "event_type")
     finally deleteRecursively(staged)
   }
 
   def streamSliding(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
-    val staged = stageEventsDrop(d, "stream-sliding", n)
+    val staged = stageEventsDrop(d, "graft-stream-sliding-")
     val ss = streamingSession(spark)
-    try runToMemory(ss, slidingAgg(readEvents(ss, staged)),
-      s"graft_stream_sliding_$n")
+    try runToMemory(ss, slidingAgg(readEvents(ss, staged)), "graft_stream_sliding")
       .orderBy("win_start", "event_type")
     finally deleteRecursively(staged)
   }
@@ -394,8 +400,7 @@ object EventStreams {
     * Result cardinality is days × types (bounded) → Complete-mode
     * memory sink. */
   def streamEnrich(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
-    val staged = stageEventsDrop(d, "stream-enrich", n)
+    val staged = stageEventsDrop(d, "graft-stream-enrich-")
     val ss = streamingSession(spark)
     val cohort = graft.Tables.events(ss, d)
       .groupBy(col("user_id"))
@@ -405,7 +410,7 @@ object EventStreams {
         .join(cohort, Seq("user_id"))
         .groupBy(col("cohort_day"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value")),
-      s"graft_stream_enrich_$n")
+      "graft_stream_enrich")
       .orderBy("cohort_day", "event_type")
     finally deleteRecursively(staged)
   }
@@ -436,10 +441,9 @@ object EventStreams {
     * accumulate every session in driver memory (~10M rows at 100×
     * sf0.1), the classic driver-OOM scale ceiling. */
   def streamSessions(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
-    val staged = stageEventsDrop(d, "stream-sessions", n)
+    val staged = stageEventsDrop(d, "graft-stream-sessions-")
     val ss = streamingSession(spark)
-    try runToParquetSink(ss, sessionAgg(readEvents(ss, staged)),
+    try runToParquetSink(spark, sessionAgg(readEvents(ss, staged)),
       "stream_sessions")
       .orderBy("user_id", "start_ts")
     finally deleteRecursively(staged)
@@ -462,37 +466,23 @@ object EventStreams {
     * the genuinely-unbounded-source face (every field derived from
     * the rate source's deterministic value sequence). */
   def streamClockHourly(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
     val ss = streamingSession(spark)
-    val ev = graft.Tables.events(ss, d)
-    val bounds = ev.agg(
-      min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).head()
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val qWidth = (hi - lo) / 4 + 1
-    val drop = java.nio.file.Files.createTempDirectory(s"graft-stream-clock-$n")
-    (0 until 4).foreach { q =>
-      ev.filter(unix_millis(col("ts")) >= lo + q * qWidth &&
-          unix_millis(col("ts")) < lo + (q + 1) * qWidth)
-        .coalesce(1).write.mode("append").parquet(drop.toString)
-      Thread.sleep(5) // distinct mod-times: deterministic batch order
-    }
+    val drop = stageSlices(ss, d, "graft-stream-clock-", 4)
     try {
-      val name = s"graft_stream_clock_$n"
       val q: StreamingQuery =
-        hourlyAgg(readEvents(ss, drop.toString, maxFilesPerTrigger = Some(1)))
+        hourlyAgg(readEvents(ss, drop, maxFilesPerTrigger = Some(1)))
           .writeStream
           .outputMode(OutputMode.Complete())
           .format("memory")
-          .queryName(name)
+          .queryName("graft_stream_clock")
           .trigger(Trigger.ProcessingTime("25 milliseconds"))
           .start()
       q.processAllAvailable() // drain: blocks until all staged input is processed
       q.stop()
       q.awaitTermination()
       StreamMeter.addQuery(q)
-      ss.table(name).orderBy("hr", "event_type")
-    } finally deleteRecursively(drop.toString)
+      ss.table("graft_stream_clock").orderBy("hr", "event_type")
+    } finally deleteRecursively(drop)
   }
 
   /** How many rate-source rows the declared [[streamRateHourly]] run
@@ -520,9 +510,8 @@ object EventStreams {
     * mode republishes it per batch); nothing data-sized crosses the
     * driver. */
   def streamRateHourly(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
     val ss = streamingSession(spark)
-    val name = s"graft_stream_rate_$n"
+    val name = "graft_stream_rate"
     val synth = ss.readStream.format("rate")
       .option("rowsPerSecond", "25000")
       .option("numPartitions", "4")
@@ -579,10 +568,9 @@ object EventStreams {
     * is exactly the distinct events table. Append mode, parquet sink:
     * rows emit on first sight, nothing driver-side. */
   def streamDedup(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
-    val staged = stageEventsDrop(d, "stream-dedup", n, copies = 2)
+    val staged = stageEventsDrop(d, "graft-stream-dedup-", copies = 2)
     val ss = streamingSession(spark)
-    try runToParquetSink(ss,
+    try runToParquetSink(spark,
       dedupedEvents(readEvents(ss, staged, maxFilesPerTrigger = Some(1)))
         .select("event_id", "user_id", "event_type", "value"),
       "stream_dedup", OutputMode.Append())
@@ -597,44 +585,31 @@ object EventStreams {
       |FROM events ORDER BY event_id""".stripMargin
 
   /** The [[userRunningTotals]] mapGroupsWithState machine under the
-    * hash gate: events staged as TWO time-ordered halves (split at
-    * the midpoint timestamp — production ingest order, NO duplication)
-    * and replayed as separate micro-batches, so per-user state must
-    * carry across batches for the final totals to be right. Update
-    * mode appends every emission (live updates AND timeout finals) to
-    * the parquet sink; the declared result reduces to each user's
+    * hash gate: events staged as TWO time-ordered halves
+    * ([[stageSlices]]) and replayed as separate micro-batches, so
+    * per-user state must carry across batches for the final totals to
+    * be right. Update mode appends every emission (live updates AND
+    * timeout finals) to the parquet sink; the declared result reduces to each user's
     * FINAL state row via max(n_events) — the counter is monotone, so
     * the max IS the final. Only the order-independent state fields
     * (count, last-seen ms) are declared; the running double sum is
     * fold-order-dependent and stays out of the hash gate (the spec
-    * checks it separately). The bounds lookup is a 1-row staging-side
-    * aggregate (the drop writes are driver actions anyway); the
-    * streamed operator itself never touches the driver. */
+    * checks it separately). The streamed operator itself never
+    * touches the driver. */
   def streamUserTotals(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
     val ss = streamingSession(spark)
-    val ev = graft.Tables.events(ss, d)
-    val bounds = ev.agg(
-      min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).head()
-    val cut = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) / 2
-    val drop = java.nio.file.Files.createTempDirectory(s"graft-stream-totals-$n")
-    ev.filter(unix_millis(col("ts")) < cut)
-      .coalesce(1).write.mode("append").parquet(drop.toString)
-    Thread.sleep(5) // distinct mod-times: deterministic batch order
-    ev.filter(unix_millis(col("ts")) >= cut)
-      .coalesce(1).write.mode("append").parquet(drop.toString)
+    val drop = stageSlices(ss, d, "graft-stream-totals-", 2)
     try {
       val totals = userRunningTotals(ss,
-        readEvents(ss, drop.toString, maxFilesPerTrigger = Some(1)))
-      val raw = runToParquetSink(ss, totals.toDF(),
+        readEvents(ss, drop, maxFilesPerTrigger = Some(1)))
+      val raw = runToParquetSink(spark, totals.toDF(),
         "stream_user_totals", OutputMode.Update())
       raw.groupBy(col("user_id"))
         .agg(max(struct(col("n_events"), col("last_ms"))).as("p"))
         .select(col("user_id"), col("p.n_events").as("n_events"),
           col("p.last_ms").as("last_ms"))
         .orderBy("user_id")
-    } finally deleteRecursively(drop.toString)
+    } finally deleteRecursively(drop)
   }
 
   def streamUserTotalsSql: String =
@@ -674,35 +649,24 @@ object EventStreams {
       .toDF("user_id", "n_updates", "last_type", "last_vm")
   }
 
-  /** [[cdcApply]] under the hash gate: the same two-half time-ordered
-    * staging as [[streamUserTotals]] (state must carry across
-    * batches), Update-mode parquet sink, final state row selected by
-    * the monotone update counter. */
+  /** [[cdcApply]] under the hash gate: the two-half time-ordered
+    * [[stageSlices]] staging (state must carry across batches),
+    * Update-mode parquet sink, final state row selected by the
+    * monotone update counter. */
   def streamCdc(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
     val ss = streamingSession(spark)
-    val ev = graft.Tables.events(ss, d)
-    val bounds = ev.agg(
-      min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).head()
-    val cut = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) / 2
-    val drop = java.nio.file.Files.createTempDirectory(s"graft-stream-cdc-$n")
-    ev.filter(unix_millis(col("ts")) < cut)
-      .coalesce(1).write.mode("append").parquet(drop.toString)
-    Thread.sleep(5) // distinct mod-times: deterministic batch order
-    ev.filter(unix_millis(col("ts")) >= cut)
-      .coalesce(1).write.mode("append").parquet(drop.toString)
+    val drop = stageSlices(ss, d, "graft-stream-cdc-", 2)
     try {
       val applied = cdcApply(ss,
-        readEvents(ss, drop.toString, maxFilesPerTrigger = Some(1)))
-      val raw = runToParquetSink(ss, applied.toDF(),
+        readEvents(ss, drop, maxFilesPerTrigger = Some(1)))
+      val raw = runToParquetSink(spark, applied.toDF(),
         "stream_cdc", OutputMode.Update())
       raw.groupBy(col("user_id"))
         .agg(max(struct(col("n_updates"), col("last_type"), col("last_vm"))).as("p"))
         .select(col("user_id"), col("p.n_updates").as("n_updates"),
           col("p.last_type").as("last_type"), col("p.last_vm").as("last_vm"))
         .orderBy("user_id")
-    } finally deleteRecursively(drop.toString)
+    } finally deleteRecursively(drop)
   }
 
   def streamCdcSql: String =
@@ -722,8 +686,7 @@ object EventStreams {
     * stream-stream join viable on unbounded input). Inner join ⇒
     * Append mode; parquet sink. */
   def streamAttribution(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
-    val staged = stageEventsDrop(d, "stream-attr", n)
+    val staged = stageEventsDrop(d, "graft-stream-attr-")
     val ss = streamingSession(spark)
     // An INNER stream-stream join emits every match eagerly in the
     // data batch that completes it; the trailing no-data micro-batch
@@ -736,7 +699,7 @@ object EventStreams {
     // timeout finals), and a continuous production stream keeps them
     // for state-size bounding.
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try runToParquetSink(ss, attribution(readEvents(ss, staged)),
+    try runToParquetSink(spark, attribution(readEvents(ss, staged)),
       "stream_attribution", OutputMode.Append())
       .orderBy("user_id", "click_id", "purchase_id")
     finally deleteRecursively(staged)
@@ -783,13 +746,12 @@ object EventStreams {
     * boundary-window click is excluded from both sides no matter
     * which way the engine decided it. */
   def streamAttrOuter(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
-    val staged = stageEventsDrop(d, "stream-attr-outer", n)
+    val staged = stageEventsDrop(d, "graft-stream-attr-outer-")
     val ss = streamingSession(spark)
     // no-data micro-batches stay ON: the outer join's null rows emit
     // from exactly those batches (see streamAttribution's skip note)
     try {
-      val raw = runToParquetSink(ss, attributionOuter(readEvents(ss, staged)),
+      val raw = runToParquetSink(spark, attributionOuter(readEvents(ss, staged)),
         "stream_attr_outer", OutputMode.Append())
       val us = unix_micros(col("ts"))
       val bounds = graft.Tables.events(ss, d).agg(least(
@@ -876,28 +838,25 @@ object EventStreams {
     * queries go through [[runToParquetSink]]. */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String,
       mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val q: StreamingQuery = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamMeter.addQuery(q)
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(name))
     spark.table(name)
   }
 
-  // last parquet sink dir per query tag: repeated calls (bench
-  // warmup + two passes) must not accumulate result dirs in /tmp, so
-  // each call reaps the predecessor AFTER its own sink is written
-  private val lastSink = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Run a stream over static input to completion (AvailableNow) and
+    * credit its trigger time to [[StreamMeter]]. */
+  private def drain(writer: DataStreamWriter[Row]): Unit = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    StreamMeter.addQuery(q)
+  }
 
-  // the FINAL sink per tag survives each call (its DataFrame reads it
-  // lazily) — reap it at JVM exit so driver rounds don't pile sinks
-  // up in /tmp
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      lastSink.values().forEach(d => deleteRecursively(d))))
+  /** A fresh temp dir for a declared run's result files, owned in
+    * [[SharedBuild]] by `owner`, the session the query was called
+    * with: it stays readable until [[SharedBuild.releaseAll]] or JVM
+    * exit, however often the same query runs again. */
+  private def resultDir(owner: SparkSession, prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    SharedBuild.staged(owner, "stream-result", dir)(dir)(deleteRecursively)
   }
 
   /** Declared query `stream_upsert`: per-micro-batch MERGE of a
@@ -912,24 +871,19 @@ object EventStreams {
     * footprint and restart-durability for free. The merge is
     * associative + commutative (count-sum, DECIMAL value-sum, ts-max),
     * making the result independent of batch boundaries — and the run
-    * really is multi-batch (staging splits events into 4 files,
+    * really is multi-batch (4 [[stageSlices]] drops,
     * maxFilesPerTrigger=1; asserted, since a silent single-batch run
     * would stop exercising the merge). Everything stays distributed:
-    * no result row crosses the driver. */
+    * no result row crosses the driver. The store is a [[resultDir]]. */
   def streamUpsert(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
-    val drop = java.nio.file.Files
-      .createTempDirectory(s"graft-stream-upsert-$n").toString
     val ss = streamingSession(spark)
-    graft.Tables.events(ss, d).repartition(4, col("event_id"))
-      .write.mode("overwrite").parquet(drop)
-    val storeRoot = java.nio.file.Files
-      .createTempDirectory(s"graft-upsert-store-$n").toString
+    val drop = stageSlices(ss, d, "graft-stream-upsert-", 4)
+    val storeRoot = resultDir(spark, "graft-upsert-store-")
     def storeDir(v: Int) = s"$storeRoot/v$v"
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q: StreamingQuery = readEvents(ss, drop, maxFilesPerTrigger = Some(1))
+    val version = new AtomicInteger(0)
+    try drain(readEvents(ss, drop, maxFilesPerTrigger = Some(1))
       .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val delta = batch.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast("decimal(18,6)")).as("sum_value"),
@@ -946,16 +900,10 @@ object EventStreams {
         val prev = version.getAndIncrement()
         if (prev >= 1) deleteRecursively(storeDir(prev)) // superseded version
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamMeter.addQuery(q)
-    deleteRecursively(drop)
+      })
+    finally deleteRecursively(drop)
     require(version.get() >= 2,
       s"upsert loop expected multiple micro-batches, saw ${version.get()}")
-    val prevRoot = lastSink.put("stream-upsert", storeRoot)
-    if (prevRoot != null && prevRoot != storeRoot) deleteRecursively(prevRoot)
     spark.read.parquet(storeDir(version.get()))
       .select(col("event_type"), col("n_events"),
         col("sum_value").cast("double").as("total_value"), col("last_ts"))
@@ -984,24 +932,19 @@ object EventStreams {
     * must be rejected — and the declared result is the final
     * snapshot's fingerprint, which the whole-table oracle only matches
     * if no batch was double-counted and none was lost. Multi-batch is
-    * asserted (4 drops, maxFilesPerTrigger=1), so the log really
-    * accumulates one commit per batch. */
+    * asserted (4 [[stageSlices]] drops, maxFilesPerTrigger=1), so the
+    * log really accumulates one commit per batch. The table is a
+    * [[resultDir]]. */
   def streamTxlogSink(spark: SparkSession, d: String): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
     val ss = streamingSession(spark)
-    val drop = java.nio.file.Files
-      .createTempDirectory(s"graft-stream-txsink-$n").toString
-    graft.Tables.events(ss, d).repartition(4, col("event_id"))
-      .write.mode("overwrite").parquet(drop)
-    val table = java.nio.file.Files
-      .createTempDirectory(s"graft-txsink-table-$n").toString
-    val logDir = java.nio.file.Files.createDirectory(
-      java.nio.file.Paths.get(table, "_txlog"))
-    val nCommits = new java.util.concurrent.atomic.AtomicInteger(0)
-    val retried = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val q: StreamingQuery = readEvents(ss, drop, maxFilesPerTrigger = Some(1))
+    val drop = stageSlices(ss, d, "graft-stream-txsink-", 4)
+    val table = resultDir(spark, "graft-txsink-table-")
+    val logDir = Files.createDirectory(java.nio.file.Paths.get(table, "_txlog"))
+    val nCommits = new AtomicInteger(0)
+    val retried = new AtomicBoolean(false)
+    try drain(readEvents(ss, drop, maxFilesPerTrigger = Some(1))
       .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         def attempt(tryNo: Int): Boolean = {
           val tag = s"b$batchId-t$tryNo"
           batch.write.mode("overwrite").parquet(s"$table/data-$tag")
@@ -1020,17 +963,11 @@ object EventStreams {
         }
         nCommits.incrementAndGet()
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamMeter.addQuery(q)
-    deleteRecursively(drop)
+      })
+    finally deleteRecursively(drop)
     require(nCommits.get() >= 2,
       s"txlog sink expected multiple micro-batches, saw ${nCommits.get()}")
     require(retried.get(), "the injected batch-1 replay never ran")
-    val prevRoot = lastSink.put("stream-txsink", table)
-    if (prevRoot != null && prevRoot != table) deleteRecursively(prevRoot)
     graft.sources.TxLogSource.readSnapshot(spark, table, nCommits.get() - 1L)
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("event_id")).as("n_distinct"),
@@ -1054,32 +991,30 @@ object EventStreams {
     * returned DataFrame reads the sink back lazily. This is the
     * scale path for unbounded-cardinality streaming results: state
     * lives partitioned in the executors' state stores, results live
-    * in the sink's storage, and driver memory holds neither. */
+    * in the sink's storage, and driver memory holds neither.
+    *
+    * The sink is a [[resultDir]] owned by `spark`, the session the
+    * declared query was called with: it outlives later runs of the
+    * same query and goes at [[SharedBuild.releaseAll]] or JVM exit.
+    * The read-back runs on `df`'s own session (a declared run's
+    * per-run clone), so its plans keep that session's conf. */
   def runToParquetSink(spark: SparkSession, df: DataFrame, tag: String,
       mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val n = sinkSeq.incrementAndGet()
-    val sink = java.nio.file.Files
-      .createTempDirectory(s"graft-sink-$tag-$n").toString
+    val sink = resultDir(spark, s"graft-sink-$tag-")
     // Complete mode hands every batch the FULL result → the last
     // overwrite wins; Append/Update hand only the batch's delta → each
     // batch appends (an empty no-data batch must not wipe the sink)
     val saveMode =
       if (mode == OutputMode.Complete()) "overwrite" else "append"
-    val q: StreamingQuery = df.writeStream
+    drain(df.writeStream
       .outputMode(mode)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         batch.write.mode(saveMode).parquet(sink)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamMeter.addQuery(q)
-    val prev = lastSink.put(tag, sink)
-    if (prev != null && prev != sink) deleteRecursively(prev)
+      })
     // explicit schema: an input that yields zero output batches (e.g.
     // an empty source in Append mode) leaves the sink with no parquet
     // files, and schema inference would throw — an empty typed result
     // is the correct answer there
-    spark.read.schema(df.schema).parquet(sink)
+    df.sparkSession.read.schema(df.schema).parquet(sink)
   }
 }

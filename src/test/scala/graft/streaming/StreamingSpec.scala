@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
-import graft.ops.EventOps
+import graft.ops.{EventOps, SharedBuild}
 
 /** Batch/streaming unification: the streaming pipelines must produce
   * the same results as their batch counterparts when fed the whole
@@ -232,13 +232,35 @@ class StreamingSpec extends AnyFunSuite {
       "flatMapGroupsWithState" -> EventStreams.streamSessionizeFlat,
       "session_window" -> EventStreams.streamSessions)
     stateful.foreach { case (op, run) =>
-      // materialized first: the next run of the same query deletes the
-      // parquet sink this one reads from
-      val got = run(narrow, sf).localCheckpoint()
+      val got = run(narrow, sf)
       val want = run(spark, sf)
       assert(want.count() > 0, op)
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, op)
     }
+  }
+
+  test("a declared stream result stays readable after its query runs again, until releaseAll") {
+    val runs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+      "stream_dedup" -> EventStreams.streamDedup,
+      "stream_upsert" -> EventStreams.streamUpsert,
+      "stream_txlog_sink" -> EventStreams.streamTxlogSink)
+    val results = runs.flatMap { case (name, run) =>
+      val first = run(spark, sf)
+      val second = run(spark, sf)
+      // the first result is read only now, after the second run
+      assert(first.collect().toSeq === second.collect().toSeq, name)
+      Seq(first, second)
+    }
+    val live = SharedBuild.live[String]("stream-result")
+    val dirs = results.map { df =>
+      val files = df.inputFiles.map(f => Paths.get(new java.net.URI(f)))
+      val owners = live.filter(d => files.nonEmpty && files.forall(_.startsWith(d)))
+      assert(owners.size === 1, s"${df.inputFiles.toSeq} in one live stream-result dir")
+      owners.head
+    }
+    assert(dirs.distinct.size === results.size, "each run owns its own dir")
+    SharedBuild.releaseAll()
+    dirs.foreach(d => assert(!Files.exists(Paths.get(d)), s"$d survived releaseAll"))
   }
 
   test("parquet-sink streaming sessions equal the memory-sink result (scale-safe path)") {

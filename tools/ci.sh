@@ -14,6 +14,15 @@ if grep -rl --include='*.scala' 'SparkSession.builder' src/ | grep -v '/GraftSes
   exit 1
 fi
 
+echo "== one reaper"
+# Files that outlive a query (staged sources, stream results) belong to
+# graft.ops.SharedBuild, whose one JVM-exit hook reaps them; a second
+# hook is a second owner that can delete what a live DataFrame reads.
+if grep -rl --include='*.scala' 'addShutdownHook' src/ | grep -v '/SharedBuild\.scala$'; then
+  echo "FAIL: addShutdownHook outside SharedBuild.scala (files above)"
+  exit 1
+fi
+
 echo "== src/main code lines (non-blank, not starting with //, * or /**)"
 # print-only: the size figure a simplification is judged by
 find src/main -type f -print0 | xargs -0 grep -cvE '^[[:space:]]*($|//|\*|/\*\*)' |
